@@ -510,15 +510,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .config("spark.sql.cache.serializer",
-        "graft.functions.GraftCachedBatchSerializer")
-      .config("spark.sql.extensions", "graft.plans.GraftCacheScanExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.builder(cpus)
       // FAIR so the throughput section's concurrent clients share the
       // executor pool instead of FIFO-queueing whole jobs
       .config("spark.scheduler.mode", "FAIR")

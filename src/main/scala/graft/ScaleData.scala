@@ -53,16 +53,8 @@ object ScaleData {
   private val CopyOnly = Seq("region", "nation")
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .config("spark.sql.cache.serializer",
-        "graft.functions.GraftCachedBatchSerializer")
-      .config("spark.sql.extensions", "graft.plans.GraftCacheScanExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     run(spark, args(0), args(1), args(2).toInt)
     spark.stop()

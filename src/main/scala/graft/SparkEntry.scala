@@ -37,7 +37,18 @@ object SparkEntry {
       }
 
   /** DuckDB oracle SQL per query key (omitted ⇒ rows-only check). */
-  def oracleSql: Map[String, String] =
-    VectorQueries.oracles ++ AnalyticsQueries.oracles ++ TextQueries.oracles ++
-      DedupQueries.oracles ++ IndexQueries.oracles ++ PipelineQueries.oracles
+  def oracleSql: Map[String, String] = oracleSql(_ => true)
+
+  /** [[oracleSql]] restricted to the keys `keep` selects. The ANN
+    * oracles (IndexQueries.AnnOracleKeys) are generated from persisted
+    * indexes, so they are computed only when a selected key is one of
+    * them: a subset without ANN keys builds no IVF or PQ store. */
+  def oracleSql(keep: String => Boolean): Map[String, String] = {
+    val index =
+      if (IndexQueries.AnnOracleKeys.exists(keep)) IndexQueries.oracles
+      else IndexQueries.staticOracles
+    (VectorQueries.oracles ++ AnalyticsQueries.oracles ++ TextQueries.oracles ++
+      DedupQueries.oracles ++ index ++ PipelineQueries.oracles)
+      .filter { case (k, _) => keep(k) }
+  }
 }

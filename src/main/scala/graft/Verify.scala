@@ -34,18 +34,9 @@ object Verify {
     // (a timed-out Verify leaves nothing to compare). Half the cores,
     // capped at 16, floored at 4 — leaves headroom for the caller's
     // own work; the env override still wins.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(4, math.min(16,
-        Runtime.getRuntime.availableProcessors / 2)).toString)
-    val spark = SparkSession.builder()
-      .config("spark.sql.cache.serializer",
-        "graft.functions.GraftCachedBatchSerializer")
-      .config("spark.sql.extensions", "graft.plans.GraftCacheScanExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(
+      math.max(4, math.min(16, Runtime.getRuntime.availableProcessors / 2)))
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // pin the data dir for oracle generators that read persisted index
     // artifacts (IndexQueries.annOracles) — the queries below build them
@@ -70,8 +61,7 @@ object Verify {
     // Dump oracle_sql.json FIRST: a truncated run (driver timeout,
     // OOM-kill) then still leaves a gradeable partial artifact — the
     // driver can compare every query dir that did land against its SQL.
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
+    val json = SparkEntry.oracleSql(k => only.forall(_.contains(k)))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val wall0 = System.nanoTime()

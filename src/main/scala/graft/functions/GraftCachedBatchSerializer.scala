@@ -36,8 +36,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * copied bit-for-bit, null rows and null elements are tracked), so
   * every cached plan computes identical results — CacheSerializerSpec
   * pins round-trips and the full oracle gate re-ran green over it.
-  * Registered via the static conf `spark.sql.cache.serializer` on
-  * every session builder. */
+  * Registered via the static conf `spark.sql.cache.serializer` by
+  * [[graft.GraftSession]]. */
 class GraftCachedBatchSerializer extends CachedBatchSerializer {
   import GraftCachedBatchSerializer._
 
@@ -100,54 +100,20 @@ class GraftCachedBatchSerializer extends CachedBatchSerializer {
       input: RDD[CachedBatch], cacheAttributes: Seq[Attribute],
       selectedAttributes: Seq[Attribute], conf: SQLConf)
       : RDD[ColumnarBatch] = {
-    if (eligible(cacheAttributes.map(_.dataType))) {
-      val ordinals = selectionOrdinals(cacheAttributes, selectedAttributes)
-      val types = selectedAttributes.map(_.dataType).toArray
-      input.map { cb =>
-        val b = cb.asInstanceOf[GraftCachedBatch]
-        val vecs = new Array[ColumnVector](ordinals.length)
-        var i = 0
-        while (i < ordinals.length) {
-          vecs(i) = wrap(b.cols(ordinals(i)), types(i))
-          i += 1
-        }
-        new ColumnarBatch(vecs, b.numRows)
+    if (!eligible(cacheAttributes.map(_.dataType)))
+      return default.convertCachedBatchToColumnarBatch(
+        input, cacheAttributes, selectedAttributes, conf)
+    val ordinals = selectionOrdinals(cacheAttributes, selectedAttributes)
+    val types = selectedAttributes.map(_.dataType).toArray
+    input.map { cb =>
+      val b = cb.asInstanceOf[GraftCachedBatch]
+      val vecs = new Array[ColumnVector](ordinals.length)
+      var i = 0
+      while (i < ordinals.length) {
+        vecs(i) = wrap(b.cols(ordinals(i)), types(i))
+        i += 1
       }
-    } else {
-      // Cache schema holds a type we don't store (delegated batches)
-      // but the SELECTION is one we promised columnar output for:
-      // rebuild columnar batches from the default row path. Correctness
-      // fallback — the per-row fill only runs for this mixed shape.
-      val types = selectedAttributes.map(_.dataType).toArray
-      val batchRows = conf.columnBatchSize
-      default.convertCachedBatchToInternalRow(
-          input, cacheAttributes, selectedAttributes, conf)
-        .mapPartitions { it =>
-          new Iterator[ColumnarBatch] {
-            override def hasNext: Boolean = it.hasNext
-            override def next(): ColumnarBatch = {
-              val builders = types.map(newBuilder)
-              var n = 0
-              while (n < batchRows && it.hasNext) {
-                val row = it.next()
-                var c = 0
-                while (c < builders.length) {
-                  builders(c).append(row, c)
-                  c += 1
-                }
-                n += 1
-              }
-              val cols = builders.map(_.result(n))
-              val vecs = new Array[ColumnVector](cols.length)
-              var i = 0
-              while (i < cols.length) {
-                vecs(i) = wrap(cols(i), types(i))
-                i += 1
-              }
-              new ColumnarBatch(vecs, n)
-            }
-          }
-        }
+      new ColumnarBatch(vecs, b.numRows)
     }
   }
 

@@ -838,10 +838,13 @@ case class RleRuns(child: Expression)
     StructField("bkt", LongType, nullable = false),
     StructField("m", LongType, nullable = false))), containsNull = false)
 
+  // null elements are rejected by type: getLong would read one as 0
+  // and fold it into bucket 0's run. Both call sites' sorted bucket
+  // arrays are typed containsNull = false.
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
+    case ArrayType(LongType, false) => TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
-      s"rle_runs requires array<bigint>, got ${other.simpleString}")
+      s"rle_runs requires ArrayType(LongType,false), got $other")
   }
 
   override def nullSafeEval(a: Any): Any = {

@@ -63,7 +63,7 @@ object MmrSelect {
     // round — so the k greedy rounds run as driver arithmetic (one
     // collect + one result job) instead of k (join + window +
     // checkpoint) Spark rounds whose scheduling dominated the entry's
-    // sf0.1 wall (JobProbe: 38 jobs, more wall between jobs than in
+    // sf0.1 wall (per-job walls: 38 jobs, more wall between jobs than in
     // them). Corpus-scaled query sets keep the distributed rounds: per
     // round the frame stays |queries|×nCandidates, queries scale out.
     // The size probe is limit(max+1).collect() — when the batch is

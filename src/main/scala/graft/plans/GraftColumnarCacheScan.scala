@@ -42,7 +42,7 @@ case class GraftColumnarCacheScanExec(child: SparkPlan) extends UnaryExecNode {
 }
 
 /** Session extension registering ONLY the cache-scan columnar rule —
-  * wired via `spark.sql.extensions` on every session builder next to
+  * wired via `spark.sql.extensions` by [[graft.GraftSession]] next to
   * the `spark.sql.cache.serializer` static conf. Restricted to scans
   * whose cache is (a) built by the graft serializer and (b) an eligible
   * flat-float schema, so the default serializer's paths (and any

@@ -85,11 +85,10 @@ object AnalyticsQueries {
       .sortWithinPartitions("user_id", "hr"))
   }
 
-  /** q_resample_ffill's stage legs, factored so BenchOne's
-    * `resample_ffill_split` can attribute the sf10 cost to the hourly
-    * aggregation vs the anchor window vs the gap-fill explode (the
-    * dedup_cluster_split precedent) — the composition above IS the
-    * entry, the legs are never an alternate semantics.
+  /** q_resample_ffill's stage legs: the hourly aggregation, the
+    * anchor window and the gap-fill explode, factored so each can be
+    * timed alone — the composition above IS the entry, the legs are
+    * never an alternate semantics.
     *
     * The r11 shape generated the full hourly spine from a per-user
     * (min, max) aggregate, LEFT-JOINED the hourly values onto it, and

@@ -1132,9 +1132,10 @@ object IndexQueries {
     * sfDir via `graft.oracle.sfDir`; anywhere that context is missing
     * these entries simply stay rows-only (the pre-round-3 behavior). */
   /** The oracle keys whose SQL is generated FROM the persisted index —
-    * computing them forces an index build. Single-query tooling
-    * (VerifyOne) consults this to avoid paying a full IVF+PQ fit just
-    * to materialize oracle strings for unrelated queries. */
+    * computing them forces an index build. A subset dump
+    * (`SparkEntry.oracleSql(keep)`, Verify's GRAFT_VERIFY_ONLY) consults
+    * this to avoid paying a full IVF+PQ fit just to materialize oracle
+    * strings for unrelated queries. */
   val AnnOracleKeys: Set[String] =
     Set("v_ivf_build", "v_ivf_search", "v_ivf_filtered", "v_pq_search",
       "v_pq_rerank", "v_opq_search", "v_ivfpq_search", "d_semantic_dedup",
@@ -1333,9 +1334,9 @@ object IndexQueries {
         graft.operators.IndexOracle
           .mipsIvfOracle(mipsCent, m2, K, nprobe = 4, NumQueries)
       })
-    // AnnOracleKeys is VerifyOne's routing table for exactly this map:
-    // a key added here but not there would silently route to the static
-    // maps and emit no oracle
+    // AnnOracleKeys is SparkEntry.oracleSql(keep)'s routing table for
+    // exactly this map: a key added here but not there would silently
+    // route to the static maps and emit no oracle
     require(built.keySet == AnnOracleKeys,
       s"AnnOracleKeys out of sync: ${built.keySet.diff(AnnOracleKeys)} / " +
         s"${AnnOracleKeys.diff(built.keySet)}")

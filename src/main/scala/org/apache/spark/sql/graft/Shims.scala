@@ -40,6 +40,11 @@ object Shims {
     spark.sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "scala_udf")
 
+  /** Block until every event posted so far has reached the session's
+    * listeners (the listener bus is `private[spark]`). */
+  def drainListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** Apply an extensions object's injected functions to a LIVE session —
     * `withExtensions` only takes effect for newly built sessions, so this
     * is the path for attaching to an existing one (and for testing the

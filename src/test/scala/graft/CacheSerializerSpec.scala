@@ -5,11 +5,12 @@ import org.apache.spark.sql.functions._
 
 /** GraftCachedBatchSerializer round-trip laws: caching must never change
   * what a plan computes — for the flat-float fast path (vector frames),
-  * the delegated default path (string-bearing frames), and the mixed
-  * shape (ineligible cache schema, eligible selection) that exercises
-  * the columnar rebuild fallback. SparkSpec's session registers the
-  * serializer, so the whole suite (and the oracle gate) already runs
-  * over it; these tests pin the tricky layouts directly. */
+  * the delegated default path (string-bearing frames, and atomic
+  * frames the default reads back as columnar batches), and the mixed
+  * shape (ineligible cache schema, eligible selection). SparkSpec's
+  * session registers the serializer, so the whole suite (and the
+  * oracle gate) already runs over it; these tests pin the tricky
+  * layouts directly. */
 class CacheSerializerSpec extends SparkSpec {
 
   /** Bit-level normalizer so NaN == NaN and -0.0 != 0.0 in compares. */
@@ -78,6 +79,8 @@ class CacheSerializerSpec extends SparkSpec {
     assertCacheTransparent(docs)
   }
 
+  // The string column makes supportsColumnarOutput false for this cache
+  // schema, so the scan reads it back through the delegated row path.
   test("mixed shape: ineligible cache schema, eligible selection (rebuild fallback)") {
     import spark.implicits._
     val df = spark.range(500)
@@ -90,6 +93,31 @@ class CacheSerializerSpec extends SparkSpec {
       val plain = df.select($"vec", $"id").collect().map(_.toSeq).toSeq
       assert(sel === plain)
     } finally cached.unpersist(true)
+  }
+
+  test("delegation: byte/short cache batches read back as columnar batches") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.internal.SQLConf
+    import org.apache.spark.sql.types._
+    val ser = new graft.functions.GraftCachedBatchSerializer
+    val attrs = Seq(AttributeReference("b", ByteType)(),
+      AttributeReference("s", ShortType)(), AttributeReference("i", IntegerType)())
+    // ineligible for the flat format, but the default serializer
+    // promises columnar output for these atomic types
+    assert(ser.supportsColumnarOutput(
+      StructType(attrs.map(a => StructField(a.name, a.dataType)))))
+    val rows = (0 until 300).map(i => (i.toByte, (i * 7).toShort, i * 1000))
+    val batches = ser.convertInternalRowToCachedBatch(
+      spark.sparkContext.parallelize(
+        rows.map { case (b, s, i) => InternalRow(b, s, i) }, 2),
+      attrs, org.apache.spark.storage.StorageLevel.MEMORY_ONLY, SQLConf.get)
+    val back = ser.convertCachedBatchToColumnarBatch(
+        batches, attrs, attrs.reverse, SQLConf.get)
+      .flatMap { cb => (0 until cb.numRows).map(r => (cb.column(2).getByte(r),
+        cb.column(1).getShort(r), cb.column(0).getInt(r))) }
+      .collect().toSeq
+    assert(back === rows)
   }
 
   test("fast path: filters over the cached frame are applied downstream") {

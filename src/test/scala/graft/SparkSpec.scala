@@ -6,16 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for all specs. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .config("spark.sql.cache.serializer",
-        "graft.functions.GraftCachedBatchSerializer")
-      .config("spark.sql.extensions", "graft.plans.GraftCacheScanExtensions")
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.builder(4).appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     SparkEntry.tune(s)
   }

@@ -37,6 +37,8 @@ class StreamClassifySpec extends SparkSpec {
 
     val rows = docs.as[DocRow].collect()
     val stream = MemoryStream[DocRow]
+    stream.addData(rows.take(rows.length / 2): _*)
+    stream.addData(rows.drop(rows.length / 2): _*)
     var served = Map.empty[Long, Long]
     val q = stream.toDS().toDF()
       .writeStream
@@ -47,8 +49,6 @@ class StreamClassifySpec extends SparkSpec {
       }
       .trigger(Trigger.AvailableNow())
       .start()
-    stream.addData(rows.take(rows.length / 2): _*)
-    stream.addData(rows.drop(rows.length / 2): _*)
     q.awaitTermination(120000)
 
     assert(served === batch,

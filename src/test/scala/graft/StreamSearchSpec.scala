@@ -31,6 +31,8 @@ class StreamSearchSpec extends SparkSpec {
       .as[QReq].collect()
 
     val stream = MemoryStream[QReq]
+    stream.addData(reqs.take(3): _*)
+    stream.addData(reqs.drop(3): _*)
     var served = Map.empty[Long, Seq[Long]]
     val q = stream.toDS().toDF()
       .writeStream
@@ -41,8 +43,6 @@ class StreamSearchSpec extends SparkSpec {
       }
       .trigger(Trigger.AvailableNow())
       .start()
-    stream.addData(reqs.take(3): _*)
-    stream.addData(reqs.drop(3): _*)
     q.awaitTermination(120000)
 
     val batchAnswers = knn(reqs.toSeq.toDS().toDF()).collect()
