@@ -8,8 +8,9 @@ import java.nio.file.{Files, Paths}
   * under the same tail-capture contract Bench's headline satisfies
   * (≤1500 bytes, nothing printed after it; see build.sbt's
   * outputStrategy/showSuccess notes). Full per-query detail goes to
-  * <outDir>/correctness_out.json and is mirrored to ./correctness_out
-  * .json beside bench_out.json. Four rounds of empty driver artifacts
+  * <outDir>/correctness_out.json; a run over every entry (no
+  * GRAFT_VERIFY_ONLY subset) also mirrors it to ./correctness_out.json
+  * beside bench_out.json. Four rounds of empty driver artifacts
   * (CORRECTNESS_r09–r12) rode on a dump-only Verify whose results some
   * downstream compare never consumed; after this, the gate result
   * exists the moment Verify exits, in both file and stdout form. */
@@ -21,6 +22,17 @@ object Verify {
     * from a silent harness mismatch. */
   def overCap(walls: Seq[(String, Double)], capSec: Double): Seq[String] =
     walls.collect { case (n, w) if w > capSec => n }.sorted
+
+  /** The `GRAFT_VERIFY_ONLY` selection (comma-separated entry names):
+    * the named entries, or None for every entry. */
+  def selection(env: Option[String]): Option[Set[String]] =
+    env.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+      .filter(_.nonEmpty)
+
+  /** Whether a run's detail is mirrored over ./correctness_out.json,
+    * the tracked full-gate record: only a run over every entry is — a
+    * subset's record would replace it with a partial one. */
+  def mirrorsDetail(only: Option[Set[String]]): Boolean = only.isEmpty
 
   def main(args: Array[String]): Unit = {
     // Lenient argv: the documented contract is (sfDir, outDir), but an
@@ -43,9 +55,7 @@ object Verify {
     sys.props("graft.oracle.sfDir") = sfDir
     new java.io.File(outDir).mkdirs()
     // local-iteration filter (comma-separated names); driver never sets it
-    val only = sys.env.get("GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty)
+    val only = selection(sys.env.get("GRAFT_VERIFY_ONLY"))
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -139,9 +149,10 @@ object Verify {
     // (the same interpreter tools/close_gate.py uses); the compare is
     // embedded so a fresh checkout needs no repo-relative script path.
     val headline = runCompare(sfDir, outDir, wallTotal)
-    // mirror the full detail beside bench_out.json for the round commit
+    // mirror a full run's detail beside bench_out.json for the round
+    // commit; a subset run leaves the tracked record alone
     val det = Paths.get(s"$outDir/correctness_out.json")
-    if (Files.exists(det)) {
+    if (mirrorsDetail(only) && Files.exists(det)) {
       try Files.copy(det, Paths.get("correctness_out.json"),
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       catch { case _: Throwable => () }

@@ -96,10 +96,21 @@ object DedupQueries {
       .agg(min($"rep").as("keeper"))
     // Materialize the (small, linear) output eagerly — callers get a
     // self-contained frame (the jaccardPairsRaw discipline).
-    dm.join(verified, Seq("doc_id"), "left")
+    val out = dm.join(verified, Seq("doc_id"), "left")
       .select($"doc_id", coalesce($"keeper", $"doc_id").as("keeper_id"))
       .localCheckpoint(true)
+    // the output no longer reads dm or buckets: free their blocks now
+    // rather than at GC (Dataset.unpersist does not reach a local
+    // checkpoint's RDD)
+    Seq(dm, buckets).foreach(checkpointRdd(_).unpersist(blocking = false))
+    out
   }
+
+  /** The RDD a `localCheckpoint` frame reads its stored blocks from. */
+  private[graft] def checkpointRdd(df: DataFrame): org.apache.spark.rdd.RDD[_] =
+    df.queryExecution.logical.collectFirst {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    }.getOrElse(throw new IllegalArgumentException("not a checkpointed frame"))
 
   /** The UNORDERED mixture sample — the entire production plan of
     * d_mixture_sample before its output ordering, factored out so

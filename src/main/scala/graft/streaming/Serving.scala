@@ -11,46 +11,66 @@ import org.apache.spark.sql.functions._
 import graft.operators.IvfIndex
 
 /** Micro-batching serving front ends — the Spark-shaped answer to the
-  * reference's multi-client server (/root/reference/proto/
-  * vector_search.proto: Search/Insert RPCs; client_bench.cpp drives
-  * them concurrently). A per-request Spark job pays the scheduler's
-  * fixed costs — plan, job submit, stage barriers — which floor
-  * per-request latency near ~2 s however small the data (measured r9:
-  * 8.7 QPS at 8 clients on sf0.1, flat across two data decades — a
-  * scheduler artifact, not a data cost). The serving fix is GROUP
-  * COMMIT in both directions:
+  * reference's multi-client server (proto/vector_search.proto:
+  * Search/Insert RPCs; client_bench.cpp drives them concurrently).
+  * Requests enqueue, and a dispatcher drains whatever is pending
+  * (≤ maxBatch) as one batch:
   *
-  *  - [[SearchServer]]: requests enqueue; a dispatcher drains whatever
-  *    is pending (≤ maxBatch) and runs ONE pruned-search job for the
-  *    whole batch. The pruned search is per-query independent (every
-  *    stage keys by query_id), so the batched job is answer-identical
-  *    to per-request jobs — ServingSpec proves equality against
-  *    searchPruned — while the fixed job cost amortizes across the
-  *    batch: QPS scales with offered concurrency. Probe resolution
-  *    runs DRIVER-SIDE against the collected centroids (bounded index
-  *    metadata, the same rows the reference server holds in RAM),
-  *    saving the two per-request Spark jobs the DataFrame form pays.
+  *  - [[SearchServer]] answers a batch on one of two routes, chosen per
+  *    batch. Probes are resolved DRIVER-SIDE against the centroids
+  *    collected at construction (bounded index metadata, the same rows
+  *    the reference server holds in RAM) on both.
+  *     - RESIDENT (the default for bounded indexes): the server keeps an
+  *       immutable snapshot of the index directory ([[ResidentIvf]]:
+  *       the assignments rows per cluster, the delta log folded to the
+  *       latest seq per vec_id, and the file table both were read
+  *       from). At the start of every batch, under one lock, it lists
+  *       both directories (skipping `_`/`.` names as Spark's file index
+  *       does), reads only the new files with parquet-hadoop's record
+  *       reader, and rebuilds the snapshot when a file it was built
+  *       from vanished or changed (compaction). The batch is then
+  *       answered from RAM — no Spark job, so no plan, scheduler or
+  *       stage cost per request; the reference's engine.h:search_knn
+  *       serves from memory the same way. Ingest acknowledges only
+  *       after its appends land, so read-your-writes holds.
+  *     - JOB: one [[IvfIndex.searchPrunedFrames]] job for the whole
+  *       batch, taken when the listed bytes exceed `residentMaxBytes`
+  *       (default: 1/16 of the max heap) or when a file holds something
+  *       the snapshot reader does not reproduce (no vec_id/embedding
+  *       column, a null inside an embedding). The pruned search is
+  *       per-query independent, so the batched job is answer-identical
+  *       to per-request jobs, and its fixed cost amortizes across the
+  *       batch.
+  *    Both routes return exactly `searchPruned`'s rows (ServingSpec's
+  *    path law); `splitStats` splits a request's wall into queue wait,
+  *    refresh and answer time.
   *  - [[IngestServer]]: concurrent insert requests coalesce into one
   *    delta-log append per dispatch round under a single writer — the
   *    LSM group-commit discipline (the reference serializes its write
   *    buffer behind a mutex the same way).
-  *
-  * On a real cluster the dispatcher is exactly this code on the
-  * driver; batch size rides offered load, and the per-batch job scans
-  * only the probed partitions, so serving cost stays nprobe/k of the
-  * corpus regardless of concurrency.
   */
 object Serving {
   /** One ranked hit. */
   final case class Hit(neighborId: Long, rnk: Long, dist: Double)
+
+  /** [[SearchServer.splitStats]]: batches and requests answered since
+    * construction, queue wait (enqueue → dispatch) summed over
+    * requests, refresh time (listing + new-file reads) and answer time
+    * summed over batches, and how many batches took the job route. */
+  final case class SearchSplit(batches: Long, requests: Long,
+      queueWaitSec: Double, refreshSec: Double, answerSec: Double,
+      jobBatches: Long)
 }
 
 /** See [[Serving]]. `close()` drains the queue, then stops the
-  * dispatcher. */
+  * dispatcher. A batch whose listed index bytes are within
+  * `residentMaxBytes` is answered from the resident snapshot; a larger
+  * index takes the batched-job route (0 forces it). */
 final class SearchServer(spark: SparkSession, indexDir: String, k: Int,
-    nprobe: Int, maxBatch: Int = 128, maxInFlight: Int = 3)
+    nprobe: Int, maxBatch: Int = 128, maxInFlight: Int = 3,
+    residentMaxBytes: Long = Runtime.getRuntime.maxMemory / 16)
     extends AutoCloseable {
-  import Serving.Hit
+  import Serving.{Hit, SearchSplit}
 
   // a cloned session tuned for bounded serving jobs (shares the
   // SparkContext and all caches; separate SQLConf): a probe batch
@@ -75,7 +95,8 @@ final class SearchServer(spark: SparkSession, indexDir: String, k: Int,
       .sortBy(_._1)
   require(cents.nonEmpty, s"no centroids under $indexDir")
 
-  private final case class Req(rid: Long, qv: Array[Float], p: Promise[Seq[Hit]])
+  private final case class Req(rid: Long, qv: Array[Float], p: Promise[Seq[Hit]],
+      enq: Long = System.nanoTime())
   private val queue = new LinkedBlockingQueue[Req]()
   private val nextRid = new AtomicLong(0L)
   // gate: the open-check + put must be atomic with respect to close()'s
@@ -86,7 +107,41 @@ final class SearchServer(spark: SparkSession, indexDir: String, k: Int,
   private val gate = new Object
   @volatile private var open = true
 
-  /** Enqueue one search; completes when its batch's job does. Results
+  // split accounting (cumulative, lifetime of the server), the twin of
+  // IngestServer's: where a search request's wall goes
+  private val waitNs = new AtomicLong(0)
+  private val refreshNs = new AtomicLong(0)
+  private val answerNs = new AtomicLong(0)
+  private val nBatchesDone = new AtomicLong(0)
+  private val nReqsDone = new AtomicLong(0)
+  private val nJobBatches = new AtomicLong(0)
+
+  /** Since construction; see [[Serving.SearchSplit]]. */
+  def splitStats: SearchSplit = SearchSplit(nBatchesDone.get, nReqsDone.get,
+    waitNs.get / 1e9, refreshNs.get / 1e9, answerNs.get / 1e9, nJobBatches.get)
+
+  // the resident snapshot; replaced (never mutated) under `refreshLock`
+  private val refreshLock = new Object
+  private var snapshot: ResidentIvf.Snapshot = ResidentIvf.empty
+
+  /** List the index directory and bring the snapshot up to date: the
+    * snapshot to answer from, or None when this batch takes the job
+    * route. Over the byte bound nothing is read and the snapshot is
+    * dropped. */
+  private def refresh(): Option[ResidentIvf.Snapshot] =
+    refreshLock.synchronized {
+      val listing = ResidentIvf.list(indexDir)
+      if (listing.bytes > residentMaxBytes) {
+        snapshot = ResidentIvf.empty
+        None
+      } else {
+        snapshot = ResidentIvf.refresh(snapshot, listing)
+        if (listing.ok && snapshot.ok) Some(snapshot) else None
+      }
+    }
+  refresh() // load the snapshot at construction, not on the first batch
+
+  /** Enqueue one search; completes when its batch is answered. Results
     * are exactly searchPruned's rows for this query vector. Throws
     * (synchronously) once the server is closed — never hands back a
     * promise nobody will complete. */
@@ -105,35 +160,57 @@ final class SearchServer(spark: SparkSession, indexDir: String, k: Int,
   private def l2sq(a: Array[Float], b: Array[Float]): Double =
     graft.functions.VectorKernels.l2sqF(a, b)
 
+  private def probesOf(qv: Array[Float]): Seq[Int] =
+    cents.map { case (cid, cv) => (l2sq(qv, cv), cid) }
+      .sorted.take(nprobe).map(_._2).toSeq
+
+  /** The batched-job route: one searchPrunedFrames job. */
+  private def jobAnswers(reqs: Seq[Req], probes: Seq[Seq[Int]]): Seq[Seq[Hit]] = {
+    val probeRows = reqs.zip(probes).flatMap { case (r, ps) =>
+      ps.map(cid => (r.rid, r.qv.toSeq, cid))
+    }
+    val probeIds = probeRows.map(_._3).distinct.sorted
+    val probeDf = probeRows.toDF("query_id", "qv", "cluster_id")
+    val queries = reqs.map(r => (r.rid, r.qv.toSeq)).toDF("query_id", "qv")
+    val byRid = IvfIndex
+      .searchPrunedFrames(serve, indexDir, queries, probeDf, probeIds, k)
+      .collect()
+      .groupBy(_.getLong(0))
+    reqs.map { r =>
+      byRid.getOrElse(r.rid, Array.empty).toSeq
+        .map(row => Hit(row.getLong(1), row.getLong(2), row.getDouble(3)))
+        .sortBy(_.rnk)
+    }
+  }
+
   private def runBatch(reqs: Seq[Req]): Unit =
     try {
-      val probeRows = reqs.flatMap { r =>
-        cents.map { case (cid, cv) => (l2sq(r.qv, cv), cid) }
-          .sorted.take(nprobe)
-          .map { case (_, cid) => (r.rid, r.qv.toSeq, cid) }
+      val t0 = System.nanoTime()
+      reqs.foreach(r => waitNs.addAndGet(t0 - r.enq))
+      nReqsDone.addAndGet(reqs.size)
+      val resident = refresh()
+      val t1 = System.nanoTime()
+      refreshNs.addAndGet(t1 - t0)
+      val probes = reqs.map(r => probesOf(r.qv))
+      val answers = resident match {
+        case Some(s) =>
+          reqs.zip(probes).map { case (r, ps) => s.answer(r.qv, ps, k) }
+        case None =>
+          nJobBatches.incrementAndGet()
+          jobAnswers(reqs, probes)
       }
-      val probeIds = probeRows.map(_._3).distinct.sorted
-      val probes = probeRows.toDF("query_id", "qv", "cluster_id")
-      val queries = reqs.map(r => (r.rid, r.qv.toSeq)).toDF("query_id", "qv")
-      val byRid = IvfIndex
-        .searchPrunedFrames(serve, indexDir, queries, probes, probeIds, k)
-        .collect()
-        .groupBy(_.getLong(0))
-      reqs.foreach { r =>
-        val hits = byRid.getOrElse(r.rid, Array.empty).toSeq
-          .map(row => Hit(row.getLong(1), row.getLong(2), row.getDouble(3)))
-          .sortBy(_.rnk)
-        r.p.success(hits)
-      }
+      answerNs.addAndGet(System.nanoTime() - t1)
+      nBatchesDone.incrementAndGet()
+      reqs.zip(answers).foreach { case (r, hits) => r.p.success(hits) }
     } catch { case e: Throwable => reqs.foreach(_.p.tryFailure(e)) }
 
-  // PIPELINED dispatch: up to maxInFlight batch jobs overlap (Spark
+  // PIPELINED dispatch: up to maxInFlight batches overlap (Spark
   // schedules concurrent jobs fine — stages interleave on the
   // executor pool), so the scheduler's per-job latency stops gating
-  // aggregate QPS. The semaphore doubles as natural batch sizing:
-  // while maxInFlight jobs run, arrivals accumulate in the queue and
-  // the NEXT drain picks them all up — load adaptively deepens the
-  // batches instead of the queue.
+  // aggregate QPS on the job route. The semaphore doubles as natural
+  // batch sizing: while maxInFlight batches run, arrivals accumulate in
+  // the queue and the NEXT drain picks them all up — load adaptively
+  // deepens the batches instead of the queue.
   private val inFlight = new java.util.concurrent.Semaphore(maxInFlight)
   private val workers =
     java.util.concurrent.Executors.newFixedThreadPool(maxInFlight)

@@ -411,4 +411,19 @@ class DedupSpec extends SparkSpec {
     assert(components(keys.toSeq) === components(truePairs),
       "sparsified edge store changed connected components")
   }
+
+  test("minhashKeeperAssign releases its intermediate checkpoints") {
+    val docs = Tables.load(spark, sfDir, "documents")
+      .select($"doc_id",
+        sort_array(array_distinct(GraftText.whitespaceTokens($"text"))).as("ws"))
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val out = DedupQueries.minhashKeeperAssign(docs,
+      GraftText.jaccardSorted(_, _), 0.7)
+    // the (doc_id, ws) and bucket checkpoints are gone; only the
+    // output's own stays, and it still reads back
+    assert((sc.getPersistentRDDs.keySet.toSet -- before) ===
+      Set(DedupQueries.checkpointRdd(out).id))
+    assert(out.count() === docs.count())
+  }
 }

@@ -78,4 +78,14 @@ class ResampleGuardSpec extends SparkSpec {
     assert(msg.contains(s"spans ${cap + 1} hours > cap $cap"),
       s"boundary arithmetic drifted: $msg")
   }
+
+  test("q_resample_ffill's physical order is its orderBy(user_id, hour_epoch), row for row") {
+    // the entry takes its order from range-sorted anchors, not a final
+    // sort: pin the exploded rows against the explicit sort
+    val out = AnalyticsQueries.resampleFfill(Tables.load(spark, sfDir, "events"))
+    val got = out.collect().toSeq
+    val want = out.orderBy("user_id", "hour_epoch").collect().toSeq
+    assert(got.map(_.getLong(0)).distinct.size > 1)
+    assert(got === want)
+  }
 }

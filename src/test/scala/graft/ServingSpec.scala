@@ -3,15 +3,20 @@ package graft
 import scala.concurrent.Await
 import scala.concurrent.duration.Duration
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Shims
 
+import graft.functions.VectorKernels
 import graft.operators.{IndexStore, IvfIndex}
-import graft.streaming.{IngestServer, SearchServer}
+import graft.streaming.{IngestServer, IvfDeltaIngest, ResidentIvf, SearchServer,
+  Serving}
 
 /** The micro-batching serving front ends: batched answers must equal
-  * per-request searchPruned answers exactly (per-query independence),
-  * group-committed inserts must land in the delta log and shadow the
-  * index for subsequent searches. */
+  * per-request searchPruned answers exactly (per-query independence) on
+  * both the resident and the job route, group-committed inserts must
+  * land in the delta log and shadow the index for subsequent searches,
+  * and resident searches must run no Spark job. */
 class ServingSpec extends SparkSpec {
   import spark.implicits._
 
@@ -189,5 +194,148 @@ class ServingSpec extends SparkSpec {
     closedIngest.close()
     intercept[IllegalArgumentException](
       closedIngest.insert(Seq(5000L -> qv.toSeq)))
+  }
+
+  private val await = Duration(120, "s")
+
+  /** Hits as (id, rank, distance bits): NaN distances compare equal. */
+  private def key(hits: Seq[Serving.Hit]): Seq[(Long, Long, Long)] =
+    hits.map(h => (h.neighborId, h.rnk, java.lang.Double.doubleToLongBits(h.dist)))
+
+  /** searchPruned's answer for each query vector, in query order. */
+  private def prunedByVec(dir: String, qs: Seq[Array[Float]], k: Int,
+      nprobe: Int): Seq[Seq[(Long, Long, Long)]] = {
+    val df = qs.zipWithIndex.map { case (v, i) => (i.toLong, v.toSeq) }
+      .toDF("query_id", "qv")
+    val byQ = IvfIndex.searchPruned(spark, dir, df, k, nprobe).collect()
+      .groupBy(_.getLong(0))
+    qs.indices.map { i =>
+      key(byQ.getOrElse(i.toLong, Array.empty).toSeq
+        .map(r => Serving.Hit(r.getLong(1), r.getLong(2), r.getDouble(3)))
+        .sortBy(_.rnk))
+    }
+  }
+
+  test("path law: resident and job routes equal searchPruned through inserts, " +
+      "shadowing, NaN and compaction") {
+    val dir = scratchStore()
+    // k above every probed candidate count: the whole ranked list,
+    // NaN tail included, is compared
+    val (k, nprobe) = (100, 2)
+    val resident = new SearchServer(spark, dir, k, nprobe)
+    val job = new SearchServer(spark, dir, k, nprobe, residentMaxBytes = 0L)
+    val ingest = new IngestServer(spark, dir, startSeq = 1L)
+    def check(stage: String, qs: Seq[Array[Float]]): Unit = {
+      val want = prunedByVec(dir, qs, k, nprobe)
+      Seq("resident" -> resident, "job" -> job).foreach { case (route, srv) =>
+        val got = qs.map(srv.search).map(f => key(Await.result(f, await)))
+        assert(got == want, s"$stage: $route route differs from searchPruned")
+      }
+    }
+    try {
+      val base = vecsOf(0L until 12L).map(_._2)
+      check("fresh store", base)
+
+      val rnd = new scala.util.Random(5)
+      val inserted = (3000L until 3010L).map(_ -> Array.fill(64)(rnd.nextGaussian().toFloat))
+      inserted.map { case (id, v) => ingest.insert(Seq(id -> v.toSeq)) }
+        .foreach(Await.result(_, await))
+      check("group-committed inserts", base ++ inserted.map(_._2))
+
+      // re-ingest vec 20 at the centroid farthest from it: searched at
+      // its old vector, the probes reach its old cluster only, so the
+      // old row must be shadowed by the buffer
+      val cents = spark.read.parquet(s"$dir/centroids").collect()
+        .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
+      val (vid, old) = vecsOf(Seq(20L)).head
+      val oldCluster = spark.read.parquet(s"$dir/assignments")
+        .filter($"vec_id" === vid).select($"cluster_id").head().getInt(0)
+      val probes = cents.map { case (c, cv) => (VectorKernels.l2sqF(old, cv), c) }
+        .sorted.take(nprobe).map(_._2)
+      val (far, farV) = cents.maxBy { case (_, cv) => VectorKernels.l2sqF(old, cv) }
+      assert(probes.contains(oldCluster) && !probes.contains(far))
+      Await.result(ingest.insert(Seq(vid -> farV.toSeq)), await)
+      assert(IvfDeltaIngest.deltaLatest(spark, dir).get
+        .filter($"vec_id" === vid).select($"cluster_id").head().getInt(0) == far)
+      check("delta shadowing", Seq(old))
+      assert(!Await.result(resident.search(old), await)
+        .exists(h => h.neighborId == vid && h.dist == 0.0))
+
+      val nanRow = old.clone(); nanRow(3) = Float.NaN
+      Await.result(ingest.insert(Seq(3100L -> nanRow.toSeq)), await)
+      val nanQuery = Array.fill(64)(Float.NaN)
+      check("NaN query and NaN-bearing row", Seq(nanQuery, old, nanRow))
+
+      ingest.close()
+      IvfDeltaIngest.compact(spark, dir) // removes files: forces a rebuild
+      check("after compaction", base ++ Seq(old, nanQuery))
+
+      assert(resident.splitStats.jobBatches == 0L)
+      val js = job.splitStats
+      assert(js.batches > 0L && js.jobBatches == js.batches)
+    } finally { resident.close(); job.close(); ingest.close() }
+  }
+
+  test("a file the snapshot cannot reproduce sends the batch to the job route") {
+    val dir = scratchStore()
+    val server = new SearchServer(spark, dir, k = 10, nprobe = 2)
+    try {
+      // a buffer row whose embedding holds a null element
+      val e: Seq[java.lang.Float] =
+        Seq.tabulate(64)(i => if (i == 5) null else java.lang.Float.valueOf(0.5f))
+      Seq((4000L, e, 9L, 0)).toDF("vec_id", "embedding", "seq", "cluster_id")
+        .write.mode("append").parquet(s"$dir/delta_log")
+      val qs = vecsOf(0L until 3L).map(_._2)
+      val got = qs.map(server.search).map(f => key(Await.result(f, await)))
+      assert(got == prunedByVec(dir, qs, 10, 2))
+      assert(server.splitStats.jobBatches > 0L)
+    } finally server.close()
+  }
+
+  test("resident searches start no Spark job") {
+    val dir = scratchStore()
+    val vecs = vecsOf(0L until 20L)
+    val server = new SearchServer(spark, dir, k = 10, nprobe = 4)
+    try {
+      Shims.drainListeners(spark) // the constructor's centroid read
+      val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add(e.jobId)
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        val got = vecs.map { case (_, qv) => server.search(qv) }
+          .map(Await.result(_, await))
+        assert(got.forall(_.size == 10))
+        Shims.drainListeners(spark)
+      } finally spark.sparkContext.removeSparkListener(listener)
+      assert(jobs.isEmpty, s"jobs started: $jobs")
+      assert(server.splitStats.jobBatches == 0L)
+    } finally server.close()
+  }
+
+  test("search splitStats accounts every request and batch on both routes") {
+    val dir = scratchStore()
+    val vecs = vecsOf(0L until 10L)
+    Seq(Long.MaxValue, 0L).foreach { maxBytes =>
+      val server = new SearchServer(spark, dir, k = 5, nprobe = 2,
+        residentMaxBytes = maxBytes)
+      try {
+        vecs.map { case (_, qv) => server.search(qv) }.foreach(Await.result(_, await))
+        val s = server.splitStats
+        assert(s.requests == 10L)                     // every request counted once
+        assert(s.batches >= 1L && s.batches <= 10L)   // dispatch coalesces
+        assert(s.queueWaitSec >= 0.0 && s.refreshSec > 0.0 && s.answerSec > 0.0)
+        assert(s.jobBatches == (if (maxBytes == 0L) s.batches else 0L))
+      } finally server.close()
+    }
+  }
+
+  test("resident distances round like Catalyst's round(x, 4)") {
+    val xs = Seq(0.0, 0.00005, 0.00015, 1.23445, 2.5e-5, 0.123456789,
+      7.99995, 1e-9, 12345.67895, Double.NaN, Double.PositiveInfinity)
+    val want = xs.toDF("x").select(round($"x", 4)).collect().map(_.getDouble(0))
+    assert(xs.map(ResidentIvf.round4).map(java.lang.Double.doubleToLongBits) ==
+      want.toSeq.map(java.lang.Double.doubleToLongBits))
   }
 }

@@ -22,4 +22,16 @@ class VerifyGuardSpec extends AnyFunSuite {
   test("empty wall set is fine (all queries failed or resumed)") {
     assert(Verify.overCap(Seq.empty, 600.0) === Seq.empty)
   }
+
+  test("GRAFT_VERIFY_ONLY parses to a trimmed name set; blank means every entry") {
+    assert(Verify.selection(None) === None)
+    assert(Verify.selection(Some(" , ")) === None)
+    assert(Verify.selection(Some("q_dau_wau, v_norm,")) ===
+      Some(Set("q_dau_wau", "v_norm")))
+  }
+
+  test("only a run over every entry mirrors its detail over the tracked record") {
+    assert(Verify.mirrorsDetail(Verify.selection(None)))
+    assert(!Verify.mirrorsDetail(Verify.selection(Some("v_norm"))))
+  }
 }
