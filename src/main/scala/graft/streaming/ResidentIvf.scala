@@ -1,6 +1,7 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, Paths}
+import java.io.{IOException, UncheckedIOException}
+import java.nio.file.{DirectoryIteratorException, Files, Path, Paths}
 import java.nio.file.attribute.BasicFileAttributes
 import java.util.concurrent.TimeUnit
 
@@ -45,11 +46,9 @@ private[graft] object ResidentIvf {
   /** A listed data file's identity: length and modification time. */
   final case class Stamp(len: Long, mtime: Long)
 
-  /** One cluster's rows: row i's embedding is flat(off(i) until off(i + 1)). */
-  final class Rows(val ids: Array[Long], val flat: Array[Float],
-      val off: Array[Int]) {
-    def ++(o: Rows): Rows = new Rows(ids ++ o.ids, flat ++ o.flat,
-      off ++ o.off.tail.map(_ + flat.length))
+  /** One cluster's rows: row i is (ids(i), embs(i)), embeddings non-null. */
+  final case class Rows(ids: Array[Long], embs: Array[Array[Float]]) {
+    def ++(o: Rows): Rows = Rows(ids ++ o.ids, embs ++ o.embs)
   }
 
   /** A buffer row that won the fold; `emb` is null for a null embedding. */
@@ -69,17 +68,12 @@ private[graft] object ResidentIvf {
     /** Top-k for one query over its probed clusters and the buffer. */
     def answer(qv: Array[Float], probes: Seq[Int], k: Int): Seq[Hit] = {
       val top = new TopKBuffer(k)
-      var scratch = new Array[Float](0)
       probes.foreach { cid =>
         clusters.get(cid).foreach { r =>
           var i = 0
           while (i < r.ids.length) {
-            if (!delta.contains(r.ids(i))) {
-              val n = r.off(i + 1) - r.off(i)
-              if (scratch.length != n) scratch = new Array[Float](n)
-              System.arraycopy(r.flat, r.off(i), scratch, 0, n)
-              top.insert(VectorKernels.l2sqBest(scratch, qv), r.ids(i))
-            }
+            if (!delta.contains(r.ids(i)))
+              top.insert(VectorKernels.l2sqBest(r.embs(i), qv), r.ids(i))
             i += 1
           }
         }
@@ -134,7 +128,18 @@ private[graft] object ResidentIvf {
 
   private val NullPartition = "__HIVE_DEFAULT_PARTITION__"
 
-  def list(indexDir: String): Listing = {
+  /** The listing of `indexDir`; one with `ok` false when an entry
+    * vanished or turned unreadable while it was listed (a compaction's
+    * swap, a buffer delete), so that batch takes the job route. */
+  def list(indexDir: String): Listing =
+    try listOrThrow(indexDir)
+    catch {
+      case _: IOException | _: UncheckedIOException |
+          _: DirectoryIteratorException =>
+        Listing(Map.empty, Map.empty, Map.empty, ok = false)
+    }
+
+  private def listOrThrow(indexDir: String): Listing = {
     var ok = true
     val assignments = mutable.Map.empty[Path, Stamp]
     val clusterOf = mutable.Map.empty[Path, Option[Int]]
@@ -196,9 +201,7 @@ private[graft] object ResidentIvf {
           }
         case Some(rows) => l.clusterOf(p).foreach { cid =>
           val keep = rows.embs.indices.filter(rows.embs(_) != null)
-          val embs = keep.map(rows.embs)
-          val r = new Rows(keep.map(rows.ids).toArray, embs.flatten.toArray,
-            embs.scanLeft(0)(_ + _.length).toArray)
+          val r = Rows(keep.map(rows.ids).toArray, keep.map(rows.embs).toArray)
           clusters = clusters.updated(cid, clusters.get(cid).fold(r)(_ ++ r))
         }
       }
@@ -288,5 +291,5 @@ private[graft] object ResidentIvf {
         g = reader.read()
       }
       if (ok) Some(Parsed(ids.result(), embs.result(), seqs.result())) else None
-    } catch { case _: java.io.IOException | _: RuntimeException => None }
+    } catch { case _: IOException | _: RuntimeException => None }
 }

@@ -34,10 +34,12 @@ import graft.operators.IvfIndex
   *       serves from memory the same way. Ingest acknowledges only
   *       after its appends land, so read-your-writes holds.
   *     - JOB: one [[IvfIndex.searchPrunedFrames]] job for the whole
-  *       batch, taken when the listed bytes exceed `residentMaxBytes`
-  *       (default: 1/16 of the max heap) or when a file holds something
-  *       the snapshot reader does not reproduce (no vec_id/embedding
-  *       column, a null inside an embedding). The pruned search is
+  *       batch, taken when the listed bytes exceed 1/16 of the max
+  *       heap (`SearchServer.ResidentMaxBytes`), when the listing fails
+  *       or shows a layout the scan reads differently, or when a file
+  *       holds something the snapshot reader does not reproduce (no
+  *       vec_id/embedding column, a null inside an embedding). The
+  *       pruned search is
   *       per-query independent, so the batched job is answer-identical
   *       to per-request jobs, and its fixed cost amortizes across the
   *       batch.
@@ -62,15 +64,29 @@ object Serving {
       jobBatches: Long)
 }
 
+object SearchServer {
+  /** Listed index bytes up to which a batch is answered from the
+    * resident snapshot. Random float embeddings barely compress, so the
+    * snapshot holds about as many bytes as the parquet it is read from
+    * (measured 0.99–1.05× for 2k–20k rows of 64–128 floats); 1/16 of
+    * the heap keeps it, and its brief second copy during a rebuild,
+    * well under the driver's memory. */
+  private[streaming] val ResidentMaxBytes: Long = Runtime.getRuntime.maxMemory / 16
+}
+
 /** See [[Serving]]. `close()` drains the queue, then stops the
   * dispatcher. A batch whose listed index bytes are within
   * `residentMaxBytes` is answered from the resident snapshot; a larger
-  * index takes the batched-job route (0 forces it). */
-final class SearchServer(spark: SparkSession, indexDir: String, k: Int,
-    nprobe: Int, maxBatch: Int = 128, maxInFlight: Int = 3,
-    residentMaxBytes: Long = Runtime.getRuntime.maxMemory / 16)
+  * index takes the batched-job route (specs pass 0 to force it). */
+final class SearchServer private[graft] (spark: SparkSession, indexDir: String,
+    k: Int, nprobe: Int, maxBatch: Int, maxInFlight: Int, residentMaxBytes: Long)
     extends AutoCloseable {
   import Serving.{Hit, SearchSplit}
+
+  def this(spark: SparkSession, indexDir: String, k: Int, nprobe: Int,
+      maxBatch: Int = 128, maxInFlight: Int = 3) =
+    this(spark, indexDir, k, nprobe, maxBatch, maxInFlight,
+      SearchServer.ResidentMaxBytes)
 
   // a cloned session tuned for bounded serving jobs (shares the
   // SparkContext and all caches; separate SQLConf): a probe batch
@@ -126,17 +142,19 @@ final class SearchServer(spark: SparkSession, indexDir: String, k: Int,
 
   /** List the index directory and bring the snapshot up to date: the
     * snapshot to answer from, or None when this batch takes the job
-    * route. Over the byte bound nothing is read and the snapshot is
-    * dropped. */
+    * route. A listing the scan would read differently (or one an entry
+    * vanished from mid-listing) reads nothing; over the byte bound the
+    * snapshot is dropped. */
   private def refresh(): Option[ResidentIvf.Snapshot] =
     refreshLock.synchronized {
       val listing = ResidentIvf.list(indexDir)
-      if (listing.bytes > residentMaxBytes) {
+      if (!listing.ok) None
+      else if (listing.bytes > residentMaxBytes) {
         snapshot = ResidentIvf.empty
         None
       } else {
         snapshot = ResidentIvf.refresh(snapshot, listing)
-        if (listing.ok && snapshot.ok) Some(snapshot) else None
+        if (snapshot.ok) Some(snapshot) else None
       }
     }
   refresh() // load the snapshot at construction, not on the first batch

@@ -198,6 +198,11 @@ class ServingSpec extends SparkSpec {
 
   private val await = Duration(120, "s")
 
+  /** A server whose byte bound is 0: every batch takes the job route. */
+  private def jobRouteServer(dir: String, k: Int, nprobe: Int): SearchServer =
+    new SearchServer(spark, dir, k, nprobe, maxBatch = 128, maxInFlight = 3,
+      residentMaxBytes = 0L)
+
   /** Hits as (id, rank, distance bits): NaN distances compare equal. */
   private def key(hits: Seq[Serving.Hit]): Seq[(Long, Long, Long)] =
     hits.map(h => (h.neighborId, h.rnk, java.lang.Double.doubleToLongBits(h.dist)))
@@ -223,7 +228,7 @@ class ServingSpec extends SparkSpec {
     // NaN tail included, is compared
     val (k, nprobe) = (100, 2)
     val resident = new SearchServer(spark, dir, k, nprobe)
-    val job = new SearchServer(spark, dir, k, nprobe, residentMaxBytes = 0L)
+    val job = jobRouteServer(dir, k, nprobe)
     val ingest = new IngestServer(spark, dir, startSeq = 1L)
     def check(stage: String, qs: Seq[Array[Float]]): Unit = {
       val want = prunedByVec(dir, qs, k, nprobe)
@@ -292,6 +297,42 @@ class ServingSpec extends SparkSpec {
     } finally server.close()
   }
 
+  test("a listed file removed between batches is dropped by a rebuild") {
+    val dir = scratchStore()
+    val server = new SearchServer(spark, dir, k = 100, nprobe = 2)
+    try {
+      val qs = vecsOf(0L until 6L).map(_._2)
+      def check(stage: String): Unit = {
+        val got = qs.map(server.search).map(f => key(Await.result(f, await)))
+        assert(got == prunedByVec(dir, qs, 100, 2), stage)
+      }
+      check("before the removal")
+      // a probed cluster's file vanishes: its rows must leave the answers
+      val cents = spark.read.parquet(s"$dir/centroids").collect()
+        .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
+      val probed = cents.minBy { case (_, cv) => VectorKernels.l2sqF(qs.head, cv) }._1
+      val victim = java.nio.file.Files.list(
+          java.nio.file.Paths.get(dir, "assignments", s"cluster_id=$probed"))
+        .filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get
+      java.nio.file.Files.delete(victim)
+      check("after the removal")
+      assert(server.splitStats.jobBatches == 0L)
+    } finally server.close()
+  }
+
+  test("an entry that vanishes while listed gives a failed listing, not an exception") {
+    val dir = scratchStore()
+    val cdir = java.nio.file.Files.list(java.nio.file.Paths.get(dir, "assignments"))
+      .filter(_.getFileName.toString.startsWith("cluster_id=")).findFirst().get
+    assert(ResidentIvf.list(dir).ok)
+    // a dangling link is returned by the directory stream but has no
+    // attributes: the same state as a file removed mid-listing
+    java.nio.file.Files.createSymbolicLink(cdir.resolve("part-gone.parquet"),
+      cdir.resolve("no-such-file"))
+    val l = ResidentIvf.list(dir)
+    assert(!l.ok && l.assignments.isEmpty)
+  }
+
   test("resident searches start no Spark job") {
     val dir = scratchStore()
     val vecs = vecsOf(0L until 20L)
@@ -317,16 +358,17 @@ class ServingSpec extends SparkSpec {
   test("search splitStats accounts every request and batch on both routes") {
     val dir = scratchStore()
     val vecs = vecsOf(0L until 10L)
-    Seq(Long.MaxValue, 0L).foreach { maxBytes =>
-      val server = new SearchServer(spark, dir, k = 5, nprobe = 2,
-        residentMaxBytes = maxBytes)
+    Seq(false, true).foreach { jobRoute =>
+      val server =
+        if (jobRoute) jobRouteServer(dir, k = 5, nprobe = 2)
+        else new SearchServer(spark, dir, k = 5, nprobe = 2)
       try {
         vecs.map { case (_, qv) => server.search(qv) }.foreach(Await.result(_, await))
         val s = server.splitStats
         assert(s.requests == 10L)                     // every request counted once
         assert(s.batches >= 1L && s.batches <= 10L)   // dispatch coalesces
         assert(s.queueWaitSec >= 0.0 && s.refreshSec > 0.0 && s.answerSec > 0.0)
-        assert(s.jobBatches == (if (maxBytes == 0L) s.batches else 0L))
+        assert(s.jobBatches == (if (jobRoute) s.batches else 0L))
       } finally server.close()
     }
   }
