@@ -99,21 +99,13 @@ object Probe {
       "lm_scores" -> (() => TextQueries.lmStore(spark, sfDir)),
       "bpe_merges" -> (() => TextQueries.bpeStore(spark, sfDir)))
     val dir = java.nio.file.Files.createTempDirectory("graft-builds").toString
-    val prev = sys.props.get("graft.index.dir")
-    sys.props("graft.index.dir") = dir
-    try stores.map { case (name, build) =>
+    try IndexStore.withRoot(dir)(stores.map { case (name, build) =>
       val t0 = System.nanoTime()
       build()
       val sec = math.rint((System.nanoTime() - t0) / 1e6) / 1e3
       println(s"PROBE builds $name $sec s")
       name -> sec
-    } finally {
-      prev match {
-        case Some(p) => sys.props("graft.index.dir") = p
-        case None => sys.props.remove("graft.index.dir")
-      }
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    }
+    }) finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 
   /** Each finished job's wall (listener event times) and description,

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Shims
 
 /** Connected components by label-graph contraction — the transitive
   * closure step at the end of every real dedup pipeline (pair/keeper
@@ -61,7 +62,23 @@ object ConnectedComponents {
   def minLabel(nodes: DataFrame, idCol: String, edges: DataFrame,
       aCol: String, bCol: String, maxIter: Int = 20,
       smallFinish: Int = 1 << 20, validateNodes: Boolean = true,
-      trustedEndpoints: Boolean = false): DataFrame = {
+      trustedEndpoints: Boolean = false): DataFrame =
+    minLabelBounded(nodes, idCol, edges, aCol, bCol, maxIter, smallFinish,
+      validateNodes, trustedEndpoints, edgesPerTask)
+
+  /** Edge rows one contraction task may hold: the loop's shuffle width
+    * is at least nEdges / this. Executor heap, not driver: an (a, b)
+    * edge row costs ~100 B as a collected Row (SizeEstimator) and 24 B
+    * in Spark's binary rows, so ~12 MB of edge rows per task at the
+    * bound, several times that as join and sort state. */
+  final val edgesPerTask = 500_000L
+
+  /** [[minLabel]] with the per-task edge bound as a parameter, so a
+    * spec can force the widened loop on a small graph. */
+  private[graft] def minLabelBounded(nodes: DataFrame, idCol: String,
+      edges: DataFrame, aCol: String, bCol: String, maxIter: Int,
+      smallFinish: Int, validateNodes: Boolean, trustedEndpoints: Boolean,
+      edgesPerTask: Long): DataFrame = {
     require(maxIter >= 1, s"maxIter must be >= 1, got $maxIter")
     require(smallFinish >= 0, s"smallFinish must be >= 0, got $smallFinish")
     val spark = nodes.sparkSession
@@ -135,19 +152,22 @@ object ConnectedComponents {
     // core count, the second decade's 70 M-edge contraction joins ran
     // 2 M+ edges of join/sort state per task and a cold 32-task 16 g
     // run died of heap (the r14 SCALE_sf10 OOM, reproduced at head).
-    // Bound per-task edge mass instead: raise the loop's shuffle width
-    // to nEdges / graft.cc.edgesPerTask (never lowering the session
-    // value), and let AQE coalesce healthy rounds back down. The
-    // fixpoint is partitioning-independent (min-label, exact), so this
-    // is pure memory shaping; restored after the loop.
+    // Bound per-task edge mass instead: run the loop's plans on a
+    // session clone whose shuffle width is nEdges / edgesPerTask (never
+    // below the caller's), and let AQE coalesce healthy rounds back
+    // down. The fixpoint is partitioning-independent (min-label,
+    // exact), so this is pure memory shaping. A clone, not a write to
+    // the caller's conf: that session may be planning other queries
+    // meanwhile (ComponentsSpec polls it during a widened call).
     val spKey = "spark.sql.shuffle.partitions"
-    val prevSp = spark.conf.get(spKey)
-    val edgesPerTask = sys.props.get("graft.cc.edgesPerTask")
-      .flatMap(_.toLongOption).filter(_ > 0).getOrElse(500_000L)
-    val wantSp = math.min(20_000L,
-      math.max(prevSp.toLong, nEdges / edgesPerTask + 1)).toInt
-    if (wantSp > prevSp.toInt) spark.conf.set(spKey, wantSp.toString)
-    try {
+    val callerSp = spark.conf.get(spKey).toLong
+    val wantSp =
+      math.min(20_000L, math.max(callerSp, nEdges / edgesPerTask + 1))
+    val loop =
+      if (wantSp > callerSp) Shims.cloneWith(spark, spKey -> wantSp.toString)
+      else spark
+    labels = Shims.onSession(loop, labels)
+    eo = Shims.onSession(loop, eo)
     var iter = 0
     var converged = false
     while (!converged) {
@@ -191,7 +211,7 @@ object ConnectedComponents {
         // label, so the final root IS the min node id) and map every
         // node label through the broadcast result. Same fixpoint as
         // letting the loop run; ComponentsSpec compares the two paths.
-        val mapDf = unionFindMap(spark, e2.as[(Long, Long)].collect())
+        val mapDf = unionFindMap(loop, e2.as[(Long, Long)].collect())
         labels = labels.join(mapDf, Seq("lab"), "left")
           .select($"id", coalesce($"root", $"lab").as("lab"))
         converged = true
@@ -221,10 +241,7 @@ object ConnectedComponents {
         iter += 1
       }
     }
-    labels.select($"id", $"lab".as("component"))
-    } finally {
-      if (wantSp > prevSp.toInt) spark.conf.set(spKey, prevSp)
-    }
+    Shims.onSession(spark, labels.select($"id", $"lab".as("component")))
   }
 
   /** Driver union-find over a bounded edge list → broadcast (lab, root)

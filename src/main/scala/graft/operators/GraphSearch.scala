@@ -1,9 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 
 import graft.GraftVector._
+import graft.Route
 
 /** Graph-traversal ANN search — the distributable analog of the
   * reference's HNSW beam search (/root/reference/include/hnsw_index.h:268-330:
@@ -378,35 +380,31 @@ object GraphSearch {
     * sf10, ~2 M at 100×), and per round the driver path materializes
     * and sorts |Q|·ef·(deg+1) boxed rows on ONE thread: measured at
     * sf10, v_graph_insert 10.7 → 37.3 s when r12 routed everything
-    * driver-side. The threshold is a sys-prop so the equivalence spec
-    * can force either path on the same input; 1024 comfortably covers
-    * every serving shape while sending corpus-scaled batches to the
-    * distributed aggregate ([[beamLoopDistributed]]). */
-  private[graft] def driverBeamMaxQ: Int =
-    sys.props.get("graft.beam.driverMaxQ").flatMap(_.toIntOption)
-      .getOrElse(1024)
+    * driver-side. 1024 comfortably covers every serving shape while
+    * sending corpus-scaled batches to the distributed aggregate
+    * ([[beamLoopDistributed]]); BeamPathLawSpec forces either side
+    * through [[graft.Route.forcing]] (key `beam.driver`).
+    *
+    * Driver heap: a collected 64-d query row costs ~1.4 KB (its floats
+    * are boxed; SizeEstimator on sf0.01 embeddings) and a 256-d one
+    * ~5.2 KB, so the collected batch is ≤ ~1.4 MB (≤ ~5.4 MB at
+    * 256-d). */
+  private[graft] final val driverBeamMaxQ = 1024
 
-  /** Collect a bounded frame and re-plant it as a LocalRelation, so
-    * every later broadcast of it is a driver-memory copy instead of a
-    * scheduled re-scan job (the query frame was re-scanned from parquet
-    * once per beam round before this). Callers hold bounded frames by
-    * contract (serving query sets). */
-  private def localDf(df: DataFrame): DataFrame =
-    df.sparkSession.createDataFrame(
-      java.util.Arrays.asList(df.collect(): _*), df.schema)
-
-  /** [[localDf]] with the serving-batch contract enforced: the layered
-    * descent and the ef-sweep run their rounds on the driver-resident
-    * engine UNCONDITIONALLY (their callers are bounded serving shapes),
-    * so a corpus-scaled query frame must fail loudly here rather than
-    * funnel single-threaded through driver state — the guard [[beamLoop]]
-    * implements by routing, expressed as a require where no distributed
-    * twin exists. Bounded probe: collects at most maxQ+1 rows. */
+  /** Collect a bounded query frame and re-plant it as a LocalRelation,
+    * so every later broadcast of it is a driver-memory copy instead of
+    * a scheduled re-scan job. The layered descent and the ef-sweep run
+    * their rounds on the driver-resident engine UNCONDITIONALLY (their
+    * callers are bounded serving shapes), so a corpus-scaled query
+    * frame must fail loudly here rather than funnel single-threaded
+    * through driver state — the guard [[beamLoop]] implements by
+    * routing, expressed as a require where no distributed twin exists
+    * (so no forcing applies). Collects at most maxQ+1 rows. */
   private def localDfBounded(df: DataFrame, what: String): DataFrame = {
     val maxQ = driverBeamMaxQ
     val head = df.limit(maxQ + 1).collect()
     require(head.length <= maxQ,
-      s"$what: query batch exceeds graft.beam.driverMaxQ=$maxQ rows — " +
+      s"$what: query batch exceeds GraphSearch.driverBeamMaxQ=$maxQ rows — " +
         "the driver-resident beam engine serves bounded batches only; " +
         "route corpus-scaled batches through the distributed beam loop")
     df.sparkSession.createDataFrame(
@@ -418,31 +416,39 @@ object GraphSearch {
     * layered descent, and the insert path. Returns the final scored
     * frame (query_id, beam: array⟨(score,id)⟩ ranked by (d, node)).
     *
-    * Routes by |Q| ([[driverBeamMaxQ]]): bounded serving batches run
-    * the driver-resident rounds ([[beamRounds]] — collects the entry
-    * beam and query vectors once; both are the broadcast sides of
-    * every round's joins, i.e. they were ALREADY driver-collected each
-    * round, a broadcast IS a collect), and corpus-scaled batches run
-    * the distributed TopKByScore reduction so no per-round keep-ef
-    * ever runs single-threaded over corpus-sized state. The size probe
-    * is limit(maxQ+1).collect() — bounded work, and when the batch is
-    * small the probe IS the collect the driver path needed anyway, so
-    * the serving job count is unchanged. Both paths implement the same
-    * rounds and the same greedy-stabilization skip; BeamPathLawSpec
-    * pins bit-equality on a forced-path pair. */
+    * Routes by |Q| ([[driverBeamMaxQ]], key `beam.driver`): bounded
+    * serving batches run the driver-resident rounds ([[beamRounds]] —
+    * collects the entry beam and query vectors once; both are the
+    * broadcast sides of every round's joins, i.e. they were ALREADY
+    * driver-collected each round, a broadcast IS a collect), and
+    * corpus-scaled batches run the distributed TopKByScore reduction
+    * so no per-round keep-ef ever runs single-threaded over
+    * corpus-sized state. Both paths implement the same rounds and the
+    * same greedy-stabilization skip; BeamPathLawSpec pins bit-equality
+    * on a forced-path pair. */
   private def beamLoop(edges: DataFrame, vecs: DataFrame, q: DataFrame,
       entry: DataFrame, ef: Int, hops: Int): DataFrame = {
     val s = edges.sparkSession
-    val maxQ = driverBeamMaxQ
-    val qHead = q.limit(maxQ + 1).collect()
-    if (qHead.length <= maxQ) {
-      val qLocal = s.createDataFrame(
-        java.util.Arrays.asList(qHead: _*), q.schema)
-      val (rows, schema) = beamRounds(edges, vecs, qLocal,
-        entry.collect(), ef, hops)
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-    } else beamLoopDistributed(edges, vecs, q, entry, ef, hops)
+    Route.collectUpTo("beam.driver", q, driverBeamMaxQ) match {
+      case Some(qHead) =>
+        val qLocal = s.createDataFrame(
+          java.util.Arrays.asList(qHead: _*), q.schema)
+        val (rows, schema) = beamRounds(edges, vecs, qLocal,
+          entry.collect(), ef, hops)
+        s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      case None => beamLoopDistributed(edges, vecs, q, entry, ef, hops)
+    }
   }
+
+  /** Past this many beam rows (|Q|·ef) the distributed rounds drop
+    * their broadcast hints (key `beam.broadcast`; see
+    * [[beamLoopDistributed]]). Driver heap: a (query_id, node) beam
+    * row costs ~100 B as a collected Row (SizeEstimator) and 24 B in
+    * the broadcast's binary form, so a broadcast at the cap builds a
+    * ~1.2 GB relation on the driver (plus hash-table overhead) — a cap
+    * under Spark's 8 GB broadcast limit, not under a small driver's
+    * heap. */
+  private[graft] final val beamBroadcastMaxRows = 50_000_000L
 
   /** The distributed beam rounds — the corpus-scaled-batch path: the
     * beam/candidate frames stay the broadcast PROBE side of each
@@ -470,13 +476,12 @@ object GraphSearch {
     // measured batch (the insert contract ships the batch to executors
     // anyway), but a 100× batch (~2 M queries × ef 10) pushes the
     // per-hop broadcast toward the 8 GB relation cap and driver-memory
-    // limits. Past graft.beam.distBeamMaxRows (on |Q|·ef, counted once
+    // limits. Past beamBroadcastMaxRows (on |Q|·ef, counted once
     // off the pinned query frame) the hints DROP and each round's
     // joins key-shuffle the beam against the edge/vector tables
     // instead — slower per hop, memory-safe at any batch size.
-    val beamCap = sys.props.get("graft.beam.distBeamMaxRows")
-      .flatMap(_.toLongOption).getOrElse(50_000_000L)
-    val hintB = qc.count() * ef <= beamCap
+    val hintB = Route.fits("beam.broadcast", qc.count() * ef,
+      beamBroadcastMaxRows)
     def maybeB(df: DataFrame): DataFrame = if (hintB) broadcast(df) else df
     var beam = entry.localCheckpoint(true)
     var scored: DataFrame = null
@@ -531,16 +536,13 @@ object GraphSearch {
     * the subset argument, per query, since a global subset implies
     * every per-query subset). */
   private def beamRounds(edges: DataFrame, vecs: DataFrame,
-      qLocal: DataFrame, entryRows: Array[org.apache.spark.sql.Row],
-      ef: Int, hops: Int)
-      : (Array[org.apache.spark.sql.Row], org.apache.spark.sql.types.StructType) = {
+      qLocal: DataFrame, entryRows: Array[Row], ef: Int,
+      hops: Int): (Array[Row], StructType) = {
     val s = edges.sparkSession
     import s.implicits._
     val qidType = qLocal.schema("query_id").dataType
-    val beamSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("query_id", qidType, nullable = true),
-      org.apache.spark.sql.types.StructField("node",
-        org.apache.spark.sql.types.LongType, nullable = true)))
+    val beamSchema = new StructType().add("query_id", qidType)
+      .add("node", LongType)
     // (query_id, node) pairs as driver state; dedup driver-side exactly
     // as the old plan's cand.distinct() deduped before the aggregate
     var beam: Array[(Any, Long)] = entryRows.map(r =>
@@ -557,7 +559,7 @@ object GraphSearch {
     while (hop < hops && !stable) {
       hop += 1
       val beamDf = s.createDataFrame(java.util.Arrays.asList(
-        beam.map { case (q, n) => org.apache.spark.sql.Row(q, n) }: _*),
+        beam.map { case (q, n) => Row(q, n) }: _*),
         beamSchema)
       // ONE action per round (the r13 shape paid two — collect the
       // expansion, then score it in a second job, each with its own
@@ -605,20 +607,10 @@ object GraphSearch {
       }
       beam = newBeam
     }
-    val scoredSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("query_id", qidType, nullable = true),
-      org.apache.spark.sql.types.StructField("beam",
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("score",
-            org.apache.spark.sql.types.DoubleType, nullable = false),
-          org.apache.spark.sql.types.StructField("id",
-            org.apache.spark.sql.types.LongType, nullable = false))),
-          containsNull = false), nullable = true)))
     val rows = scored.map { case (qid, bs) =>
-      org.apache.spark.sql.Row(qid,
-        bs.map(b => org.apache.spark.sql.Row(b._1, b._2)))
-    }
-    (rows, scoredSchema)
+      Row(qid, bs.map(b => Row(b._1, b._2))) }
+    (rows, new StructType().add("query_id", qidType)
+      .add("beam", TopKByScore.resultType))
   }
 
   /** (query_id, neighbor_id, rnk, dist) off a scored beam frame. */
@@ -692,13 +684,13 @@ object GraphSearch {
     efs.map { ef =>
       val scored =
         if (hops <= 1) {
-          val sliced = s1rows.map(r => org.apache.spark.sql.Row(
-            r.get(0), r.getSeq[org.apache.spark.sql.Row](1).take(ef)))
+          val sliced = s1rows.map(r => Row(
+            r.get(0), r.getSeq[Row](1).take(ef)))
           s.createDataFrame(java.util.Arrays.asList(sliced: _*), s1schema)
         } else {
           val b1 = s1rows.flatMap { r =>
-            r.getSeq[org.apache.spark.sql.Row](1).take(ef).map(c =>
-              org.apache.spark.sql.Row(r.get(0), c.getLong(1)))
+            r.getSeq[Row](1).take(ef).map(c =>
+              Row(r.get(0), c.getLong(1)))
           }
           val (rr, rs) = beamRounds(edges, vecs, qL, b1, ef, hops - 1)
           s.createDataFrame(java.util.Arrays.asList(rr: _*), rs)
@@ -770,13 +762,13 @@ object GraphSearch {
     val entryNodes = entryDf.select($"node").collect()
     val qids = qL.select($"query_id").collect()
     var frontier = for (qr <- qids; en <- entryNodes)
-      yield org.apache.spark.sql.Row(qr.get(0), en.get(0))
+      yield Row(qr.get(0), en.get(0))
     for (layer <- upperLayers) {
       val (rows, _) = beamRounds(layerEdges(layer), vecs, qL, frontier,
         descentEf, descentHops)
       frontier = rows.flatMap { r =>
-        r.getSeq[org.apache.spark.sql.Row](1).map(c =>
-          org.apache.spark.sql.Row(r.get(0), c.getLong(1)))
+        r.getSeq[Row](1).map(c =>
+          Row(r.get(0), c.getLong(1)))
       }
     }
     val stored = stored0.select($"vec_id".as("node"), $"neighbor_id")

@@ -29,6 +29,18 @@ object IndexStore {
   def root: String = sys.props.getOrElse("graft.index.dir",
     new File(sys.props("java.io.tmpdir"), "graft-index").getPath)
 
+  /** `body` with [[root]] at `dir`, then the previous root back. The
+    * root is a JVM property: for a process that builds in one place at
+    * a time (a spec, the probe CLI). */
+  private[graft] def withRoot[T](dir: String)(body: => T): T = {
+    val prev = sys.props.get("graft.index.dir")
+    sys.props("graft.index.dir") = dir
+    try body finally prev match {
+      case Some(p) => sys.props("graft.index.dir") = p
+      case None => sys.props.remove("graft.index.dir")
+    }
+  }
+
   /** Build-recipe version, folded into every cache key: bump when an
     * index BUILD algorithm changes (e.g. the r8 hash-uniform training
     * sample; v4 = the population-bounded graph coarse store) so

@@ -1,10 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructType}
 
 import graft.GraftVector._
+import graft.Route
 
 /** Maximal-marginal-relevance diversified retrieval (Carbonell &
   * Goldstein 1998): a plain top-k returns k near-copies when the corpus
@@ -31,6 +33,15 @@ import graft.GraftVector._
   * engines share it exactly); max over selected sims is order-free.
   */
 object MmrSelect {
+
+  /** A batch of at most this many queries (× nCandidates candidate
+    * rows) runs the greedy rounds on the driver — the GraphSearch
+    * serving bound (key `mmr.driver`). Driver heap: a collected
+    * 64-d candidate row (query_id, cid, rel, cv) costs ~1.4 KB (boxed
+    * floats; SizeEstimator on sf0.01 embeddings), ~5.3 KB at 256-d,
+    * so 1024 queries × the entry's 30 candidates hold ≤ ~44 MB
+    * (≤ ~160 MB at 256-d). */
+  final val mmrDriverMaxQueries = GraphSearch.driverBeamMaxQ
 
   /** Greedy MMR over the top-`nCandidates` cosine candidates of each
     * query. Returns (query_id, rnk, vec_id, mmr_score) with
@@ -66,13 +77,11 @@ object MmrSelect {
     // sf0.1 wall (per-job walls: 38 jobs, more wall between jobs than in
     // them). Corpus-scaled query sets keep the distributed rounds: per
     // round the frame stays |queries|×nCandidates, queries scale out.
-    // The size probe is limit(max+1).collect() — when the batch is
-    // small, the probe IS the collect the driver path needs.
     // MmrPathLawSpec pins bit-equality on a forced-path pair.
-    val maxCand = GraphSearch.driverBeamMaxQ * nCandidates
-    val candHead = candPlan.limit(maxCand + 1).collect()
-    if (candHead.length <= maxCand)
-      return diversifyLocal(spark, candPlan.schema, candHead, k, lambda,
+    val local = Route.collectUpTo("mmr.driver", candPlan,
+      mmrDriverMaxQueries * nCandidates)
+    if (local.isDefined)
+      return diversifyLocal(spark, candPlan.schema, local.get, k, lambda,
         oneMinus)
 
     val cand = candPlan.localCheckpoint(true)
@@ -122,8 +131,7 @@ object MmrSelect {
     * final sort run through Catalyst on the bounded result frame, so
     * the output projection is shared code, not a replica. */
   private def diversifyLocal(spark: org.apache.spark.sql.SparkSession,
-      candSchema: org.apache.spark.sql.types.StructType,
-      candRows: Array[org.apache.spark.sql.Row], k: Int, lambda: Double,
+      candSchema: StructType, candRows: Array[Row], k: Int, lambda: Double,
       oneMinus: Double): DataFrame = {
     import spark.implicits._
     import graft.functions.VectorKernels
@@ -161,18 +169,12 @@ object MmrSelect {
           }
         }
         sel.iterator.zipWithIndex.map { case ((cid, _, score), i) =>
-          org.apache.spark.sql.Row(qid, (i + 1).toLong, cid, score)
+          Row(qid, (i + 1).toLong, cid, score)
         }
       }: _*)
     val qidType = candSchema("query_id").dataType
-    val outSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("query_id", qidType),
-      org.apache.spark.sql.types.StructField("rnk",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("cid",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("score",
-        org.apache.spark.sql.types.DoubleType)))
+    val outSchema = new StructType().add("query_id", qidType)
+      .add("rnk", LongType).add("cid", LongType).add("score", DoubleType)
     spark.createDataFrame(rows, outSchema)
       .select($"query_id", $"rnk", $"cid".as("vec_id"),
         round($"score", 4).as("mmr_score"))

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{GraftText, GraftVector}
+import graft.{GraftText, GraftVector, Route}
 import graft.GraftVector._
 import graft.Tables.load
 
@@ -269,6 +269,15 @@ object DedupQueries {
             GraftText.partSumHashes($"ws", $"np0").as("pa"))))))
   }
 
+  /** Batch key rows (doc_id, lang, na, np, p, ph) d_dedup_incremental
+    * still broadcasts to the corpus scan (key `dedup.incrBroadcast`);
+    * past it the slim key join shuffles. Driver heap: a key row costs
+    * ~165 B as a collected Row (SizeEstimator on sf0.01 documents) and
+    * 64 B in the broadcast's binary form (null bitmap, six 8-byte
+    * slots, the padded lang string), so a broadcast at the cap builds
+    * a ~0.5 GB relation on the driver, plus hash-table overhead. */
+  private[graft] final val incrBroadcastMaxKeyRows = 8_000_000L
+
   /** The UNORDERED-cache pre-checkpoint incremental-dedup plan + its
     * shared signature cache — factored so PlanSpec asserts the
     * production shape (the entry's eager checkpoint truncates the
@@ -343,7 +352,7 @@ object DedupQueries {
     //    never shuffles it: the slim exploded batch key set
     //    broadcasts to the corpus scan while its estimated row count
     //    (Σ np per batch doc, one bounded agg on the shared cache)
-    //    stays under graft.dedup.incrBroadcastMaxRows; past that the
+    //    stays under incrBroadcastMaxKeyRows; past that the
     //    hint drops and the key join shuffles both slim key streams —
     //    never the payload arrays (the r13 advice's ungated-broadcast
     //    fix).
@@ -378,8 +387,8 @@ object DedupQueries {
           .otherwise(lit(0L))))
       .head.get(0)).map(_.asInstanceOf[Long]).getOrElse(0L)
     val bKeysMaybeB =
-      if (bKeyRowsEst <= sys.props.get("graft.dedup.incrBroadcastMaxRows")
-          .flatMap(_.toLongOption).getOrElse(8_000_000L)) broadcast(bKeys)
+      if (Route.fits("dedup.incrBroadcast", bKeyRowsEst,
+          incrBroadcastMaxKeyRows)) broadcast(bKeys)
       else bKeys
     // the candidate stream is SLIM — keys and lengths only, no word
     // arrays: the fan-out is the quadratic-shaped mass, so every byte

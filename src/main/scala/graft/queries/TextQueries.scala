@@ -1,9 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
+import graft.Route
 import graft.Tables.load
 
 /** Text-analysis operators over `documents` — the quality/filter stage of
@@ -100,37 +102,32 @@ object TextQueries {
     // round). The probe IS the collect: limit(max+1) on materialized
     // blocks. QualityPathLawSpec pins the two paths identical.
     val feats = perceptronFeats(docsIn).localCheckpoint(true)
-    val maxDocs = qualityDriverMaxDocs
-    val head = feats.limit(maxDocs + 1).collect()
-    if (head.length <= maxDocs) {
-      val ds = decodePerceptronFeats(head)
-      val w = perceptronTrainLocal(ds, rounds)
-      val rows = java.util.Arrays.asList(ds.map { d =>
-        var sc = 0L
-        var i = 0
-        while (i < d.bkts.length) { sc += d.ms(i) * w(d.bkts(i)); i += 1 }
-        org.apache.spark.sql.Row(d.docId, sc, sc > 0L, d.y == 1L)
-      }: _*)
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("score",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("pred_hq",
-          org.apache.spark.sql.types.BooleanType),
-        org.apache.spark.sql.types.StructField("is_hq",
-          org.apache.spark.sql.types.BooleanType)))
-      s.createDataFrame(rows, schema)
-    } else {
-      val w = perceptronTrainOnFeats(feats, rounds)
-      feats.select($"doc_id", perceptronScoreCol(w).as("score"),
-        (perceptronScoreCol(w) > 0L).as("pred_hq"), ($"y" === 1L).as("is_hq"))
+    Route.collectUpTo("quality.driver", feats, qualityDriverMaxDocs) match {
+      case Some(head) =>
+        val ds = decodePerceptronFeats(head)
+        val w = perceptronTrainLocal(ds, rounds)
+        val rows = java.util.Arrays.asList(ds.map { d =>
+          var sc = 0L
+          var i = 0
+          while (i < d.bkts.length) { sc += d.ms(i) * w(d.bkts(i)); i += 1 }
+          Row(d.docId, sc, sc > 0L, d.y == 1L)
+        }: _*)
+        s.createDataFrame(rows, StructType.fromDDL(
+          "doc_id BIGINT, score BIGINT, pred_hq BOOLEAN, is_hq BOOLEAN"))
+      case None =>
+        val w = perceptronTrainOnFeats(feats, rounds)
+        feats.select($"doc_id", perceptronScoreCol(w).as("score"),
+          (perceptronScoreCol(w) > 0L).as("pred_hq"), ($"y" === 1L).as("is_hq"))
     }
   }
 
-  private def qualityDriverMaxDocs: Int =
-    sys.props.get("graft.quality.driverMaxDocs")
-      .flatMap(_.toIntOption).getOrElse(1_000_000)
+  /** Feature rows the perceptron trains on in driver memory (key
+    * `quality.driver`); past it the rounds run distributed. Driver
+    * heap: a collected feature row (doc_id, y, ≤ 65 (bucket, count)
+    * structs) costs ~1.1 KB (SizeEstimator on sf0.01 documents), so the
+    * threshold allows ~1.1 GB of collected rows, plus their decoded
+    * primitive copies while the rounds run. */
+  private[graft] final val qualityDriverMaxDocs = 1_000_000
 
   /** Decoded (doc_id, y, sparse bucket counts) feature row — the driver
     * twin's working form. docId stays boxed/untyped so a null rides
@@ -140,9 +137,9 @@ object TextQueries {
       bkts: Array[Int], ms: Array[Long])
 
   private def decodePerceptronFeats(
-      rows: Array[org.apache.spark.sql.Row]): Array[PFeat] =
+      rows: Array[Row]): Array[PFeat] =
     rows.map { r =>
-      val fs = r.getSeq[org.apache.spark.sql.Row](2)
+      val fs = r.getSeq[Row](2)
       val bk = new Array[Int](fs.length)
       val ms = new Array[Long](fs.length)
       var i = 0
@@ -233,10 +230,9 @@ object TextQueries {
     * by the same doc-count law as [[perceptronQuality]]. */
   private[graft] def perceptronTrain(docsIn: DataFrame, rounds: Int): Array[Long] = {
     val feats = perceptronFeats(docsIn).localCheckpoint(true)
-    val maxDocs = qualityDriverMaxDocs
-    val head = feats.limit(maxDocs + 1).collect()
-    if (head.length <= maxDocs) perceptronTrainLocal(decodePerceptronFeats(head), rounds)
-    else perceptronTrainOnFeats(feats, rounds)
+    Route.collectUpTo("quality.driver", feats, qualityDriverMaxDocs)
+      .fold(perceptronTrainOnFeats(feats, rounds))(
+        head => perceptronTrainLocal(decodePerceptronFeats(head), rounds))
   }
 
   /** FROZEN-model inference: score (doc_id, text) rows against an
@@ -1177,12 +1173,16 @@ object TextQueries {
       // paths bit-identical; the probe is limit(max+1) on the already-
       // checkpointed edge store, so the driver path's collect reads
       // materialized rows.
-      val maxEdges = sys.props.get("graft.textrank.driverMaxEdges")
-        .flatMap(_.toIntOption).getOrElse(1_000_000)
-      val ewHead = ew.limit(maxEdges + 1).collect()
-      if (ewHead.length <= maxEdges) textrankLocal(s, ewHead)
-      else textrankDistributed(s, ew)
+      Route.collectUpTo("textrank.driver", ew, textrankDriverMaxEdges)
+        .fold(textrankDistributed(s, ew))(textrankLocal(s, _))
     })) ++ textQueriesRest
+
+  /** Co-occurrence edges t_textrank ranks in driver memory (key
+    * `textrank.driver`); past it the rounds run distributed. Driver
+    * heap: a collected (src, dst, w, wdeg) edge row costs ~180 B
+    * (SizeEstimator on sf0.01 documents), so the threshold allows
+    * ~180 MB of collected rows. */
+  private[graft] final val textrankDriverMaxEdges = 1_000_000
 
   /** The distributed 8-round damped power iteration over a checkpointed
     * (src, dst, w, wdeg) edge frame — the corpus-scaled path of the
@@ -1255,7 +1255,7 @@ object TextQueries {
     * ranking runs through Catalyst, not a replica.
     * TextrankPathLawSpec pins both paths bit-identical. */
   private[graft] def textrankLocal(s: SparkSession,
-      ewRows: Array[org.apache.spark.sql.Row]): DataFrame = {
+      ewRows: Array[Row]): DataFrame = {
     import s.implicits._
     // (src, dst, w, wdeg); sort_array on struct(src, term) orders by
     // the UTF8String binary comparator — unsigned byte order
@@ -1310,12 +1310,8 @@ object TextQueries {
       }.toMap
     }
     val rows = java.util.Arrays.asList(
-      r.toSeq.map { case (t, v) => org.apache.spark.sql.Row(t, v) }: _*)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("token",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("r",
-        org.apache.spark.sql.types.DoubleType)))
+      r.toSeq.map { case (t, v) => Row(t, v) }: _*)
+    val schema = StructType.fromDDL("token STRING, r DOUBLE")
     textrankTop(s.createDataFrame(rows, schema))
   }
 

@@ -1,7 +1,8 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Thin bridge into Spark's `private[sql]` Column <-> Expression APIs.
@@ -44,6 +45,23 @@ object Shims {
     * listeners (the listener bus is `private[spark]`). */
   def drainListeners(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** A clone of `spark` (same context and caches, a copy of its
+    * runtime conf) with `conf` set on the clone alone. Frames moved
+    * onto it with [[onSession]] plan under that conf while `spark`,
+    * which concurrent queries may share, keeps its own. */
+  def cloneWith(spark: SparkSession, conf: (String, String)*): SparkSession = {
+    val c = spark.asInstanceOf[classic.SparkSession].cloneSession()
+    conf.foreach { case (k, v) => c.conf.set(k, v) }
+    c
+  }
+
+  /** `df`'s plan as a frame of session `s`: every frame derived from
+    * it is planned under `s`'s conf. */
+  def onSession(s: SparkSession, df: DataFrame): DataFrame =
+    if (df.sparkSession eq s) df
+    else classic.Dataset.ofRows(s.asInstanceOf[classic.SparkSession],
+      df.asInstanceOf[classic.Dataset[Row]].logicalPlan)
 
   /** Apply an extensions object's injected functions to a LIVE session —
     * `withExtensions` only takes effect for newly built sessions, so this

@@ -31,17 +31,6 @@ class AqePlanSpec extends SparkSpec {
     "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "64k",
     "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2")
 
-  private def withSQLConf[T](pairs: Seq[(String, String)])(f: => T): T = {
-    val conf = spark.conf
-    val olds = pairs.map { case (k, _) => k -> conf.getOption(k) }
-    pairs.foreach { case (k, v) => conf.set(k, v) }
-    try f
-    finally olds.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None) => conf.unset(k)
-    }
-  }
-
   /** Execute the frame, then return its FINAL adaptive plan string. */
   private def finalPlan(df: DataFrame): String = {
     df.collect()
@@ -53,7 +42,7 @@ class AqePlanSpec extends SparkSpec {
 
   test("salted join keys survive AQE skew-join + coalescing (and rows stay right)") {
     withSQLConf(AqeConf :+
-        ("spark.sql.autoBroadcastJoinThreshold" -> "-1")) {
+        ("spark.sql.autoBroadcastJoinThreshold" -> "-1"): _*) {
       spark.catalog.clearCache()
       val events = Tables.load(spark, sfDir, "events")
       val dim = events.groupBy($"event_type")
@@ -74,7 +63,7 @@ class AqePlanSpec extends SparkSpec {
   }
 
   test("bloom probe stays below the join under AQE") {
-    withSQLConf(AqeConf) {
+    withSQLConf(AqeConf: _*) {
       spark.catalog.clearCache()
       val df = AnalyticsQueries.all("q_bloom_join")(spark, sfDir)
       // the prune-before-shuffle contract lives in the optimized plan;
@@ -89,7 +78,7 @@ class AqePlanSpec extends SparkSpec {
   }
 
   test("IVF pruned scan keeps its partition filters under AQE") {
-    withSQLConf(AqeConf) {
+    withSQLConf(AqeConf: _*) {
       spark.catalog.clearCache()
       val dir = graft.operators.IndexStore.ivf(spark, sfDir, k = 16)
       val probed = spark.read.parquet(s"$dir/assignments")
@@ -110,7 +99,7 @@ class AqePlanSpec extends SparkSpec {
   }
 
   test("AQE coalescing actively rewrites at these thresholds (audit is live)") {
-    withSQLConf(AqeConf) {
+    withSQLConf(AqeConf: _*) {
       spark.catalog.clearCache()
       val df = Tables.load(spark, sfDir, "events")
         .groupBy($"event_type").agg(count(lit(1)).as("n"))

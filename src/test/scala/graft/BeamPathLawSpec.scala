@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{GraphSearch, IndexStore}
 
-/** The beam engine's |Q| routing law (graft.beam.driverMaxQ): a batch
+/** The beam engine's |Q| routing law (key `beam.driver`): a batch
   * at or under the threshold runs the DRIVER-RESIDENT rounds, a larger
   * batch runs the DISTRIBUTED TopKByScore rounds — and the two paths
   * are bit-identical on the same input, because both implement the
@@ -20,22 +20,8 @@ import graft.operators.{GraphSearch, IndexStore}
 class BeamPathLawSpec extends SparkSpec {
   import spark.implicits._
 
-  private lazy val fixtureDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-beamlaw-spec")
-      .toString
-    val rnd = new scala.util.Random(77)
-    val centers = Array.fill(8)(Array.fill(64)(rnd.nextGaussian().toFloat * 3f))
-    val rows = (0 until 400).map { i =>
-      val c = centers(i % 8)
-      (i.toLong, c.map(v => v + rnd.nextGaussian().toFloat * 0.3f).toSeq,
-        (i % 4).toInt)
-    }
-    rows.toDF("vec_id", "embedding", "label")
-      .select($"vec_id", $"embedding".cast("array<float>").as("embedding"),
-        $"label")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    dir
-  }
+  private lazy val fixtureDir: String =
+    PlantedClusters.sfDir("graft-beamlaw-spec", seed = 77)
 
   private lazy val emb: DataFrame =
     spark.read.parquet(s"$fixtureDir/embeddings.parquet")
@@ -45,29 +31,30 @@ class BeamPathLawSpec extends SparkSpec {
   private lazy val queries = emb.filter($"vec_id" < 40)
     .select($"vec_id".as("query_id"), $"embedding".as("qv"))
 
-  private def searchRows(maxQ: Int): Seq[(Long, Long, Long, Double)] = {
+  private def searchRows(): Seq[(Long, Long, Long, Double)] = {
     val ivfDir = IndexStore.ivf(spark, fixtureDir)
     val gDir = IndexStore.knnGraph(spark, fixtureDir)
-    val prev = sys.props.get("graft.beam.driverMaxQ")
-    sys.props("graft.beam.driverMaxQ") = maxQ.toString
-    try GraphSearch.search(spark, ivfDir, gDir, emb, queries,
+    GraphSearch.search(spark, ivfDir, gDir, emb, queries,
         k = 5, ef = 16, hops = 3)
       .select($"query_id", $"neighbor_id", $"rnk", $"dist")
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
       .toSeq.sorted
-    finally prev match {
-      case Some(v) => sys.props("graft.beam.driverMaxQ") = v
-      case None => sys.props.remove("graft.beam.driverMaxQ")
-    }
   }
 
   test("driver and distributed beam paths are bit-identical (40 queries, forced routing)") {
-    // maxQ=1000 ⇒ 40 ≤ 1000: driver-resident; maxQ=1 ⇒ 40 > 1: distributed
-    val driver = searchRows(maxQ = 1000)
-    val dist = searchRows(maxQ = 1)
+    val (driver, dist) = onBothSides("beam.driver")(searchRows())
     assert(driver.nonEmpty)
     assert(driver === dist)
+  }
+
+  test("distributed beam rounds without broadcast hints match the hinted ones") {
+    // the no-hint side is taken only past 50 M beam rows, which no
+    // bench or fixture reaches: force it on the same 40 queries
+    val (hinted, shuffled) = Route.forcing("beam.driver", Route.Large)(
+      onBothSides("beam.broadcast")(searchRows()))
+    assert(hinted.nonEmpty)
+    assert(hinted === shuffled)
   }
 
   test("default threshold covers serving batches and routes corpus-scaled batches away") {

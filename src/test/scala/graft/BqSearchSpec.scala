@@ -18,17 +18,8 @@ class BqSearchSpec extends SparkSpec {
   import spark.implicits._
 
   /** Same planted-cluster fixture as ClusteredRecallSpec/RpSearchSpec. */
-  private lazy val clustered: DataFrame = {
-    val rnd = new scala.util.Random(123)
-    val centers = Array.fill(8)(Array.fill(64)(rnd.nextGaussian().toFloat * 3f))
-    val rows = (0 until 400).map { i =>
-      val c = centers(i % 8)
-      (i.toLong, c.map(v => v + rnd.nextGaussian().toFloat * 0.3f).toSeq)
-    }
-    rows.toDF("vec_id", "embedding")
-      .select($"vec_id", $"embedding".cast("array<float>").as("embedding"))
-      .cache()
-  }
+  private lazy val clustered: DataFrame =
+    PlantedClusters.frame(seed = 123).drop("label").cache()
 
   private lazy val queries = clustered.filter($"vec_id" < 16)
     .select($"vec_id".as("query_id"), $"embedding".as("qv"))

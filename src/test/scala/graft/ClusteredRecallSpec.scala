@@ -17,17 +17,8 @@ class ClusteredRecallSpec extends SparkSpec {
   import spark.implicits._
 
   /** 8 well-separated Gaussian clusters, 50 points each, dim 64. */
-  private lazy val clustered: DataFrame = {
-    val rnd = new scala.util.Random(123)
-    val centers = Array.fill(8)(Array.fill(64)(rnd.nextGaussian().toFloat * 3f))
-    val rows = (0 until 400).map { i =>
-      val c = centers(i % 8)
-      (i.toLong, c.map(v => v + rnd.nextGaussian().toFloat * 0.3f).toSeq)
-    }
-    rows.toDF("vec_id", "embedding")
-      .select($"vec_id", $"embedding".cast("array<float>").as("embedding"))
-      .cache()
-  }
+  private lazy val clustered: DataFrame =
+    PlantedClusters.frame(seed = 123).drop("label").cache()
 
   private lazy val queries = clustered.filter($"vec_id" < 16)
     .select($"vec_id".as("query_id"), $"embedding".as("qv"))

@@ -130,6 +130,48 @@ class ComponentsSpec extends SparkSpec {
     assert(run(0) === run(1 << 20))
   }
 
+  test("a widened contraction loop never changes the caller's shuffle width") {
+    // edgesPerTask = 1 widens the loop to |edges| + 1 partitions, a
+    // branch no sf0.1 entry takes; the caller's session (here the
+    // shared spec session) must read its own width throughout
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import scala.concurrent.{Await, Future, ExecutionContext}
+    import scala.concurrent.duration.Duration
+    val key = "spark.sql.shuffle.partitions"
+    val callerSp = spark.conf.get(key)
+    val nodes = (0L until 200L).toDF("id")
+    val edges = (1L until 200L).filter(_ % 10 != 0).map(i => (i - 1, i))
+      .toDF("a", "b")
+    def run(perTask: Long) = ConnectedComponents.minLabelBounded(
+        nodes, "id", edges, "a", "b", maxIter = 20, smallFinish = 0,
+        validateNodes = true, trustedEndpoints = false, edgesPerTask = perTask)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val planned = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          s.modifiedConfigs.get(key).foreach(planned.add)
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val seen = scala.collection.mutable.Set(callerSp)
+    val widened = try {
+      val f = Future(run(1L))(ExecutionContext.global)
+      while (!f.isCompleted) { seen += spark.conf.get(key); Thread.sleep(1) }
+      Await.result(f, Duration.Inf)
+    } finally {
+      org.apache.spark.sql.graft.Shims.drainListeners(spark)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(seen === Set(callerSp))
+    assert(planned.contains((edges.count() + 1).toString),
+      s"no plan ran at the widened width: $planned")
+    assert(widened.values.toSet.size === 20)
+    assert(widened === run(ConnectedComponents.edgesPerTask))
+  }
+
   test("d_dedup_cluster: every verified pair is intra-cluster, and chains merge") {
     val clusters = DedupQueries.all("d_dedup_cluster")(spark, sfDir)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

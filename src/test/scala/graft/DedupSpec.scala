@@ -242,6 +242,18 @@ class DedupSpec extends SparkSpec {
       "fixture must contain at least one dup for the law to bite")
   }
 
+  test("d_dedup_incremental: the shuffled batch-key join matches the broadcast one") {
+    // the shuffled side is taken only past 8 M batch key rows, which no
+    // bench or fixture reaches; at this size the broadcast side is the
+    // default run
+    val (hinted, shuffled) = onBothSides("dedup.incrBroadcast")(
+      DedupQueries.all("d_dedup_incremental")(spark, sfDir).collect()
+        .map(r => (r.getLong(0), Option(r.get(1)), r.getString(2)))
+        .toSeq.sortBy(_._1))
+    assert(hinted.exists(_._3 != "unique"))
+    assert(hinted === shuffled)
+  }
+
   test("d_dedup_incremental: a 100x-length outlier cannot inflate other docs' signature cost") {
     import spark.implicits._
     import java.nio.file.Files

@@ -43,14 +43,7 @@ class EmbedLshSpec extends SparkSpec {
 
   test("multiprobe strictly dominates single-probe recall (superset law)") {
     // clustered fixture: the workload where bucket collisions carry signal
-    val rnd = new scala.util.Random(123)
-    val centers = Array.fill(8)(Array.fill(64)(rnd.nextGaussian().toFloat * 3f))
-    val e = (0 until 400).map { i =>
-      val c = centers(i % 8)
-      (i.toLong, c.map(v => v + rnd.nextGaussian().toFloat * 0.3f).toSeq)
-    }.toDF("vec_id", "embedding")
-      .select($"vec_id", $"embedding".cast("array<float>").as("embedding"))
-      .cache()
+    val e = PlantedClusters.frame(seed = 123).drop("label").cache()
     val q = e.filter($"vec_id" < 16)
       .select($"vec_id".as("query_id"), $"embedding".as("qv"))
     val gt = e.crossJoin(broadcast(q))

@@ -17,22 +17,8 @@ class GraphSearchSpec extends SparkSpec {
   /** A self-contained sf-dir fixture: 8 well-separated Gaussian
     * clusters, 50 points each, dim 64, written as embeddings.parquet so
     * the IndexStore build/serve path runs exactly as in production. */
-  private lazy val fixtureDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-graph-spec")
-      .toString
-    val rnd = new scala.util.Random(321)
-    val centers = Array.fill(8)(Array.fill(64)(rnd.nextGaussian().toFloat * 3f))
-    val rows = (0 until 400).map { i =>
-      val c = centers(i % 8)
-      (i.toLong, c.map(v => v + rnd.nextGaussian().toFloat * 0.3f).toSeq,
-        (i % 4).toInt)
-    }
-    rows.toDF("vec_id", "embedding", "label")
-      .select($"vec_id", $"embedding".cast("array<float>").as("embedding"),
-        $"label")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    dir
-  }
+  private lazy val fixtureDir: String =
+    PlantedClusters.sfDir("graft-graph-spec", seed = 321)
 
   private lazy val emb: DataFrame =
     spark.read.parquet(s"$fixtureDir/embeddings.parquet")

@@ -13,22 +13,8 @@ import graft.operators.{GraphSearch, IndexStore}
 class HnswMaintenanceSpec extends SparkSpec {
   import spark.implicits._
 
-  private lazy val fixtureDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-hnswmnt-spec")
-      .toString
-    val rnd = new scala.util.Random(987)
-    val centers = Array.fill(8)(Array.fill(64)(rnd.nextGaussian().toFloat * 3f))
-    val rows = (0 until 400).map { i =>
-      val c = centers(i % 8)
-      (i.toLong, c.map(v => v + rnd.nextGaussian().toFloat * 0.3f).toSeq,
-        (i % 4).toInt)
-    }
-    rows.toDF("vec_id", "embedding", "label")
-      .select($"vec_id", $"embedding".cast("array<float>").as("embedding"),
-        $"label")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    dir
-  }
+  private lazy val fixtureDir: String =
+    PlantedClusters.sfDir("graft-hnswmnt-spec", seed = 987)
 
   private val DelMod = 17
   private val DelRes = 5

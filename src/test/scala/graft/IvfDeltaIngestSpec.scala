@@ -14,15 +14,9 @@ class IvfDeltaIngestSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshIndex(): String = {
-    val prev = sys.props.get("graft.index.dir")
-    sys.props("graft.index.dir") = "target/tmp-ivf-delta"
     FileUtils.deleteQuietly(new java.io.File("target/tmp-ivf-delta"))
-    val dir = IndexStore.ivf(spark, sfDir, k = 8)
-    prev match {
-      case Some(p) => sys.props("graft.index.dir") = p
-      case None => sys.props.remove("graft.index.dir")
-    }
-    dir
+    IndexStore.withRoot("target/tmp-ivf-delta")(
+      IndexStore.ivf(spark, sfDir, k = 8))
   }
 
   test("streamed deltas land partition-pruned and are immediately searchable") {

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.IvfIndex
+import graft.operators.{IndexStore, IvfIndex}
 
 /** The §3 claim made concrete: IVF assignments written
   * `partitionBy(cluster_id)` give nprobe searches physical partition
@@ -36,9 +36,7 @@ class IvfPartitionPruningSpec extends SparkSpec {
   }
 
   test("filtered search: label predicate pushes into the pruned scan; pre-filter fills to k") {
-    val prev = sys.props.get("graft.index.dir")
-    sys.props("graft.index.dir") = "target/tmp-ivf-store"
-    try {
+    IndexStore.withRoot("target/tmp-ivf-store") {
       val df = graft.queries.IndexQueries.all("v_ivf_filtered")(spark, sfDir)
       val plan = df.queryExecution.executedPlan.toString
       // both prunings visible on the same scan: cluster partitions at the
@@ -58,18 +56,11 @@ class IvfPartitionPruningSpec extends SparkSpec {
         .map(r => r.getLong(0) -> r.getInt(1)).toMap
       assert(rows.forall(r => Set(1, 2, 3)(e(r.getLong(1)))),
         "a result escaped the label predicate")
-    } finally {
-      prev match {
-        case Some(p) => sys.props("graft.index.dir") = p
-        case None => sys.props.remove("graft.index.dir")
-      }
     }
   }
 
   test("the new index family inherits the pruning: mips and residual lists scans are partition-filtered") {
-    val prev = sys.props.get("graft.index.dir")
-    sys.props("graft.index.dir") = "target/tmp-ivf-store"
-    try {
+    IndexStore.withRoot("target/tmp-ivf-store") {
       for (name <- Seq("v_mips_ivf", "v_ivfpq_residual")) {
         val df = graft.queries.IndexQueries.all(name)(spark, sfDir)
         val plan = df.queryExecution.executedPlan.toString
@@ -78,20 +69,13 @@ class IvfPartitionPruningSpec extends SparkSpec {
           s"$name: cluster_id not in partition filters:\n$plan")
         assert(df.collect().map(_.getLong(0)).distinct.length === 8)
       }
-    } finally {
-      prev match {
-        case Some(p) => sys.props("graft.index.dir") = p
-        case None => sys.props.remove("graft.index.dir")
-      }
     }
   }
 
   test("v_ivf_search operator itself runs partition-pruned against the persisted index") {
     // hermetic store location for the test
-    val prev = sys.props.get("graft.index.dir")
-    sys.props("graft.index.dir") = "target/tmp-ivf-store"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File("target/tmp-ivf-store"))
-    try {
+    IndexStore.withRoot("target/tmp-ivf-store") {
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File("target/tmp-ivf-store"))
       val df = graft.queries.IndexQueries.all("v_ivf_search")(spark, sfDir)
       val plan = df.queryExecution.executedPlan.toString
       // the probed cluster ids must appear as literal partition filters on
@@ -104,11 +88,6 @@ class IvfPartitionPruningSpec extends SparkSpec {
       val rows = df.collect()
       assert(rows.length === 8 * 10)
       assert(rows.map(_.getLong(0)).distinct.length === 8)
-    } finally {
-      prev match {
-        case Some(p) => sys.props("graft.index.dir") = p
-        case None => sys.props.remove("graft.index.dir")
-      }
     }
   }
 }

@@ -14,14 +14,8 @@ class IvfPqDeltaSpec extends SparkSpec {
   import spark.implicits._
 
   private def withStore[T](f: => T): T = {
-    val prev = sys.props.get("graft.index.dir")
-    sys.props("graft.index.dir") = "target/tmp-ivfpq-delta"
-    org.apache.commons.io.FileUtils.deleteQuietly(
-      new java.io.File("target/tmp-ivfpq-delta"))
-    try f finally prev match {
-      case Some(p) => sys.props("graft.index.dir") = p
-      case None => sys.props.remove("graft.index.dir")
-    }
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File("target/tmp-ivfpq-delta"))
+    graft.operators.IndexStore.withRoot("target/tmp-ivfpq-delta")(f)
   }
 
   test("streamed update shadows stale codes and serves at exact distance") {

@@ -12,14 +12,8 @@ class IvfPqSpec extends SparkSpec {
   import spark.implicits._
 
   private def withStore[T](f: => T): T = {
-    val prev = sys.props.get("graft.index.dir")
-    sys.props("graft.index.dir") = "target/tmp-ivfpq-store"
-    org.apache.commons.io.FileUtils.deleteQuietly(
-      new java.io.File("target/tmp-ivfpq-store"))
-    try f finally prev match {
-      case Some(p) => sys.props("graft.index.dir") = p
-      case None => sys.props.remove("graft.index.dir")
-    }
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File("target/tmp-ivfpq-store"))
+    graft.operators.IndexStore.withRoot("target/tmp-ivfpq-store")(f)
   }
 
   test("ivfpq search == component PQ ranking restricted to probed clusters") {

@@ -13,22 +13,8 @@ import graft.operators.{IndexStore, IvfIndex}
 class MipsIvfSpec extends SparkSpec {
   import spark.implicits._
 
-  private lazy val fixtureDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-mips-spec")
-      .toString
-    val rnd = new scala.util.Random(321)
-    val centers = Array.fill(8)(Array.fill(64)(rnd.nextGaussian().toFloat * 3f))
-    val rows = (0 until 400).map { i =>
-      val c = centers(i % 8)
-      (i.toLong, c.map(v => v + rnd.nextGaussian().toFloat * 0.3f).toSeq,
-        (i % 4).toInt)
-    }
-    rows.toDF("vec_id", "embedding", "label")
-      .select($"vec_id", $"embedding".cast("array<float>").as("embedding"),
-        $"label")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    dir
-  }
+  private lazy val fixtureDir: String =
+    PlantedClusters.sfDir("graft-mips-spec", seed = 321)
 
   private lazy val emb: DataFrame =
     spark.read.parquet(s"$fixtureDir/embeddings.parquet")

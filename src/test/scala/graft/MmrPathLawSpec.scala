@@ -33,27 +33,18 @@ class MmrPathLawSpec extends SparkSpec {
       .cache()
   }
 
-  private def mmrRows(maxQ: Int): Seq[(Long, Long, Long, Double)] = {
+  private def mmrRows(): Seq[(Long, Long, Long, Double)] = {
     val queries = emb.filter($"vec_id" < 6)
       .select($"vec_id".as("query_id"), $"embedding".as("qv"))
-    val prev = sys.props.get("graft.beam.driverMaxQ")
-    sys.props("graft.beam.driverMaxQ") = maxQ.toString
-    try MmrSelect.diversify(emb, "vec_id", "embedding", queries,
+    MmrSelect.diversify(emb, "vec_id", "embedding", queries,
         nCandidates = 12, k = 5, lambda = 0.7)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
       .toSeq.sorted
-    finally prev match {
-      case Some(v) => sys.props("graft.beam.driverMaxQ") = v
-      case None => sys.props.remove("graft.beam.driverMaxQ")
-    }
   }
 
   test("driver and distributed MMR rounds are bit-identical (forced routing)") {
-    // maxQ=1000 ⇒ 6·12 = 72 ≤ 12000 candidate cap: driver path;
-    // maxQ=0 ⇒ cap 0 < 72: distributed rounds
-    val driver = mmrRows(maxQ = 1000)
-    val dist = mmrRows(maxQ = 0)
+    val (driver, dist) = onBothSides("mmr.driver")(mmrRows())
     assert(driver.nonEmpty)
     assert(driver.map(_._1).distinct.size === 6)
     assert(driver === dist)

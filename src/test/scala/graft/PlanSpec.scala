@@ -283,9 +283,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("v_pq_search reads the persisted codes table (search, not training)") {
-    val prev = sys.props.get("graft.index.dir")
-    sys.props("graft.index.dir") = "target/tmp-plan-store"
-    try {
+    graft.operators.IndexStore.withRoot("target/tmp-plan-store") {
       spark.catalog.clearCache()
       val df = graft.queries.IndexQueries.all("v_pq_search")(spark, sfDir)
       val inputs = df.inputFiles.toSeq
@@ -293,11 +291,6 @@ class PlanSpec extends SparkSpec {
         s"plan must scan persisted codes: $inputs")
       assert(inputs.exists(_.contains("/codebooks/")),
         s"plan must scan persisted codebooks: $inputs")
-    } finally {
-      prev match {
-        case Some(v) => sys.props("graft.index.dir") = v
-        case None => sys.props.remove("graft.index.dir")
-      }
     }
   }
 

@@ -10,38 +10,22 @@ package graft
   * path to it. */
 class QualityPathLawSpec extends SparkSpec {
 
-  private def classifierRows(maxDocs: Int): Seq[(Long, Long, Boolean, Boolean)] = {
-    val prev = sys.props.get("graft.quality.driverMaxDocs")
-    sys.props("graft.quality.driverMaxDocs") = maxDocs.toString
-    try graft.queries.TextQueries.all("t_quality_classifier")(spark, sfDir)
+  private def classifierRows(): Seq[(Long, Long, Boolean, Boolean)] =
+    graft.queries.TextQueries.all("t_quality_classifier")(spark, sfDir)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2), r.getBoolean(3)))
       .toSeq
-    finally prev match {
-      case Some(v) => sys.props("graft.quality.driverMaxDocs") = v
-      case None => sys.props.remove("graft.quality.driverMaxDocs")
-    }
-  }
 
   test("driver and distributed perceptron rounds are identical (forced routing)") {
-    // maxDocs huge ⇒ driver path; maxDocs=0 ⇒ distributed rounds
-    val driver = classifierRows(maxDocs = 50_000_000)
-    val dist = classifierRows(maxDocs = 0)
+    val (driver, dist) = onBothSides("quality.driver")(classifierRows())
     assert(driver.nonEmpty)
     assert(driver === dist)
   }
 
   test("perceptronTrain routes to the same weight vector both ways") {
     val docs = graft.Tables.load(spark, sfDir, "documents")
-    def weights(maxDocs: Int): Seq[Long] = {
-      val prev = sys.props.get("graft.quality.driverMaxDocs")
-      sys.props("graft.quality.driverMaxDocs") = maxDocs.toString
-      try graft.queries.TextQueries.perceptronTrain(docs, rounds = 6).toSeq
-      finally prev match {
-        case Some(v) => sys.props("graft.quality.driverMaxDocs") = v
-        case None => sys.props.remove("graft.quality.driverMaxDocs")
-      }
-    }
-    assert(weights(50_000_000) === weights(0))
+    val (driver, dist) = onBothSides("quality.driver")(
+      graft.queries.TextQueries.perceptronTrain(docs, rounds = 6).toSeq)
+    assert(driver === dist)
   }
 }

@@ -51,14 +51,4 @@ class SaltingSpec extends SparkSpec {
       .orderBy("event_type").collect().map(r => (r.getString(0), r.getLong(1)))
     assert(salted.toSeq === plain.toSeq)
   }
-
-  private def withSQLConf[T](pairs: (String, String)*)(f: => T): T = {
-    val conf = spark.conf
-    val olds = pairs.map { case (k, _) => k -> conf.getOption(k) }
-    pairs.foreach { case (k, v) => conf.set(k, v) }
-    try f finally olds.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None) => conf.unset(k)
-    }
-  }
 }

@@ -15,4 +15,29 @@ object TestSpark {
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   val sfDir = "/root/testdata/sf0.001"
+
+  /** `f` with the shared session's `pairs` set, then the previous values
+    * back (specs run one at a time). */
+  def withSQLConf[T](pairs: (String, String)*)(f: => T): T = {
+    val conf = spark.conf
+    val olds = pairs.map { case (k, _) => k -> conf.getOption(k) }
+    pairs.foreach { case (k, v) => conf.set(k, v) }
+    try f finally olds.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+  }
+
+  /** `body` run with `key` forced to [[Route.Small]], then to
+    * [[Route.Large]]; fails unless each run decided `key` on the side it
+    * forced, so a law comparing the two results compares two branches. */
+  def onBothSides[T](key: String)(body: => T): (T, T) = {
+    def run(side: Route.Side): T = {
+      val before = Route.taken(key)(side)
+      val out = Route.forcing(key, side)(body)
+      assert(Route.taken(key)(side) > before, s"no $side decision on $key")
+      out
+    }
+    (run(Route.Small), run(Route.Large))
+  }
 }

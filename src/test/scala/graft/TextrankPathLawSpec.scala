@@ -10,23 +10,14 @@ package graft
   * the distributed form; the law ties the driver path to it. */
 class TextrankPathLawSpec extends SparkSpec {
 
-  private def rankRows(maxEdges: Int): Seq[(Long, String, Double)] = {
-    val prev = sys.props.get("graft.textrank.driverMaxEdges")
-    sys.props("graft.textrank.driverMaxEdges") = maxEdges.toString
-    try graft.queries.TextQueries.all("t_textrank")(spark, sfDir)
+  private def rankRows(): Seq[(Long, String, Double)] =
+    graft.queries.TextQueries.all("t_textrank")(spark, sfDir)
       .collect()
       .map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
       .toSeq
-    finally prev match {
-      case Some(v) => sys.props("graft.textrank.driverMaxEdges") = v
-      case None => sys.props.remove("graft.textrank.driverMaxEdges")
-    }
-  }
 
   test("driver and distributed textrank rounds are bit-identical (forced routing)") {
-    // maxEdges huge ⇒ driver path; maxEdges=0 ⇒ distributed rounds
-    val driver = rankRows(maxEdges = 50_000_000)
-    val dist = rankRows(maxEdges = 0)
+    val (driver, dist) = onBothSides("textrank.driver")(rankRows())
     assert(driver.size === 20)
     assert(driver === dist)
   }
