@@ -321,7 +321,7 @@ object Bench {
     * QPS, request p99 — plus the WHERE-the-wall-went split from
     * [[graft.streaming.IngestServer.splitStats]]: group-commit batches
     * formed, mean per-request queue wait (batch formation), and mean
-    * per-batch commit-job wall (IVF assignment + the two appends). */
+    * per-batch commit wall (IVF assignment + the delta-log append). */
   final case class InsertPoint(clients: Int, inserts: Int, sec: Double,
       qps: Double, p99Ms: Double, batches: Long, queueWaitMsMean: Double,
       commitMsMean: Double)

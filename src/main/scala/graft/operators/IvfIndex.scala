@@ -181,9 +181,9 @@ object IvfIndex {
       .filter($"cluster_id".isin(probeIds.map(i => i: Any): _*))
       .select($"vec_id", $"embedding", $"cluster_id")
     // pruned index candidates ∪ write-buffer brute force (see scaladoc).
-    // Post-compaction the assignments table holds one row per vec_id
-    // (build and compact() both guarantee it), so no dedup is needed
-    // beyond shadowing the buffer's vec_ids.
+    // The assignments table holds one row per vec_id (only the build
+    // and compact() write it, and both guarantee it), so no dedup is
+    // needed beyond shadowing the buffer's vec_ids.
     val pairs = graft.streaming.IvfDeltaIngest.deltaLatest(spark, indexDir) match {
       case None =>
         raw.join(broadcast(probes), "cluster_id")

@@ -5,32 +5,30 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.GraftVector._
 
 /** Streaming delta ingest INTO the persisted IVF index — the full LSM
-  * story of the reference (/root/reference/include/engine.h: writes land
-  * in buffers, background flush threads merge them into the index) made
-  * Spark-native:
+  * story of the reference (engine.h: writes land in buffers, background
+  * flush threads merge them into the index) made Spark-native:
   *
   *  - [[appendBatch]] is the foreachBatch flush: each micro-batch of new
   *    vectors is assigned to its nearest persisted centroid (broadcast —
-  *    centroids are tiny) and APPENDED into the matching
-  *    `cluster_id=N` partition. Searches stay file-level pruned with no
-  *    index rebuild; a batch costs one scan of the batch, never of the
-  *    index. The same rows are appended to a `delta_log` sidecar — the
-  *    durable WRITE BUFFER: bounded by the writes since the last
-  *    compaction, it is what lets a search consult "unflushed" entries
-  *    exactly like engine.h:search_knn brute-forces its buffers before
-  *    the graph (see IvfIndex.searchPruned).
-  *  - [[compact]] is the background compaction: the assignments table
-  *    UNION the buffer is folded to latest `seq` per vec_id, rewritten
-  *    into a SIBLING directory and atomically swapped into place (never
-  *    overwriting the files being read), and the delta log is truncated
-  *    only after the fold that includes it — so a row that reached only
-  *    the buffer (the appendBatch crash window) is folded in, never
-  *    dropped.
+  *    centroids are tiny) and APPENDED to the `delta_log` sidecar, the
+  *    durable WRITE BUFFER. That one append is the whole insert: an
+  *    acknowledged row lives in the buffer, and nowhere else, until the
+  *    next compaction. A batch costs one scan of the batch, never of the
+  *    index. Every search consults the buffer exactly like
+  *    engine.h:search_knn brute-forces its buffers before the graph:
+  *    each buffer row is a candidate for every query, and shadows any
+  *    indexed row with its vec_id (see IvfIndex.searchPruned).
+  *  - [[compact]] is the background compaction and, with the build
+  *    (IndexStore), the only writer of `assignments`: the assignments
+  *    table UNION the buffer is folded to latest `seq` per vec_id,
+  *    rewritten `cluster_id=N`-partitioned into a SIBLING directory and
+  *    atomically swapped into place (never overwriting the files being
+  *    read), and the delta log is truncated only after the fold that
+  *    includes it — so no acknowledged row is ever dropped.
   *
   * Single-writer assumption: one compactor at a time, no concurrent
   * appends during the swap window (the reference serializes its flush
@@ -63,11 +61,12 @@ object IvfDeltaIngest {
   }
 
   /** Driver-side twin of [[resolveBatch]] for SERVING micro-batches —
-    * bounded by construction (|rows| ≤ maxBatch·8, k centroids), so the
-    * dedup/assign/tie-break law runs as driver arithmetic instead of a
-    * per-batch crossJoin+two-aggregate Spark job whose scheduler floor
-    * dominated the serving commit wall (BENCHONE insert_split at sf10:
-    * the assignment job is ~0.46-0.50 s of a ~1 s commit for 64 rows).
+    * bounded by construction (|rows| ≤ [[IngestServer.MaxBatch]]·8,
+    * k centroids), so the dedup/assign/tie-break law runs as driver
+    * arithmetic instead of a per-batch crossJoin+two-aggregate Spark
+    * job whose scheduler floor dominated the serving commit wall
+    * (BENCHONE insert_split at sf10: the assignment job is
+    * ~0.46-0.50 s of a ~1 s commit for 64 rows).
     * Bit-identical to the plan by construction: distances via the
     * spec-pinned lane-4 float[] kernel ([[graft.functions.VectorKernels
     * .l2sqF]]), the tie-break hash via Catalyst's own Murmur3 over the
@@ -123,23 +122,6 @@ object IvfDeltaIngest {
       .toSeq.sortBy(_._1)
   }
 
-  /** [[appendBatch]] with the batch already resolved driver-side
-    * ([[resolveBatchLocal]]) — same write order (buffer first), same
-    * tables, no per-batch assignment job. The serving path
-    * ([[graft.streaming.IngestServer]]) commits through this. */
-  private[graft] def appendBatchResolved(spark: SparkSession,
-      indexDir: String, resolved: Seq[(Long, Array[Float], Long, Int)]): Unit = {
-    import spark.implicits._
-    val assigned = resolved
-      .map { case (id, e, s, c) => (id, e.toSeq, s, c) }
-      .toDF("vec_id", "embedding", "seq", "cluster_id")
-      .coalesce(1) // one buffer file per commit; rows are driver-local,
-                   // so re-serializing them for the second write is free
-    assigned.write.mode("append").parquet(s"$indexDir/delta_log")
-    assigned.write.mode("append").partitionBy("cluster_id")
-      .parquet(s"$indexDir/assignments")
-  }
-
   /** Rows written without a seq column (or with nulls) count as seq 0. */
   private[streaming] def ensureSeq(df: DataFrame): DataFrame =
     if (df.columns.contains("seq"))
@@ -176,22 +158,18 @@ object IvfDeltaIngest {
     deleteRecursively(old)
   }
 
-  /** Assign + append one micro-batch of (vec_id, embedding).
-    * Write order is buffer-first: the delta_log append lands BEFORE the
-    * assignments append. A crash between the two leaves a row that is in
-    * the buffer but not the index — searches serve it correctly from the
-    * buffer, and compact() folds the buffer in, so the write survives;
-    * the reverse order would leave an un-shadowed duplicate visible. */
+  /** The one ingest write: append resolved (vec_id, embedding, seq,
+    * cluster_id[, codes]) rows to `dir/delta_log`. It is the commit
+    * point: once it returns, the rows are searchable and the next
+    * compaction folds them in; if it throws, nothing is acknowledged. */
+  private[streaming] def commit(dir: String, resolved: DataFrame): Unit =
+    resolved.write.mode("append").parquet(s"$dir/delta_log")
+
+  /** Assign one micro-batch of (vec_id, embedding) and [[commit]] it. */
   def appendBatch(spark: SparkSession, indexDir: String,
-      batch: DataFrame, seq: Long): Unit = {
-    val cent = spark.read.parquet(s"$indexDir/centroids")
-    val assigned = resolveBatch(batch, cent, seq)
-      .persist(StorageLevel.MEMORY_AND_DISK) // one assignment pass, two writes
-    assigned.write.mode("append").parquet(s"$indexDir/delta_log")
-    assigned.write.mode("append").partitionBy("cluster_id")
-      .parquet(s"$indexDir/assignments")
-    assigned.unpersist()
-  }
+      batch: DataFrame, seq: Long): Unit =
+    commit(indexDir,
+      resolveBatch(batch, spark.read.parquet(s"$indexDir/centroids"), seq))
 
   /** Raw buffer rows, or None if no deltas since the last compaction.
     * mergeSchema, like every multi-append table read here: buffer files
@@ -250,8 +228,8 @@ object IvfDeltaIngest {
 
   /** The current logical table: assignments ∪ write buffer with
     * latest-wins duplicate resolution (base rows written without `seq`
-    * count as seq 0). Buffer rows are included so the appendBatch crash
-    * window (row in buffer, not yet in assignments) is invisible. */
+    * count as seq 0). Every row acknowledged since the last compaction
+    * is in the buffer only, so the buffer must be part of the read. */
   def latestAssignments(spark: SparkSession, indexDir: String): DataFrame =
     latestTable(spark, indexDir, "assignments", Seq("embedding"))
 

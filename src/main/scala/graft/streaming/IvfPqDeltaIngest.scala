@@ -14,28 +14,27 @@ import graft.operators.PqIndex
   *
   *  - [[appendBatch]]: each micro-batch is deduplicated and assigned to
   *    its nearest persisted centroid (IvfDeltaIngest.resolveBatch), then
-  *    PQ-ENCODED against the persisted codebooks — appended codes are
-  *    directly comparable to the index's — and appended into the
-  *    matching `cluster_id=N` lists partition. The buffer row carries
-  *    BOTH the raw embedding and the codes: searches brute-force the
-  *    bounded buffer at EXACT distance (exactly as the reference
+  *    PQ-ENCODED against the persisted codebooks — its codes are
+  *    directly comparable to the index's — and committed with ONE append
+  *    to the `delta_log` buffer (IvfDeltaIngest.commit). The buffer row
+  *    carries BOTH the raw embedding and the codes: searches brute-force
+  *    the bounded buffer at EXACT distance (exactly as the reference
   *    brute-forces its write buffers while the graph serves approximate
   *    results), and compaction folds the codes into the lists without
   *    needing the codebooks again.
-  *  - [[compact]]: folds lists ∪ buffer to the latest seq per vec_id
-  *    (a row that reached only the buffer — the appendBatch crash
-  *    window — is folded in, never dropped), atomically swaps, then
-  *    truncates the buffer. Compacted rows keep only codes; their
-  *    exact-distance serving window ends at compaction, which is the
-  *    quantization contract of the index itself.
+  *  - [[compact]]: with the build (IndexStore), the only writer of
+  *    `lists` — folds lists ∪ buffer to the latest seq per vec_id,
+  *    atomically swaps, then truncates the buffer. Compacted rows keep
+  *    only codes; their exact-distance serving window ends at
+  *    compaction, which is the quantization contract of the index
+  *    itself.
   */
 object IvfPqDeltaIngest {
 
-  /** Assign + encode + append one micro-batch of (vec_id, embedding).
-    * Subspace geometry is DERIVED from the persisted codebooks
-    * (PqIndex.bookGeometry), so appended codes can never be sliced
-    * against the wrong boundaries. Buffer written first — see
-    * IvfDeltaIngest.appendBatch's crash-window note. */
+  /** Assign + encode one micro-batch of (vec_id, embedding) and commit
+    * it to the buffer. Subspace geometry is DERIVED from the persisted
+    * codebooks (PqIndex.bookGeometry), so the codes can never be sliced
+    * against the wrong boundaries. */
   def appendBatch(spark: SparkSession, listsDir: String, ivfDir: String,
       pqDir: String, batch: DataFrame, seq: Long): Unit = {
     import spark.implicits._
@@ -47,16 +46,11 @@ object IvfPqDeltaIngest {
     // nondeterministic source pair codes with a different row's embedding
     val assigned = IvfDeltaIngest.resolveBatch(batch, cent, seq)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val coded = PqIndex
+    IvfDeltaIngest.commit(listsDir, PqIndex
       .encode(assigned, "vec_id", "embedding", books, numSub, subDim)
       .join(assigned, "vec_id")
-      .select($"vec_id", $"embedding", $"codes", $"seq", $"cluster_id")
-      .persist(StorageLevel.MEMORY_AND_DISK) // one encode pass, two writes
-    coded.write.mode("append").parquet(s"$listsDir/delta_log")
-    coded.select($"vec_id", $"codes", $"seq", $"cluster_id")
-      .write.mode("append").partitionBy("cluster_id")
-      .parquet(s"$listsDir/lists")
-    coded.unpersist(); assigned.unpersist()
+      .select($"vec_id", $"embedding", $"codes", $"seq", $"cluster_id"))
+    assigned.unpersist()
   }
 
   /** Latest buffered row per vec_id, or None if the buffer is empty. */

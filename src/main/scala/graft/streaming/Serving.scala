@@ -14,7 +14,7 @@ import graft.operators.IvfIndex
   * reference's multi-client server (proto/vector_search.proto:
   * Search/Insert RPCs; client_bench.cpp drives them concurrently).
   * Requests enqueue, and a dispatcher drains whatever is pending
-  * (≤ maxBatch) as one batch:
+  * (≤ the server's `MaxBatch`) as one batch:
   *
   *  - [[SearchServer]] answers a batch on one of two routes, chosen per
   *    batch. Probes are resolved DRIVER-SIDE against the centroids
@@ -32,7 +32,7 @@ import graft.operators.IvfIndex
   *       answered from RAM — no Spark job, so no plan, scheduler or
   *       stage cost per request; the reference's engine.h:search_knn
   *       serves from memory the same way. Ingest acknowledges only
-  *       after its appends land, so read-your-writes holds.
+  *       after its delta-log append lands, so read-your-writes holds.
   *     - JOB: one [[IvfIndex.searchPrunedFrames]] job for the whole
   *       batch, taken when the listed bytes exceed 1/16 of the max
   *       heap (`SearchServer.ResidentMaxBytes`), when the listing fails
@@ -49,7 +49,8 @@ import graft.operators.IvfIndex
   *  - [[IngestServer]]: concurrent insert requests coalesce into one
   *    delta-log append per dispatch round under a single writer — the
   *    LSM group-commit discipline (the reference serializes its write
-  *    buffer behind a mutex the same way).
+  *    buffer behind a mutex the same way). That append is the whole
+  *    insert: `assignments` is rewritten only by compaction.
   */
 object Serving {
   /** One ranked hit. */
@@ -62,6 +63,20 @@ object Serving {
   final case class SearchSplit(batches: Long, requests: Long,
       queueWaitSec: Double, refreshSec: Double, answerSec: Double,
       jobBatches: Long)
+
+  /** The index's (cluster_id, centroid) rows in cluster_id order —
+    * bounded index metadata, which both servers hold in RAM as the
+    * reference server does. IVF compaction never rewrites centroids,
+    * so one read serves a server's lifetime. */
+  private[streaming] def centroids(spark: SparkSession,
+      indexDir: String): Seq[(Int, Array[Float])] = {
+    val cents = spark.read.parquet(s"$indexDir/centroids")
+      .select(col("cluster_id").cast("int"), col("centroid"))
+      .collect().map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
+      .sortBy(_._1).toSeq
+    require(cents.nonEmpty, s"no centroids under $indexDir")
+    cents
+  }
 }
 
 object SearchServer {
@@ -72,6 +87,12 @@ object SearchServer {
     * the heap keeps it, and its brief second copy during a rebuild,
     * well under the driver's memory. */
   private[streaming] val ResidentMaxBytes: Long = Runtime.getRuntime.maxMemory / 16
+
+  /** Requests answered per batch, at most. */
+  private[streaming] val MaxBatch = 128
+
+  /** Batches answered concurrently, at most. */
+  private[streaming] val MaxInFlight = 3
 }
 
 /** See [[Serving]]. `close()` drains the queue, then stops the
@@ -79,14 +100,12 @@ object SearchServer {
   * `residentMaxBytes` is answered from the resident snapshot; a larger
   * index takes the batched-job route (specs pass 0 to force it). */
 final class SearchServer private[graft] (spark: SparkSession, indexDir: String,
-    k: Int, nprobe: Int, maxBatch: Int, maxInFlight: Int, residentMaxBytes: Long)
-    extends AutoCloseable {
+    k: Int, nprobe: Int, residentMaxBytes: Long) extends AutoCloseable {
   import Serving.{Hit, SearchSplit}
+  import SearchServer.{MaxBatch, MaxInFlight}
 
-  def this(spark: SparkSession, indexDir: String, k: Int, nprobe: Int,
-      maxBatch: Int = 128, maxInFlight: Int = 3) =
-    this(spark, indexDir, k, nprobe, maxBatch, maxInFlight,
-      SearchServer.ResidentMaxBytes)
+  def this(spark: SparkSession, indexDir: String, k: Int, nprobe: Int) =
+    this(spark, indexDir, k, nprobe, SearchServer.ResidentMaxBytes)
 
   // a cloned session tuned for bounded serving jobs (shares the
   // SparkContext and all caches; separate SQLConf): a probe batch
@@ -103,13 +122,7 @@ final class SearchServer private[graft] (spark: SparkSession, indexDir: String,
   }
   import serve.implicits._
 
-  // bounded index metadata, collected once per server lifetime
-  private val cents: Array[(Int, Array[Float])] =
-    serve.read.parquet(s"$indexDir/centroids")
-      .select(col("cluster_id").cast("int"), col("centroid"))
-      .collect().map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
-      .sortBy(_._1)
-  require(cents.nonEmpty, s"no centroids under $indexDir")
+  private val cents = Serving.centroids(serve, indexDir)
 
   private final case class Req(rid: Long, qv: Array[Float], p: Promise[Seq[Hit]],
       enq: Long = System.nanoTime())
@@ -180,7 +193,7 @@ final class SearchServer private[graft] (spark: SparkSession, indexDir: String,
 
   private def probesOf(qv: Array[Float]): Seq[Int] =
     cents.map { case (cid, cv) => (l2sq(qv, cv), cid) }
-      .sorted.take(nprobe).map(_._2).toSeq
+      .sorted.take(nprobe).map(_._2)
 
   /** The batched-job route: one searchPrunedFrames job. */
   private def jobAnswers(reqs: Seq[Req], probes: Seq[Seq[Int]]): Seq[Seq[Hit]] = {
@@ -222,24 +235,24 @@ final class SearchServer private[graft] (spark: SparkSession, indexDir: String,
       reqs.zip(answers).foreach { case (r, hits) => r.p.success(hits) }
     } catch { case e: Throwable => reqs.foreach(_.p.tryFailure(e)) }
 
-  // PIPELINED dispatch: up to maxInFlight batches overlap (Spark
+  // PIPELINED dispatch: up to MaxInFlight batches overlap (Spark
   // schedules concurrent jobs fine — stages interleave on the
   // executor pool), so the scheduler's per-job latency stops gating
   // aggregate QPS on the job route. The semaphore doubles as natural
-  // batch sizing: while maxInFlight batches run, arrivals accumulate in
+  // batch sizing: while MaxInFlight batches run, arrivals accumulate in
   // the queue and the NEXT drain picks them all up — load adaptively
   // deepens the batches instead of the queue.
-  private val inFlight = new java.util.concurrent.Semaphore(maxInFlight)
+  private val inFlight = new java.util.concurrent.Semaphore(MaxInFlight)
   private val workers =
-    java.util.concurrent.Executors.newFixedThreadPool(maxInFlight)
+    java.util.concurrent.Executors.newFixedThreadPool(MaxInFlight)
   private val dispatcher = new Thread(() => {
     while (open || !queue.isEmpty) {
       val first = queue.poll(10, TimeUnit.MILLISECONDS)
       if (first != null) {
         inFlight.acquire()
-        val drained = new java.util.ArrayList[Req](maxBatch)
+        val drained = new java.util.ArrayList[Req](MaxBatch)
         drained.add(first)
-        queue.drainTo(drained, maxBatch - 1)
+        queue.drainTo(drained, MaxBatch - 1)
         import scala.jdk.CollectionConverters._
         val batch = drained.asScala.toSeq
         workers.submit(new Runnable {
@@ -248,7 +261,7 @@ final class SearchServer private[graft] (spark: SparkSession, indexDir: String,
         })
       }
     }
-    inFlight.acquire(maxInFlight) // wait out the in-flight jobs
+    inFlight.acquire(MaxInFlight) // wait out the in-flight jobs
     workers.shutdown()
     // belt-and-braces: the gate lock means nothing can be here, but a
     // leftover would hang its caller forever, so drain loudly anyway
@@ -266,26 +279,35 @@ final class SearchServer private[graft] (spark: SparkSession, indexDir: String,
   }
 }
 
+object IngestServer {
+  /** Insert requests committed per group commit, at most. */
+  private[streaming] val MaxBatch = 64
+}
+
 /** See [[Serving]]: single-writer group commit into the IVF delta log.
   * Requests drained in one dispatch round share ONE sequence number
   * and ONE append job; per-request ordering between colliding vec_ids
   * within a round is therefore undefined (callers needing it must
   * serialize their own submissions — the reference's mutexed buffer
-  * gives the same guarantee boundary). */
+  * gives the same guarantee boundary). A round whose append fails
+  * fails its requests and takes no sequence number: the next round
+  * commits under the same one, so acknowledged seqs stay dense. */
 final class IngestServer(spark: SparkSession, indexDir: String,
-    startSeq: Long, maxBatch: Int = 64) extends AutoCloseable {
+    startSeq: Long) extends AutoCloseable {
   import spark.implicits._
+  import IngestServer.MaxBatch
 
   private final case class Req(rows: Seq[(Long, Seq[Float])], p: Promise[Long],
       enq: Long = System.nanoTime())
   private val queue = new LinkedBlockingQueue[Req]()
-  private val nextSeq = new AtomicLong(startSeq)
+  // the next round's seq; read and advanced by the dispatcher thread only
+  private var nextSeq = startSeq
   // split accounting (cumulative, lifetime of the server): where an
   // insert request's wall goes — QUEUE WAIT (enqueue → its batch's
-  // dispatch, the group-commit formation time) vs the COMMIT JOB
-  // (appendBatch: the per-batch IVF assignment pass + the two
-  // appends). p99 growth under depth attributes to whichever leg
-  // grows; the bench's insert_sweep records both per sweep point.
+  // dispatch, the group-commit formation time) vs the COMMIT (the
+  // driver-side IVF assignment + the one delta-log append). p99
+  // growth under depth attributes to whichever leg grows; the bench's
+  // insert_sweep records both per sweep point.
   private val waitNs = new AtomicLong(0)
   private val commitNs = new AtomicLong(0)
   private val nBatchesDone = new AtomicLong(0)
@@ -311,30 +333,26 @@ final class IngestServer(spark: SparkSession, indexDir: String,
     p.future
   }
 
-  // Centroids collected ONCE per server — the bounded index metadata
-  // the reference server holds in RAM (SearchServer resolves probes
-  // against the same collected rows). Lazy so construction stays
-  // job-free; single-writer discipline means no compactor swaps them
-  // mid-serve (and IVF compaction never rewrites centroids anyway).
-  private lazy val centroids: Seq[(Int, Array[Float])] =
-    spark.read.parquet(s"$indexDir/centroids")
-      .select("cluster_id", "centroid").collect()
-      .map(r => (r.getInt(0), r.getSeq[Float](1).toArray)).toSeq
+  // lazy so construction stays job-free
+  private lazy val centroids = Serving.centroids(spark, indexDir)
 
   private def runBatch(reqs: Seq[Req]): Unit =
     try {
       val t0 = System.nanoTime()
       reqs.foreach(r => waitNs.addAndGet(t0 - r.enq))
       nReqsDone.addAndGet(reqs.size)
-      val seq = nextSeq.getAndIncrement()
+      val seq = nextSeq
       // assignment runs driver-side (resolveBatchLocal — bit-identical
-      // to the resolveBatch plan by spec); the commit job is just the
-      // two bounded appends, which halves the per-batch wall the
-      // insert_sweep split showed dominating p99
+      // to the resolveBatch plan by spec); the commit job is the one
+      // bounded append, written as one file from these driver-local rows
       val resolved = IvfDeltaIngest.resolveBatchLocal(
         reqs.flatMap(_.rows).map { case (id, e) => (id, e.toArray) },
         centroids, seq)
-      IvfDeltaIngest.appendBatchResolved(spark, indexDir, resolved)
+      IvfDeltaIngest.commit(indexDir, resolved
+        .map { case (id, e, s, c) => (id, e.toSeq, s, c) }
+        .toDF("vec_id", "embedding", "seq", "cluster_id")
+        .coalesce(1))
+      nextSeq = seq + 1 // only a committed round consumes its seq
       commitNs.addAndGet(System.nanoTime() - t0)
       nBatchesDone.incrementAndGet()
       reqs.foreach(_.p.success(seq))
@@ -344,9 +362,9 @@ final class IngestServer(spark: SparkSession, indexDir: String,
     while (open || !queue.isEmpty) {
       val first = queue.poll(10, TimeUnit.MILLISECONDS)
       if (first != null) {
-        val drained = new java.util.ArrayList[Req](maxBatch)
+        val drained = new java.util.ArrayList[Req](MaxBatch)
         drained.add(first)
-        queue.drainTo(drained, maxBatch - 1)
+        queue.drainTo(drained, MaxBatch - 1)
         import scala.jdk.CollectionConverters._
         runBatch(drained.asScala.toSeq)
       }

@@ -7,9 +7,10 @@ import graft.operators.{IndexStore, IvfIndex}
 import graft.streaming.IvfDeltaIngest
 
 /** The write path INTO the index: streamed deltas must land in the
-  * right cluster partitions (searches stay pruned, no rebuild), newest
-  * write must shadow older ones, and compaction must collapse
-  * duplicates — engine.h's buffer → flush → merge cycle. */
+  * write buffer only (searchable at once, no rebuild), newest write
+  * must shadow older ones, and compaction must fold them into the right
+  * cluster partitions and collapse duplicates — engine.h's buffer →
+  * flush → merge cycle. */
 class IvfDeltaIngestSpec extends SparkSpec {
   import spark.implicits._
 
@@ -27,15 +28,12 @@ class IvfDeltaIngestSpec extends SparkSpec {
       .select(($"vec_id" + 100000).as("vec_id"), $"embedding")
     val b2 = base.filter($"vec_id" >= 3 && $"vec_id" < 6)
       .select(($"vec_id" + 100000).as("vec_id"), $"embedding")
+    val assignmentsBefore = dataFiles(s"$dir/assignments")
     IvfDeltaIngest.appendBatch(spark, dir, b1, seq = 1L)
     IvfDeltaIngest.appendBatch(spark, dir, b2, seq = 2L)
-
-    // delta files must sit INSIDE cluster_id=N partition dirs
-    val deltaFiles = FileUtils.listFiles(
-        new java.io.File(s"$dir/assignments"), Array("parquet"), true)
-    assert(deltaFiles.size() > 0)
-    val all = spark.read.option("mergeSchema", "true").parquet(s"$dir/assignments")
-    assert(all.filter($"vec_id" >= 100000L).count() === 6)
+    // an append writes the buffer only: no assignments file is added,
+    // removed or rewritten
+    assert(dataFiles(s"$dir/assignments") == assignmentsBefore)
 
     // a streamed vector's own embedding finds it as nearest (dist 0)
     val q = base.filter($"vec_id" < 3)
@@ -52,6 +50,14 @@ class IvfDeltaIngestSpec extends SparkSpec {
         s"query $qid should find its streamed self + source, got $ids")
       assert(worst === 0.0, s"both hits must be at distance 0, worst=$worst")
     }
+
+    // compaction folds the deltas INSIDE cluster_id=N partition dirs
+    IvfDeltaIngest.compact(spark, dir)
+    val deltaFiles = FileUtils.listFiles(
+        new java.io.File(s"$dir/assignments"), Array("parquet"), true)
+    assert(deltaFiles.size() > 0)
+    val all = spark.read.option("mergeSchema", "true").parquet(s"$dir/assignments")
+    assert(all.filter($"vec_id" >= 100000L).count() === 6)
   }
 
   test("a moved vector is served fresh even when only its OLD cluster is probed") {
@@ -124,8 +130,8 @@ class IvfDeltaIngestSpec extends SparkSpec {
     val base = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val total = base.count()
     val emb = base.filter($"vec_id" === 5).select($"embedding").head().getSeq[Float](0)
-    // simulate the appendBatch crash window: the delta_log append landed,
-    // the assignments append did not
+    // a row written to the buffer only — where every acknowledged
+    // insert lives until compaction
     Seq((999999L, emb, 7L, 0))
       .toDF("vec_id", "embedding", "seq", "cluster_id")
       .select($"vec_id", $"embedding".cast("array<float>").as("embedding"),
@@ -154,10 +160,11 @@ class IvfDeltaIngestSpec extends SparkSpec {
       .select($"vec_id", $"embedding".cast("array<float>").as("embedding"))
     IvfDeltaIngest.appendBatch(spark, dir, delta, seq = 1L)
 
-    // PRE-COMPACTION search: the table physically holds two rows for
-    // vec 0, but searchPruned must surface only the newest (a query at
-    // the new embedding finds vec 0 once, at distance 0 — never a
-    // duplicate neighbor, never the stale embedding shadowing the new)
+    // PRE-COMPACTION search: the table holds vec 0's old row and the
+    // buffer its new one, but searchPruned must surface only the newest
+    // (a query at the new embedding finds vec 0 once, at distance 0 —
+    // never a duplicate neighbor, never the stale embedding shadowing
+    // the new)
     val qPre = base.filter($"vec_id" === 7)
       .select(lit(99L).as("query_id"), $"embedding".as("qv"))
     val pre = IvfIndex.searchPruned(spark, dir, qPre, k = 5, nprobe = 8)

@@ -5,11 +5,10 @@ import org.apache.spark.sql.functions._
 import graft.operators.{IndexStore, IvfPq}
 import graft.streaming.IvfPqDeltaIngest
 
-/** Streaming writes into the composite IVF-PQ index: appended codes are
-  * immediately searchable in their cluster partition, the raw-vector
-  * buffer serves updates EXACTLY (shadowing stale codes regardless of
-  * the probe set), and compaction folds everything down to one coded
-  * row per id. */
+/** Streaming writes into the composite IVF-PQ index: an update lands in
+  * the raw-vector buffer only, which serves it EXACTLY (shadowing stale
+  * codes regardless of the probe set), and compaction folds everything
+  * down to one coded row per id. */
 class IvfPqDeltaSpec extends SparkSpec {
   import spark.implicits._
 
@@ -28,8 +27,11 @@ class IvfPqDeltaSpec extends SparkSpec {
       // re-ingest vec 0 with vec 7's embedding
       val delta = Seq((0L, e7)).toDF("vec_id", "embedding")
         .select($"vec_id", $"embedding".cast("array<float>").as("embedding"))
+      val listsBefore = dataFiles(s"$listsDir/lists")
       IvfPqDeltaIngest.appendBatch(spark, listsDir, ivfDir, pqDir, delta, seq = 1L)
       assert(new java.io.File(s"$listsDir/delta_log").exists())
+      // the append writes the buffer only: the lists are untouched
+      assert(dataFiles(s"$listsDir/lists") == listsBefore)
 
       // query at vec 7's embedding, all clusters probed: vec 0 must be
       // served from the buffer at EXACT distance 0 (not its stale codes'

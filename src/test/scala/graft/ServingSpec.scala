@@ -15,8 +15,9 @@ import graft.streaming.{IngestServer, IvfDeltaIngest, ResidentIvf, SearchServer,
 /** The micro-batching serving front ends: batched answers must equal
   * per-request searchPruned answers exactly (per-query independence) on
   * both the resident and the job route, group-committed inserts must
-  * land in the delta log and shadow the index for subsequent searches,
-  * and resident searches must run no Spark job. */
+  * land in the delta log only (one file per commit, seqs dense even
+  * across a failed commit) and shadow the index for subsequent
+  * searches, and resident searches must run no Spark job. */
 class ServingSpec extends SparkSpec {
   import spark.implicits._
 
@@ -186,8 +187,7 @@ class ServingSpec extends SparkSpec {
 
   /** A server whose byte bound is 0: every batch takes the job route. */
   private def jobRouteServer(dir: String, k: Int, nprobe: Int): SearchServer =
-    new SearchServer(spark, dir, k, nprobe, maxBatch = 128, maxInFlight = 3,
-      residentMaxBytes = 0L)
+    new SearchServer(spark, dir, k, nprobe, residentMaxBytes = 0L)
 
   /** Hits as (id, rank, distance bits): NaN distances compare equal. */
   private def key(hits: Seq[Serving.Hit]): Seq[(Long, Long, Long)] =
@@ -265,6 +265,62 @@ class ServingSpec extends SparkSpec {
       val js = job.splitStats
       assert(js.batches > 0L && js.jobBatches == js.batches)
     } finally { resident.close(); job.close(); ingest.close() }
+  }
+
+  private def randomRows(rnd: scala.util.Random, ids: Seq[Long])
+      : Seq[(Long, Seq[Float])] =
+    ids.map(_ -> Seq.fill(64)(rnd.nextGaussian().toFloat))
+
+  test("each group commit adds one delta-log file; only compaction writes assignments") {
+    val dir = scratchStore()
+    val before = dataFiles(dir)
+    val rnd = new scala.util.Random(13)
+    // fresh ids plus a re-insert of corpus vec 5
+    val commits = Seq(Seq(7000L, 7001L, 7002L), Seq(7003L, 5L), Seq(7004L))
+      .map(randomRows(rnd, _))
+    val ingest = new IngestServer(spark, dir, startSeq = 1L)
+    try {
+      // awaited one at a time, so each request is its own group commit
+      val seqs = commits.map(c => Await.result(ingest.insert(c), await))
+      assert(seqs == Seq(1L, 2L, 3L))
+    } finally ingest.close()
+    val after = dataFiles(dir)
+    val added = after.keySet -- before.keySet
+    assert(added.size == commits.size, s"added: $added")
+    assert(added.forall(_.startsWith("delta_log/")), s"added: $added")
+    assert(before.forall { case (p, st) => after.get(p).contains(st) })
+
+    IvfDeltaIngest.compact(spark, dir)
+    val acked = commits.flatten.map(_._1)
+    val rows = spark.read.parquet(s"$dir/assignments")
+      .filter($"vec_id".isin(acked: _*))
+      .select($"vec_id", $"embedding").collect()
+      .map(r => r.getLong(0) -> r.getSeq[Float](1)).toSeq
+    assert(rows.map(_._1).sorted == acked.sorted, "each acknowledged row exactly once")
+    assert(rows.toMap == commits.flatten.toMap, "each at its acknowledged embedding")
+  }
+
+  test("a failed group commit fails its requests and leaves no seq gap") {
+    val dir = scratchStore()
+    val rnd = new scala.util.Random(11)
+    val failed = randomRows(rnd, Seq(6000L))
+    val ingest = new IngestServer(spark, dir, startSeq = 1L)
+    try {
+      // a regular file where the buffer directory goes fails the append
+      val blocker = java.nio.file.Paths.get(dir, "delta_log")
+      java.nio.file.Files.createFile(blocker)
+      intercept[Exception](Await.result(ingest.insert(failed), await))
+      java.nio.file.Files.delete(blocker)
+      // the next acknowledged commit takes the seq the failed one would have
+      assert(Await.result(ingest.insert(randomRows(rnd, Seq(6001L))), await) == 1L)
+      assert(Await.result(ingest.insert(randomRows(rnd, Seq(6002L))), await) == 2L)
+    } finally ingest.close()
+    val buf = IvfDeltaIngest.deltaLatest(spark, dir).get
+      .select($"vec_id").collect().map(_.getLong(0)).sorted.toSeq
+    assert(buf == Seq(6001L, 6002L))
+    // searched at its own vector, the failed row is never an answer
+    val hits = prunedByVec(dir, Seq(failed.head._2.toArray), k = 5, nprobe = 2).head
+    assert(hits.nonEmpty && !hits.exists(_._1 == 6000L))
   }
 
   test("a file the snapshot cannot reproduce sends the batch to the job route") {

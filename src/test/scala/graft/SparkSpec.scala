@@ -28,6 +28,25 @@ trait SparkSpec extends AnyFunSuite {
     }
   }
 
+  /** Visible data files under `dir` (Spark skips `_`/`.` names),
+    * relative path → (length, mtime): equal listings mean no data file
+    * was added, removed or rewritten. */
+  def dataFiles(dir: String): Map[String, (Long, java.nio.file.attribute.FileTime)] = {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get(dir)
+    scala.util.Using.resource(Files.walk(root)) { paths =>
+      paths.iterator.asScala
+        .filter { p =>
+          val name = p.getFileName.toString
+          Files.isRegularFile(p) && !name.startsWith("_") && !name.startsWith(".")
+        }
+        .map(p => root.relativize(p).toString ->
+          (Files.size(p), Files.getLastModifiedTime(p)))
+        .toMap
+    }
+  }
+
   /** `body` run with `key` forced to [[Route.Small]], then to
     * [[Route.Large]]; fails unless each run decided `key` on the side it
     * forced, so a law comparing the two results compares two branches. */
