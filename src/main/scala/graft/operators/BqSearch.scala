@@ -64,15 +64,11 @@ object BqSearch {
     val fq = queries.select($"query_id",
       fingerprintHalf($"qv", 0).as("qlo"),
       fingerprintHalf($"qv", 32).as("qhi"))
-    val shortlist = fp
-      .crossJoin(broadcast(fq))
-      // integer Hamming casts exactly to float (≤ 64): the heap's
-      // (score, id) order is (hamming, id) with no rounding anywhere
-      .withColumn("hd", hamming($"flo", $"fhi", $"qlo", $"qhi").cast("float"))
-      .groupBy($"query_id")
-      .agg(topK($"hd", $"neighbor_id", k * refineFactor).as("nn"))
-      .select($"query_id",
-        explode(transform($"nn", x => x.getField("id"))).as("neighbor_id"))
+    // integer Hamming casts exactly to float (≤ 64): the heap's
+    // (score, id) order is (hamming, id) with no rounding anywhere
+    val shortlist = KnnSearch.shortlist(fp.crossJoin(broadcast(fq)),
+      "query_id", hamming($"flo", $"fhi", $"qlo", $"qhi").cast("float"),
+      $"neighbor_id", k * refineFactor)
     PqIndex.refineExact(shortlist, embeddings, idCol, vecCol, queries, k)
   }
 }

@@ -38,11 +38,10 @@ object GraphSearch {
   def knnGraph(s: SparkSession, ivfDir: String, e: DataFrame,
       k: Int = 5, nprobe: Int = 2): DataFrame = {
     import s.implicits._
-    val members = s.read.parquet(s"$ivfDir/assignments")
-      .select($"vec_id".as("neighbor_id"), $"embedding".as("nv"),
-        $"cluster_id".cast("long").as("cluster_id"))
-    knnGraphFrames(s.read.parquet(s"$ivfDir/centroids")
-      .select($"cluster_id", $"centroid"), members, e, k, nprobe)
+    KnnSearch.ranked(probedPairs(s, ivfDir, e,
+        s.read.parquet(s"$ivfDir/assignments"), nprobe),
+      "query_id", l2Sq($"nv", $"qv"), $"neighbor_id", k)
+      .withColumnRenamed("query_id", "vec_id")
   }
 
   /** The deepest upper layer the level hash can size exactly: the
@@ -181,28 +180,10 @@ object GraphSearch {
     * path pre-masks its batch out). `e` supplies candidate embeddings
     * for the pairwise diversity checks (candidates ⊆ members ⊆ e). */
   private def layerGraphFrames(s: SparkSession, ivfDir: String,
-      e: DataFrame, nodes: DataFrame, membersRaw: DataFrame, k: Int,
+      e: DataFrame, nodes: DataFrame, members: DataFrame, k: Int,
       nprobe: Int, shortlist: Int): DataFrame = {
     import s.implicits._
-    val members = membersRaw
-      .select($"vec_id".as("neighbor_id"), $"embedding".as("nv"),
-        $"cluster_id".cast("long").as("cluster_id"))
-    val cent = s.read.parquet(s"$ivfDir/centroids")
-      .select($"cluster_id", $"centroid")
-    // |cent|× expansion per node (Expand.floorParallelism scaladoc);
-    // qv rides the probe row so the fan-out is scored at the join and
-    // absorbed by the same stage's partial top-k (knnGraphFrames
-    // discipline — no post-fan-out shuffle)
-    val probes = Expand.floorParallelism(nodes).crossJoin(broadcast(cent))
-      .groupBy($"vec_id")
-      .agg(topK(l2Sq($"embedding", $"centroid"), $"cluster_id".cast("long"),
-        nprobe).as("ps"),
-        first($"embedding").as("qv"))
-      .select($"vec_id".as("query_id"), $"qv",
-        explode(transform($"ps", p => p.getField("id"))).as("cluster_id"))
-    val sl = Expand.pinJoinParallelism(probes, $"cluster_id")
-      .join(Expand.floorParallelism(members), "cluster_id")
-      .filter($"neighbor_id" =!= $"query_id")
+    val sl = probedPairs(s, ivfDir, nodes, members, nprobe)
       .groupBy($"query_id")
       .agg(topK(l2Sq($"nv", $"qv"), $"neighbor_id", shortlist).as("sl"))
     // re-attach candidate embeddings (bounded: shortlist rows/node) for
@@ -232,13 +213,17 @@ object GraphSearch {
         round(sqrt($"col.d"), 4).as("dist"))
   }
 
-  /** The probe→rank kNN-graph core shared by [[knnGraph]] and
-    * [[layerGraph]]: `e` probes its nprobe nearest centroids, `members`
-    * (neighbor_id, nv, cluster_id) supplies the candidates. */
-  private def knnGraphFrames(cent: DataFrame, members: DataFrame,
-      e: DataFrame, k: Int, nprobe: Int): DataFrame = {
-    val s = cent.sparkSession
+  /** Every `nodes` row (vec_id, embedding) paired with the `members`
+    * (vec_id, embedding, cluster_id) of its nprobe nearest persisted-IVF
+    * centroids' clusters, self-pairs dropped: (cluster_id, query_id, qv,
+    * neighbor_id, nv) — the candidates of the kNN-graph build
+    * ([[knnGraph]]) and of the layer build and insert
+    * ([[layerGraphFrames]]). */
+  private def probedPairs(s: SparkSession, ivfDir: String, nodes: DataFrame,
+      members: DataFrame, nprobe: Int): DataFrame = {
     import s.implicits._
+    val cent = s.read.parquet(s"$ivfDir/centroids")
+      .select($"cluster_id", $"centroid")
     // |cent|× expansion per row — parallelism must not be left to
     // byte-based split sizing (Expand.floorParallelism scaladoc).
     // The query vector RIDES the probe row (first() within the
@@ -251,7 +236,7 @@ object GraphSearch {
     // neighbor embedding, by query_id (~30 GB at sf10 for a 100 MB
     // corpus; the single plan change the second-decade probe paid
     // for most dearly).
-    val probes = Expand.floorParallelism(e).crossJoin(broadcast(cent))
+    val probes = Expand.floorParallelism(nodes).crossJoin(broadcast(cent))
       .groupBy($"vec_id")
       .agg(topK(l2Sq($"embedding", $"centroid"), $"cluster_id".cast("long"),
         nprobe).as("ps"),
@@ -267,14 +252,10 @@ object GraphSearch {
     // fan-out over the members SCAN's packed splits — measured at
     // sf10: one task, 31 cores idle).
     Expand.pinJoinParallelism(probes, $"cluster_id")
-      .join(Expand.floorParallelism(members), "cluster_id")
+      .join(Expand.floorParallelism(members
+        .select($"vec_id".as("neighbor_id"), $"embedding".as("nv"),
+          $"cluster_id".cast("long").as("cluster_id"))), "cluster_id")
       .filter($"neighbor_id" =!= $"query_id")
-      .groupBy($"query_id")
-      .agg(topK(l2Sq($"nv", $"qv"), $"neighbor_id", k).as("nn"))
-      .select($"query_id".as("vec_id"), posexplode($"nn"))
-      .select($"vec_id", $"col.id".as("neighbor_id"),
-        ($"pos" + 1).cast("long").as("rnk"),
-        round(sqrt($"col.score"), 4).as("dist"))
   }
 
   /** Per-cluster medoids — the entry-point table: for each cluster, the

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.GraftVector._
@@ -101,26 +101,6 @@ object IvfIndex {
     (centroids, assignments)
   }
 
-  /** ANN top-k against a PERSISTED index directory (see [[IndexStore]]):
-    * the nprobe cluster ids are resolved first (a bounded
-    * |queries| × nprobe set, collected like the reference resolves its
-    * entry points before traversal — hnsw_index.h search touches a
-    * neighborhood, never the whole index), then pushed into the
-    * partitioned assignments scan as a LITERAL `isin` filter, so the read
-    * is file-level partition-pruned: nprobe/k of the data comes off disk.
-    *
-    * Write-buffer fidelity (engine.h:search_knn consults buffers BEFORE
-    * the graph): rows streamed in since the last compaction live in the
-    * bounded `delta_log` sidecar (IvfDeltaIngest). Every candidate row
-    * of an updated vec_id is dropped from the pruned scan (broadcast
-    * anti-join — never a wide dedup shuffle) and the newest buffer rows
-    * are brute-forced against EVERY query, probe set or not. A vector
-    * re-ingested into a different cluster is therefore always served at
-    * its newest embedding, even when only its old cluster is probed —
-    * the "newest buffer entry shadows the index" contract, not an
-    * eventual-consistency window. With an empty buffer (post-compaction
-    * steady state) the plan collapses to the plain pruned scan.
-    */
   /** query → its nprobe nearest centroids, (query_id, qv, cluster_id):
     * a tiny broadcast cross join ranked by (distance, cluster_id) — the
     * entry-point resolution shared by every probed search form. */
@@ -155,6 +135,18 @@ object IvfIndex {
       .collect().map(_.getInt(0)).sorted
   }
 
+  /** ANN top-k against a PERSISTED index directory (see [[IndexStore]]):
+    * the nprobe cluster ids are resolved first (a bounded
+    * |queries| × nprobe set, collected like the reference resolves its
+    * entry points before traversal — hnsw_index.h search touches a
+    * neighborhood, never the whole index), then pushed into the
+    * partitioned assignments scan as a LITERAL `isin` filter, so the read
+    * is file-level partition-pruned: nprobe/k of the data comes off disk.
+    *
+    * Rows streamed in since the last compaction live in the bounded
+    * `delta_log` write buffer (IvfDeltaIngest); [[probedWithBuffer]]
+    * makes the newest of them shadow the index.
+    */
   def searchPruned(spark: SparkSession, indexDir: String, queries: DataFrame,
       k: Int, nprobe: Int): DataFrame = {
     val centroids = spark.read.parquet(s"$indexDir/centroids")
@@ -164,48 +156,20 @@ object IvfIndex {
   }
 
   /** [[searchPruned]] past probe resolution: the pruned scan + buffer
-    * shadow + top-k over caller-supplied `probes` (query_id, qv,
-    * cluster_id) and their distinct `probeIds`. The serving front end
-    * ([[graft.streaming.SearchServer]]) resolves probes DRIVER-SIDE
-    * against its in-memory centroid copy — the two Spark jobs
-    * (cross-join rank + distinct-collect) that per-request plans paid
-    * become plain arithmetic there, and this one job is all a request
-    * batch costs. `queries` must carry one (query_id, qv) row per
-    * query (the buffer brute-force side). */
+    * shadow ([[probedWithBuffer]]) + top-k over caller-supplied `probes`
+    * (query_id, qv, cluster_id) and their distinct `probeIds`. The
+    * serving front end ([[graft.streaming.SearchServer]]) resolves
+    * probes DRIVER-SIDE against its in-memory centroid copy — the two
+    * Spark jobs (cross-join rank + distinct-collect) that per-request
+    * plans paid become plain arithmetic there, and this one job is all
+    * a request batch costs. `queries` must carry one (query_id, qv) row
+    * per query (the buffer brute-force side). */
   def searchPrunedFrames(spark: SparkSession, indexDir: String,
       queries: DataFrame, probes: DataFrame, probeIds: Seq[Int],
-      k: Int): DataFrame = {
-    import spark.implicits._
-    val raw = spark.read.option("mergeSchema", "true")
-      .parquet(s"$indexDir/assignments")
-      .filter($"cluster_id".isin(probeIds.map(i => i: Any): _*))
-      .select($"vec_id", $"embedding", $"cluster_id")
-    // pruned index candidates ∪ write-buffer brute force (see scaladoc).
-    // The assignments table holds one row per vec_id (only the build
-    // and compact() write it, and both guarantee it), so no dedup is
-    // needed beyond shadowing the buffer's vec_ids.
-    val pairs = graft.streaming.IvfDeltaIngest.deltaLatest(spark, indexDir) match {
-      case None =>
-        raw.join(broadcast(probes), "cluster_id")
-      case Some(delta) =>
-        val buf = broadcast(delta.select($"vec_id", $"embedding"))
-        // one row per query by contract — reuse it directly rather than
-        // re-deriving it from probes' cross-join lineage with a distinct
-        val uniqueQueries = queries.select($"query_id", $"qv")
-        raw.join(broadcast(buf.select($"vec_id")), Seq("vec_id"), "left_anti")
-          .join(broadcast(probes), "cluster_id")
-          .select($"query_id", $"qv", $"vec_id", $"embedding")
-          .unionByName(buf.crossJoin(broadcast(uniqueQueries))
-            .select($"query_id", $"qv", $"vec_id", $"embedding"))
-    }
-    pairs
-      .groupBy($"query_id")
-      .agg(topK(l2Sq($"embedding", $"qv"), $"vec_id", k).as("nn"))
-      .select($"query_id", posexplode($"nn"))
-      .select($"query_id", $"col.id".as("neighbor_id"),
-        ($"pos" + 1).cast("long").as("rnk"),
-        round(sqrt($"col.score"), 4).as("dist"))
-  }
+      k: Int): DataFrame =
+    rankProbed(probedScan(spark, indexDir, probeIds),
+      graft.streaming.IvfDeltaIngest.deltaLatest(spark, indexDir),
+      queries, probes, k)
 
   /** Filtered ANN — the pre-filtered variant of [[searchPruned]] (the
     * problem FAISS/Milvus call metadata filtering; post-filtering a
@@ -216,45 +180,80 @@ object IvfIndex {
     * not a corpus-wide id-join), and the top-k heap only ever sees
     * predicate-passing candidates, so it always fills to k when k
     * matches exist in the probed clusters. Write-buffer rows shadow
-    * the index exactly as in searchPruned; their labels are looked up
-    * from the persisted assignments by id (metadata is immutable here —
-    * a moved vector keeps its label). */
+    * the index through the same [[probedWithBuffer]] step as
+    * searchPruned; their labels are looked up from the persisted
+    * assignments by id (metadata is immutable here — a moved vector
+    * keeps its label, and a vec_id the index does not hold yet has
+    * none, so no filter passes it). */
   def searchPrunedFiltered(spark: SparkSession, indexDir: String,
       queries: DataFrame, k: Int, nprobe: Int, labels: Seq[Int]): DataFrame = {
     import spark.implicits._
     val centroids = spark.read.parquet(s"$indexDir/centroids")
     val probes = resolveProbes(queries, centroids, nprobe)
-    val probeIds = collectProbeIds(probes)
-    val raw = spark.read.option("mergeSchema", "true")
-      .parquet(s"$indexDir/assignments")
-      .filter($"cluster_id".isin(probeIds.map(i => i: Any): _*))
-      .filter($"label".isin(labels.map(i => i: Any): _*))
-      .select($"vec_id", $"embedding", $"cluster_id")
-    val pairs = graft.streaming.IvfDeltaIngest.deltaLatest(spark, indexDir) match {
-      case None =>
-        raw.join(broadcast(probes), "cluster_id")
-      case Some(delta) =>
-        val labelOk = spark.read.option("mergeSchema", "true")
-          .parquet(s"$indexDir/assignments")
-          .filter($"label".isin(labels.map(i => i: Any): _*))
-          .select($"vec_id")
-        val buf = broadcast(delta.select($"vec_id", $"embedding")
-          .join(labelOk, "vec_id"))
-        val uniqueQueries = queries.select($"query_id", $"qv")
-        raw.join(broadcast(buf.select($"vec_id")), Seq("vec_id"), "left_anti")
-          .join(broadcast(probes), "cluster_id")
-          .select($"query_id", $"qv", $"vec_id", $"embedding")
-          .unionByName(buf.crossJoin(broadcast(uniqueQueries))
-            .select($"query_id", $"qv", $"vec_id", $"embedding"))
-    }
-    pairs
-      .groupBy($"query_id")
-      .agg(topK(l2Sq($"embedding", $"qv"), $"vec_id", k).as("nn"))
-      .select($"query_id", posexplode($"nn"))
-      .select($"query_id", $"col.id".as("neighbor_id"),
-        ($"pos" + 1).cast("long").as("rnk"),
-        round(sqrt($"col.score"), 4).as("dist"))
+    val labelOk = $"label".isin(labels.map(i => i: Any): _*)
+    val buffer = graft.streaming.IvfDeltaIngest.deltaLatest(spark, indexDir)
+      .map(_.select($"vec_id", $"embedding").join(
+        assignmentsRead(spark, indexDir).filter(labelOk).select($"vec_id"),
+        "vec_id"))
+    rankProbed(probedScan(spark, indexDir, collectProbeIds(probes), labelOk),
+      buffer, queries, probes, k)
   }
+
+  private def assignmentsRead(spark: SparkSession,
+      indexDir: String): DataFrame =
+    spark.read.option("mergeSchema", "true").parquet(s"$indexDir/assignments")
+
+  /** The probed clusters' (vec_id, embedding, cluster_id) rows that
+    * pass `filter` — a literal partition filter, so only those clusters
+    * come off disk. The assignments table holds one row per vec_id
+    * (only the build and compact() write it, and both guarantee it),
+    * so no dedup is needed beyond the buffer shadow. */
+  private def probedScan(spark: SparkSession, indexDir: String,
+      probeIds: Seq[Int], filter: Column = lit(true)): DataFrame = {
+    import spark.implicits._
+    assignmentsRead(spark, indexDir)
+      .filter($"cluster_id".isin(probeIds.map(i => i: Any): _*))
+      .filter(filter)
+      .select($"vec_id", $"embedding", $"cluster_id")
+  }
+
+  /** The probed raw-vector searches' shared tail: `scan` paired with
+    * its `probes` (query_id, qv, cluster_id), shadowed by `buffer`
+    * ([[probedWithBuffer]]), ranked by exact squared L2. */
+  private def rankProbed(scan: DataFrame, buffer: Option[DataFrame],
+      queries: DataFrame, probes: DataFrame, k: Int): DataFrame =
+    KnnSearch.ranked(
+      probedWithBuffer(scan, buffer, queries)(
+        _.join(broadcast(probes), "cluster_id")
+          .select("query_id", "qv", "vec_id", "embedding")),
+      "query_id", l2Sq(col("embedding"), col("qv")), col("vec_id"), k)
+
+  /** Write-buffer fidelity, shared by every probed search over a store
+    * with a `delta_log` (engine.h:search_knn consults buffers BEFORE
+    * the graph): `pair` joins the pruned `scan` to its probes, minus
+    * every row whose vec_id the `buffer` (vec_id, embedding) holds (a
+    * broadcast anti-join — never a wide dedup shuffle), and every
+    * buffer row is paired with EVERY query, probe set or not, through
+    * `pairBuffer` (identity when `pair` already yields buffer-shaped
+    * columns). A vector re-ingested into a different cluster is
+    * therefore always served at its newest embedding, even when only
+    * its old cluster is probed — the "newest buffer entry shadows the
+    * index" contract, not an eventual-consistency window. With no
+    * buffer (post-compaction steady state) this is the plain probed
+    * scan. `queries` carries one (query_id, qv) row per query. */
+  private[operators] def probedWithBuffer(scan: DataFrame,
+      buffer: Option[DataFrame], queries: DataFrame)(
+      pair: DataFrame => DataFrame,
+      pairBuffer: DataFrame => DataFrame = identity): DataFrame =
+    buffer match {
+      case None => pair(scan)
+      case Some(b) =>
+        val buf = broadcast(b.select("vec_id", "embedding"))
+        pair(scan.join(broadcast(buf.select("vec_id")), Seq("vec_id"),
+            "left_anti"))
+          .unionByName(pairBuffer(buf.crossJoin(
+            broadcast(queries.select("query_id", "qv")))))
+    }
 
   /** ANN top-k: probe the nprobe nearest clusters per query. */
   def search(centroids: DataFrame, assignments: DataFrame,
@@ -266,12 +265,7 @@ object IvfIndex {
     val probes = resolveProbes(queries, centroids, nprobe)
     // 2. fetch candidates by cluster id (partition-pruned read at scale),
     //    rank with the bounded heap.
-    assignments.join(broadcast(probes), "cluster_id")
-      .groupBy($"query_id")
-      .agg(topK(l2Sq(col(vecCol), $"qv"), col(idCol), k).as("nn"))
-      .select($"query_id", posexplode($"nn"))
-      .select($"query_id", $"col.id".as("neighbor_id"),
-        ($"pos" + 1).cast("long").as("rnk"),
-        round(sqrt($"col.score"), 4).as("dist"))
+    KnnSearch.ranked(assignments.join(broadcast(probes), "cluster_id"),
+      "query_id", l2Sq(col(vecCol), $"qv"), col(idCol), k)
   }
 }

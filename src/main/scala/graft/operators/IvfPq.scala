@@ -50,37 +50,24 @@ object IvfPq {
       .filter($"cluster_id".isin(probeIds.map(i => i: Any): _*))
       .select($"vec_id", $"codes", $"cluster_id")
     val dtab = PqIndex.adcTable(queries, codebooks, subDim)
-    val indexed = lists
-      .join(broadcast(probes.select($"query_id", $"cluster_id")), "cluster_id")
-      .join(broadcast(dtab), "query_id")
-      .withColumn("adist", PqIndex.adcScore($"codes", $"dtab", numSub))
-      .select($"query_id", $"vec_id", $"adist")
-    // write-buffer fidelity (see IvfIndex.searchPruned): rows streamed in
-    // since the last compaction shadow their indexed predecessors and are
-    // brute-forced against every query at EXACT distance — the buffer is
-    // bounded and raw, so exact beats re-quantized approximation, just as
-    // engine.h brute-forces its buffers while the graph approximates.
-    val pairs = graft.streaming.IvfPqDeltaIngest
-        .deltaLatest(spark, listsDir) match {
-      case None => indexed
-      case Some(delta) =>
-        val buf = broadcast(delta.select($"vec_id", $"embedding"))
-        // one row per query by contract — reuse it directly rather than
-        // re-deriving it from probes' cross-join lineage with a distinct
-        val uniqueQueries = queries.select($"query_id", $"qv")
-        indexed
-          .join(broadcast(buf.select($"vec_id")), Seq("vec_id"), "left_anti")
-          .unionByName(buf.crossJoin(broadcast(uniqueQueries))
-            .withColumn("adist", l2Sq($"embedding", $"qv"))
-            .select($"query_id", $"vec_id", $"adist"))
-    }
-    pairs
-      .groupBy($"query_id")
-      .agg(topK($"adist", $"vec_id", k).as("nn"))
-      .select($"query_id", posexplode($"nn"))
-      .select($"query_id", $"col.id".as("neighbor_id"),
-        ($"pos" + 1).cast("long").as("rnk"),
-        round($"col.score", 4).as("adist"))
+    // write-buffer fidelity (IvfIndex.probedWithBuffer): rows streamed
+    // in since the last compaction shadow their indexed predecessors and
+    // are brute-forced against every query at EXACT distance — the
+    // buffer is bounded and raw, so exact beats re-quantized
+    // approximation, just as engine.h brute-forces its buffers while
+    // the graph approximates.
+    val pairs = IvfIndex.probedWithBuffer(lists,
+        graft.streaming.IvfPqDeltaIngest.deltaLatest(spark, listsDir),
+        queries)(
+      _.join(broadcast(probes.select($"query_id", $"cluster_id")),
+          "cluster_id")
+        .join(broadcast(dtab), "query_id")
+        .withColumn("adist", PqIndex.adcScore($"codes", $"dtab", numSub))
+        .select($"query_id", $"vec_id", $"adist"),
+      _.withColumn("adist", l2Sq($"embedding", $"qv"))
+        .select($"query_id", $"vec_id", $"adist"))
+    KnnSearch.ranked(pairs, "query_id", $"adist", $"vec_id", k,
+      out = "adist", finish = round(_, 4))
   }
 
   /** Residual-encoded IVF-PQ search (FAISS IndexIVFPQ semantics — see
@@ -115,13 +102,8 @@ object IvfPq {
       .groupBy($"query_id", $"cluster_id")
       .agg(transform(array_sort(collect_list(struct($"sub", $"code", $"d"))),
         x => x.getField("d")).as("dtab"))
-    lists.join(broadcast(dtab), "cluster_id")
-      .withColumn("adist", PqIndex.adcScore($"codes", $"dtab", numSub))
-      .groupBy($"query_id")
-      .agg(topK($"adist", $"vec_id", k).as("nn"))
-      .select($"query_id", posexplode($"nn"))
-      .select($"query_id", $"col.id".as("neighbor_id"),
-        ($"pos" + 1).cast("long").as("rnk"),
-        round($"col.score", 4).as("adist"))
+    KnnSearch.ranked(lists.join(broadcast(dtab), "cluster_id"), "query_id",
+      PqIndex.adcScore($"codes", $"dtab", numSub), $"vec_id", k,
+      out = "adist", finish = round(_, 4))
   }
 }

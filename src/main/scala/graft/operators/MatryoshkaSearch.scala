@@ -42,13 +42,8 @@ object MatryoshkaSearch {
     val pre = embeddings.select(col(idCol).cast("long").as("neighbor_id"),
       slice(col(vecCol), 1, prefixDim).as("pv"))
     val pq = queries.select($"query_id", slice($"qv", 1, prefixDim).as("pqv"))
-    val shortlist = pre
-      .crossJoin(broadcast(pq))
-      .withColumn("pdist", l2Sq($"pv", $"pqv"))
-      .groupBy($"query_id")
-      .agg(topK($"pdist", $"neighbor_id", k * refineFactor).as("nn"))
-      .select($"query_id",
-        explode(transform($"nn", x => x.getField("id"))).as("neighbor_id"))
+    val shortlist = KnnSearch.shortlist(pre.crossJoin(broadcast(pq)),
+      "query_id", l2Sq($"pv", $"pqv"), $"neighbor_id", k * refineFactor)
     PqIndex.refineExact(shortlist, embeddings, idCol, vecCol, queries, k)
   }
 }

@@ -95,15 +95,10 @@ object MaxSim {
       .select($"query_group", $"doc_group",
         aggregate($"ms", lit(0.0), (acc, x) => acc + x.getField("mx"))
           .as("score"))
-    scores
-      .groupBy($"query_group")
-      // negated: the bounded heap keeps the SMALLEST k, MaxSim wants
-      // the largest scores (qualified: the local method shadows the
-      // imported aggregate)
-      .agg(graft.GraftVector.topK(-$"score", $"doc_group", k).as("nn"))
-      .select($"query_group", posexplode($"nn"))
-      .select($"query_group", $"col.id".as("doc_group"),
-        ($"pos" + 1).cast("long").as("rnk"),
-        round(-$"col.score", 4).as("score"))
+    // negated: the bounded heap keeps the SMALLEST k, MaxSim wants
+    // the largest scores
+    KnnSearch.ranked(scores, "query_group", -$"score", $"doc_group", k,
+        out = "score", finish = s => round(-s, 4))
+      .withColumnRenamed("neighbor_id", "doc_group")
   }
 }

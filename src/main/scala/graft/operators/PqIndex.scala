@@ -166,17 +166,11 @@ object PqIndex {
       queries: DataFrame, k: Int): DataFrame = {
     val spark = shortlist.sparkSession
     import spark.implicits._
-    shortlist
-      .join(embeddings.select(col(idCol).cast("long").as("neighbor_id"),
-        col(vecCol).as("emb")), "neighbor_id")
-      .join(broadcast(queries), "query_id")
-      .withColumn("d2", l2Sq($"emb", $"qv"))
-      .groupBy($"query_id")
-      .agg(topK($"d2", $"neighbor_id", k).as("nn"))
-      .select($"query_id", posexplode($"nn"))
-      .select($"query_id", $"col.id".as("neighbor_id"),
-        ($"pos" + 1).cast("long").as("rnk"),
-        round(sqrt($"col.score"), 4).as("dist"))
+    KnnSearch.ranked(shortlist
+        .join(embeddings.select(col(idCol).cast("long").as("neighbor_id"),
+          col(vecCol).as("emb")), "neighbor_id")
+        .join(broadcast(queries), "query_id"),
+      "query_id", l2Sq($"emb", $"qv"), $"neighbor_id", k)
   }
 
   def search(codebooks: DataFrame, codes: DataFrame, queries: DataFrame,
@@ -185,14 +179,9 @@ object PqIndex {
     val spark = codes.sparkSession
     import spark.implicits._
     val dtab = adcTable(queries, codebooks, subDim)
-    codes.select(col(idCol).as("neighbor_id"), $"codes")
-      .crossJoin(broadcast(dtab))
-      .withColumn("adist", adcScore($"codes", $"dtab", numSub))
-      .groupBy($"query_id")
-      .agg(topK($"adist", $"neighbor_id", k).as("nn"))
-      .select($"query_id", posexplode($"nn"))
-      .select($"query_id", $"col.id".as("neighbor_id"),
-        ($"pos" + 1).cast("long").as("rnk"),
-        round($"col.score", 4).as("adist"))
+    KnnSearch.ranked(codes.select(col(idCol).as("neighbor_id"), $"codes")
+        .crossJoin(broadcast(dtab)),
+      "query_id", adcScore($"codes", $"dtab", numSub), $"neighbor_id", k,
+      out = "adist", finish = round(_, 4))
   }
 }

@@ -63,13 +63,8 @@ object RpSearch {
     val proj = embeddings.select(col(idCol).cast("long").as("neighbor_id"),
       project(col(vecCol), sm, outDim).as("pv"))
     val pq = queries.select($"query_id", project($"qv", sm, outDim).as("pqv"))
-    val shortlist = proj
-      .crossJoin(broadcast(pq))
-      .withColumn("pdist", l2Sq($"pv", $"pqv"))
-      .groupBy($"query_id")
-      .agg(topK($"pdist", $"neighbor_id", k * refineFactor).as("nn"))
-      .select($"query_id",
-        explode(transform($"nn", x => x.getField("id"))).as("neighbor_id"))
+    val shortlist = KnnSearch.shortlist(proj.crossJoin(broadcast(pq)),
+      "query_id", l2Sq($"pv", $"pqv"), $"neighbor_id", k * refineFactor)
     PqIndex.refineExact(shortlist, embeddings, idCol, vecCol, queries, k)
   }
 }

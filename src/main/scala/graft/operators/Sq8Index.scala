@@ -96,14 +96,11 @@ object Sq8Index {
     val spark = codes.sparkSession
     import spark.implicits._
     val (mins, scales) = gridArrays(grid)
-    val shortlist = codes
-      .select(col(idCol).cast("long").as("neighbor_id"), $"codes")
-      .crossJoin(broadcast(queries))
-      .withColumn("adist", adcScore($"codes", $"qv", mins, scales))
-      .groupBy($"query_id")
-      .agg(topK($"adist", $"neighbor_id", k * refineFactor).as("nn"))
-      .select($"query_id", explode(transform($"nn", x => x.getField("id")))
-        .as("neighbor_id"))
+    val shortlist = KnnSearch.shortlist(codes
+        .select(col(idCol).cast("long").as("neighbor_id"), $"codes")
+        .crossJoin(broadcast(queries)),
+      "query_id", adcScore($"codes", $"qv", mins, scales), $"neighbor_id",
+      k * refineFactor)
     PqIndex.refineExact(shortlist, embeddings, idCol, vecCol, queries, k)
   }
 }

@@ -3,9 +3,10 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{GraftText, GraftVector, Route}
+import graft.{GraftText, Route}
 import graft.GraftVector._
 import graft.Tables.load
+import graft.operators.KnnSearch
 
 /** Deduplication operators over `documents` / `embeddings` — the dedup
   * stage of a training-data pipeline, at four fidelity levels:
@@ -1110,11 +1111,9 @@ object DedupQueries {
         .withColumn("shuffle_key",
           pmod($"doc_id" * lit(2654435761L), lit(4294967296L)))
         // < 2^32, so the double cast is exact
-        .groupBy($"lang")
-        .agg(topK($"shuffle_key".cast("double"), $"doc_id", 20).as("sel"))
-        .select($"lang", posexplode($"sel"))
-        .select($"lang", $"col.id".as("doc_id"),
-          ($"pos" + 1).cast("long").as("rnk"))
+        .transform(KnnSearch.ranked(_, "lang",
+          $"shuffle_key".cast("double"), $"doc_id", 20))
+        .select($"lang", $"neighbor_id".as("doc_id"), $"rnk")
         .orderBy("lang", "rnk")
     }),
 
@@ -1322,18 +1321,11 @@ object DedupQueries {
       val q = emb.filter($"doc_id" < 8)
         .select($"doc_id".as("query_id"), $"source".as("q_source"),
           $"ev".as("qv"))
-      emb.select($"doc_id".as("neighbor_id"), $"source", $"ev")
-        .crossJoin(broadcast(q))
-        .filter($"source" =!= $"q_source")
-        .withColumn("d2", aggregate(
-          zip_with($"ev", $"qv", (a, b) => (a - b) * (a - b)),
-          lit(0.0), (acc, x) => acc + x))
-        .groupBy($"query_id")
-        .agg(GraftVector.topK($"d2", $"neighbor_id", 5).as("nn"))
-        .select($"query_id", posexplode($"nn"))
-        .select($"query_id", $"col.id".as("neighbor_id"),
-          ($"pos" + 1).cast("long").as("rnk"),
-          round(sqrt($"col.score"), 4).as("dist"))
+      KnnSearch.ranked(emb.select($"doc_id".as("neighbor_id"), $"source", $"ev")
+          .crossJoin(broadcast(q))
+          .filter($"source" =!= $"q_source"), "query_id",
+          aggregate(zip_with($"ev", $"qv", (a, b) => (a - b) * (a - b)),
+            lit(0.0), (acc, x) => acc + x), $"neighbor_id", 5)
         .orderBy("query_id", "rnk")
     }),
 

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.GraftVector._
 import graft.Tables.load
-import graft.operators.{IndexStore, IvfIndex, IvfPq, LshBuckets, PqIndex}
+import graft.operators.{GraphSearch, IndexStore, IvfIndex, IvfPq, KnnSearch,
+  LshBuckets, PqIndex}
 
 /** ANN-index surface: IVF build/search, LSH bucketing, recall evaluation
   * (the recall_bench.cpp analog). IVF/LSH outputs depend on seeded
@@ -473,11 +474,8 @@ object IndexQueries {
       val e = load(s, d, "embeddings")
       val q = e.filter($"vec_id" < NumQueries)
         .select($"vec_id".as("query_id"), $"embedding".as("qv"))
-      val gt = e.crossJoin(broadcast(q))
-        .groupBy($"query_id")
-        .agg(topK(l2Sq($"embedding", $"qv"), $"vec_id", K).as("gt"))
-        .select($"query_id",
-          explode(transform($"gt", x => x.getField("id"))).as("neighbor_id"))
+      val gt = KnnSearch.shortlist(e.crossJoin(broadcast(q)), "query_id",
+          l2Sq($"embedding", $"qv"), $"vec_id", K)
       val nq = q.agg(count(lit(1)).as("n_queries"))
       Seq(1, 2, 4, 8).map { rf =>
         graft.operators.MatryoshkaSearch
@@ -577,11 +575,8 @@ object IndexQueries {
       val e = load(s, d, "embeddings")
       val q = e.filter($"vec_id" < NumQueries)
         .select($"vec_id".as("query_id"), $"embedding".as("qv"))
-      val gt = e.crossJoin(broadcast(q))
-        .groupBy($"query_id")
-        .agg(topK(l2Sq($"embedding", $"qv"), $"vec_id", K).as("gt"))
-        .select($"query_id",
-          explode(transform($"gt", x => x.getField("id"))).as("neighbor_id"))
+      val gt = KnnSearch.shortlist(e.crossJoin(broadcast(q)), "query_id",
+          l2Sq($"embedding", $"qv"), $"vec_id", K)
         // EAGER checkpoint of the |Q|·k ground-truth rows: the four
         // sweep branches' gt subtrees are plan-identical and exchange
         // reuse USUALLY collapses them, but reuse is best-effort under
@@ -732,11 +727,8 @@ object IndexQueries {
       val e = load(s, d, "embeddings").select($"vec_id", $"embedding")
       val q = e.filter($"vec_id" < NumQueries)
         .select($"vec_id".as("query_id"), $"embedding".as("qv"))
-      val gt = e.crossJoin(broadcast(q))
-        .groupBy($"query_id")
-        .agg(topK(l2Sq($"embedding", $"qv"), $"vec_id", K).as("gt"))
-        .select($"query_id",
-          explode(transform($"gt", x => x.getField("id"))).as("neighbor_id"))
+      val gt = KnnSearch.shortlist(e.crossJoin(broadcast(q)), "query_id",
+          l2Sq($"embedding", $"qv"), $"vec_id", K)
         // eager |Q|·k checkpoint — the v_nprobe_sweep discipline
         .localCheckpoint(true)
       val nq = q.agg(count(lit(1)).as("n_queries"))
@@ -1151,39 +1143,9 @@ object IndexQueries {
     * ranks candidates from those clusters — shared by the graph entry
     * and the mutual-kNN clustering. */
   private def knnGraphRaw(s: SparkSession, d: String)
-      : org.apache.spark.sql.DataFrame = {
-    import s.implicits._
-    val dir = IndexStore.graphIvf(s, d)
-    val cent = s.read.parquet(s"$dir/centroids")
-      .select($"cluster_id", $"centroid")
-    val e = load(s, d, "embeddings").select($"vec_id", $"embedding")
-    // k×-expansion stages: scan and join parallelism both floored
-    // (Expand scaladocs — byte-based split sizing and AQE are blind
-    // to the |cent|× probe fan-out and the population× join fan-out);
-    // qv rides the probe row so the fan-out is scored AT the members
-    // join and dies in the same stage's partial top-k — only
-    // |queries|×k rows ever cross a shuffle (GraphSearch discipline)
-    val probes = graft.operators.Expand.floorParallelism(e)
-      .crossJoin(broadcast(cent))
-      .groupBy($"vec_id")
-      .agg(topK(l2Sq($"embedding", $"centroid"), $"cluster_id".cast("long"), 2)
-        .as("ps"),
-        first($"embedding").as("qv"))
-      .select($"vec_id".as("query_id"), $"qv",
-        explode(transform($"ps", p => p.getField("id"))).as("cluster_id"))
-    val members = s.read.parquet(s"$dir/assignments")
-      .select($"vec_id".as("neighbor_id"), $"embedding".as("nv"),
-        $"cluster_id".cast("long").as("cluster_id"))
-    graft.operators.Expand.pinJoinParallelism(probes, $"cluster_id")
-      .join(graft.operators.Expand.floorParallelism(members), "cluster_id")
-      .filter($"neighbor_id" =!= $"query_id")
-      .groupBy($"query_id")
-      .agg(topK(l2Sq($"nv", $"qv"), $"neighbor_id", 5).as("nn"))
-      .select($"query_id".as("vec_id"), posexplode($"nn"))
-      .select($"vec_id", $"col.id".as("neighbor_id"),
-        ($"pos" + 1).cast("long").as("rnk"),
-        round(sqrt($"col.score"), 4).as("dist"))
-  }
+      : org.apache.spark.sql.DataFrame =
+    GraphSearch.knnGraph(s, IndexStore.graphIvf(s, d),
+      load(s, d, "embeddings").select("vec_id", "embedding"), k = 5, nprobe = 2)
 
   private def annOracles: Map[String, String] = try {
     val s = SparkSession.active

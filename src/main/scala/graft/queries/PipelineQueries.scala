@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.GraftVector._
 import graft.Tables.load
-import graft.operators.Multimodal
+import graft.operators.{KnnSearch, Multimodal}
 
 /** Pipeline-surface queries: multimodal feature plumbing and the batch
   * equivalent of the streaming ingest state (latest event per key). The
@@ -127,15 +127,9 @@ object PipelineQueries {
       val q = Multimodal.featurize(Multimodal.asMedia(
           load(s, d, "documents").filter($"doc_id" < 8)))
         .toDF().select($"doc_id".as("query_id"), $"features".as("qv"))
-      f.select($"doc_id".as("neighbor_id"), $"features")
-        .crossJoin(broadcast(q))
-        .withColumn("d2", l2Sq($"features", $"qv"))
-        .groupBy($"query_id")
-        .agg(topK($"d2", $"neighbor_id", 5).as("nn"))
-        .select($"query_id", posexplode($"nn"))
-        .select($"query_id", $"col.id".as("neighbor_id"),
-          ($"pos" + 1).cast("long").as("rnk"),
-          round(sqrt($"col.score"), 4).as("dist"))
+      KnnSearch.ranked(f.select($"doc_id".as("neighbor_id"), $"features")
+          .crossJoin(broadcast(q)), "query_id",
+          l2Sq($"features", $"qv"), $"neighbor_id", 5)
         .orderBy("query_id", "rnk")
     }),
 
@@ -201,15 +195,9 @@ object PipelineQueries {
             load(s, d, "documents").filter($"doc_id" < 8).select($"doc_id")),
           Multimodal.rasterPoolDecoder _)
         .toDF().select($"doc_id".as("query_id"), $"features".as("qv"))
-      f.select($"doc_id".as("neighbor_id"), $"features")
-        .crossJoin(broadcast(q))
-        .withColumn("d2", l2Sq($"features", $"qv"))
-        .groupBy($"query_id")
-        .agg(topK($"d2", $"neighbor_id", 5).as("nn"))
-        .select($"query_id", posexplode($"nn"))
-        .select($"query_id", $"col.id".as("neighbor_id"),
-          ($"pos" + 1).cast("long").as("rnk"),
-          round(sqrt($"col.score"), 4).as("dist"))
+      KnnSearch.ranked(f.select($"doc_id".as("neighbor_id"), $"features")
+          .crossJoin(broadcast(q)), "query_id",
+          l2Sq($"features", $"qv"), $"neighbor_id", 5)
         .orderBy("query_id", "rnk")
     }),
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.GraftVector._
 import graft.Tables.load
+import graft.operators.KnnSearch
 
 /** Vector-core query surface: the Spark re-expression of the reference's
   * search/insert semantics (/root/reference/include/engine.h,
@@ -85,18 +86,11 @@ object VectorQueries {
       val e = load(s, d, "embeddings")
       val q = e.filter($"vec_id" < NumQueries)
         .select($"vec_id".as("query_id"), $"embedding".as("qv"))
-      e.crossJoin(broadcast(q))
-        .groupBy($"query_id")
-        // rank by squared distance — sqrt is monotone, so the top-k set
-        // and order are identical; the sqrt is paid on k rows, not N
-        // (distance.cpp pulls the same trick by never rooting sums)
-        .agg(topK(l2Sq($"embedding", $"qv"), $"vec_id", K).as("nn"))
-        .select($"query_id", posexplode($"nn"))
-        .select(
-          $"query_id",
-          $"col.id".as("neighbor_id"),
-          ($"pos" + 1).cast("long").as("rnk"),
-          round(sqrt($"col.score"), 4).as("dist"))
+      // rank by squared distance — sqrt is monotone, so the top-k set
+      // and order are identical; the sqrt is paid on k rows, not N
+      // (distance.cpp pulls the same trick by never rooting sums)
+      KnnSearch.ranked(e.crossJoin(broadcast(q)), "query_id",
+          l2Sq($"embedding", $"qv"), $"vec_id", K)
         .orderBy("query_id", "rnk")
     }),
 
@@ -117,15 +111,9 @@ object VectorQueries {
       val e = load(s, d, "embeddings")
       val q = e.filter($"vec_id" < NumQueries)
         .select($"vec_id".as("query_id"), $"embedding".as("qv"))
-      e.crossJoin(broadcast(q))
-        .groupBy($"query_id")
-        .agg(topK(-dot($"embedding", $"qv"), $"vec_id", K).as("nn"))
-        .select($"query_id", posexplode($"nn"))
-        .select(
-          $"query_id",
-          $"col.id".as("neighbor_id"),
-          ($"pos" + 1).cast("long").as("rnk"),
-          round(-$"col.score", 4).as("score"))
+      KnnSearch.ranked(e.crossJoin(broadcast(q)), "query_id",
+          -dot($"embedding", $"qv"), $"vec_id", K,
+          out = "score", finish = s => round(-s, 4))
         .orderBy("query_id", "rnk")
     }),
 
@@ -327,13 +315,8 @@ object VectorQueries {
         .agg(max_by($"embedding", $"pri").as("embedding"))
       val q = merged.filter($"vec_id" < 8)
         .select($"vec_id".as("query_id"), $"embedding".as("qv"))
-      merged.crossJoin(broadcast(q))
-        .groupBy($"query_id")
-        .agg(topK(l2Sq($"embedding", $"qv"), $"vec_id", K).as("nn"))
-        .select($"query_id", posexplode($"nn"))
-        .select($"query_id", $"col.id".as("neighbor_id"),
-          ($"pos" + 1).cast("long").as("rnk"),
-          round(sqrt($"col.score"), 4).as("dist"))
+      KnnSearch.ranked(merged.crossJoin(broadcast(q)), "query_id",
+          l2Sq($"embedding", $"qv"), $"vec_id", K)
         .orderBy("query_id", "rnk")
     }),
 
@@ -346,14 +329,9 @@ object VectorQueries {
       val e = load(s, d, "embeddings")
       val q = e.filter($"vec_id" < NumQueries)
         .select($"vec_id".as("query_id"), $"embedding".as("qv"))
-      e.filter($"label".isin(1, 2, 3))
-        .crossJoin(broadcast(q))
-        .groupBy($"query_id")
-        .agg(topK(l2Sq($"embedding", $"qv"), $"vec_id", K).as("nn"))
-        .select($"query_id", posexplode($"nn"))
-        .select($"query_id", $"col.id".as("neighbor_id"),
-          ($"pos" + 1).cast("long").as("rnk"),
-          round(sqrt($"col.score"), 4).as("dist"))
+      KnnSearch.ranked(e.filter($"label".isin(1, 2, 3))
+          .crossJoin(broadcast(q)), "query_id",
+          l2Sq($"embedding", $"qv"), $"vec_id", K)
         .orderBy("query_id", "rnk")
     }),
 

@@ -2,6 +2,7 @@ package graft.sources
 
 import java.nio.{ByteBuffer, ByteOrder}
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Readers for the SIFT `.fvecs` / `.ivecs` binary formats
@@ -16,46 +17,71 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Fvecs {
 
+  /** The one `.fvecs`/`.ivecs` record decoder over a whole file's
+    * bytes: each record is `int32 dim` + `dim` little-endian 4-byte
+    * values, read one record at a time with a bulk float or int get.
+    * A partial trailing header, a negative dim or a record cut short
+    * fails with an IOException naming the file and the record index —
+    * a truncated file is never read as a shorter valid one. */
+  private[sources] final class Records(path: String, bytes: Array[Byte]) {
+    private val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
+    private var idx = 0L
+
+    def hasNext: Boolean = bb.hasRemaining
+
+    /** The next record's dim, with the buffer positioned at its values. */
+    private def header(): Int = {
+      def fail(why: String): Nothing =
+        throw new java.io.IOException(s"$path: record $idx: $why")
+      if (bb.remaining() < 4)
+        fail(s"partial header (${bb.remaining()} trailing bytes)")
+      val dim = bb.getInt()
+      if (dim < 0) fail(s"negative dim $dim")
+      if (bb.remaining() < 4L * dim)
+        fail(s"dim $dim needs ${4L * dim} bytes, ${bb.remaining()} left")
+      dim
+    }
+
+    private def advance(values: Int): Unit = {
+      bb.position(bb.position() + 4 * values); idx += 1
+    }
+
+    def nextFloats(): Array[Float] = {
+      val v = new Array[Float](header())
+      bb.asFloatBuffer().get(v); advance(v.length); v
+    }
+
+    def nextInts(): Array[Int] = {
+      val v = new Array[Int](header())
+      bb.asIntBuffer().get(v); advance(v.length); v
+    }
+  }
+
+  /** (file, record index, values) for every record of every file
+    * `path` matches; `next` reads one record's values. */
+  private def decode[A](spark: SparkSession, path: String)(
+      next: Records => A): RDD[(String, Long, A)] =
+    spark.sparkContext.binaryFiles(path).flatMap { case (file, pds) =>
+      val rs = new Records(file, pds.toArray())
+      Iterator.unfold(0L) { i =>
+        if (rs.hasNext) Some(((file, i, next(rs)), i + 1)) else None
+      }
+    }
+
   /** Read .fvecs → (id bigint, vector array<float>). Ids are the record
     * index within each file offset by `idOffset`. */
   def readFvecs(spark: SparkSession, path: String, idOffset: Long = 0L): DataFrame = {
     import spark.implicits._
-    spark.sparkContext.binaryFiles(path)
-      .flatMap { case (_, pds) =>
-        val bytes = pds.toArray()
-        val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-        Iterator.unfold(0L) { idx =>
-          if (bb.remaining() < 4) None
-          else {
-            val dim = bb.getInt()
-            val vec = Array.ofDim[Float](dim)
-            var i = 0
-            while (i < dim) { vec(i) = bb.getFloat(); i += 1 }
-            Some(((idOffset + idx, vec.toSeq), idx + 1))
-          }
-        }
-      }
+    decode(spark, path)(_.nextFloats())
+      .map { case (_, i, v) => (idOffset + i, v.toSeq) }
       .toDF("id", "vector")
   }
 
   /** Read .ivecs (ground-truth neighbor lists) → (id, neighbors array<int>). */
   def readIvecs(spark: SparkSession, path: String, idOffset: Long = 0L): DataFrame = {
     import spark.implicits._
-    spark.sparkContext.binaryFiles(path)
-      .flatMap { case (_, pds) =>
-        val bytes = pds.toArray()
-        val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-        Iterator.unfold(0L) { idx =>
-          if (bb.remaining() < 4) None
-          else {
-            val dim = bb.getInt()
-            val ids = Array.ofDim[Int](dim)
-            var i = 0
-            while (i < dim) { ids(i) = bb.getInt(); i += 1 }
-            Some(((idOffset + idx, ids.toSeq), idx + 1))
-          }
-        }
-      }
+    decode(spark, path)(_.nextInts())
+      .map { case (_, i, v) => (idOffset + i, v.toSeq) }
       .toDF("id", "neighbors")
   }
 
@@ -73,39 +99,15 @@ object Fvecs {
 
   private def readFvecsLocal(spark: SparkSession, glob: String): DataFrame = {
     import spark.implicits._
-    spark.sparkContext.binaryFiles(glob)
-      .flatMap { case (path, pds) =>
-        val bb = ByteBuffer.wrap(pds.toArray()).order(ByteOrder.LITTLE_ENDIAN)
-        Iterator.unfold(0L) { idx =>
-          if (bb.remaining() < 4) None
-          else {
-            val dim = bb.getInt()
-            val vec = Array.ofDim[Float](dim)
-            var i = 0
-            while (i < dim) { vec(i) = bb.getFloat(); i += 1 }
-            Some(((path, idx, vec.toSeq), idx + 1))
-          }
-        }
-      }
+    decode(spark, glob)(_.nextFloats())
+      .map { case (p, i, v) => (p, i, v.toSeq) }
       .toDF("path", "local_id", "vector")
   }
 
   private def readIvecsLocal(spark: SparkSession, glob: String): DataFrame = {
     import spark.implicits._
-    spark.sparkContext.binaryFiles(glob)
-      .flatMap { case (path, pds) =>
-        val bb = ByteBuffer.wrap(pds.toArray()).order(ByteOrder.LITTLE_ENDIAN)
-        Iterator.unfold(0L) { idx =>
-          if (bb.remaining() < 4) None
-          else {
-            val dim = bb.getInt()
-            val ids = Array.ofDim[Int](dim)
-            var i = 0
-            while (i < dim) { ids(i) = bb.getInt(); i += 1 }
-            Some(((path, idx, ids.toSeq), idx + 1))
-          }
-        }
-      }
+    decode(spark, glob)(_.nextInts())
+      .map { case (p, i, v) => (p, i, v.toSeq) }
       .toDF("path", "local_id", "neighbors")
   }
 

@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.nio.{ByteBuffer, ByteOrder}
 import java.util
 
 import scala.jdk.CollectionConverters._
@@ -74,24 +73,21 @@ case class FvecsPartition(file: String) extends InputPartition
 
 class FvecsPartitionReader(file: String) extends PartitionReader[InternalRow] {
   private val fileUtf8 = org.apache.spark.unsafe.types.UTF8String.fromString(file)
-  private val bb: ByteBuffer = {
+  private val records: Fvecs.Records = {
     val p = new Path(file)
     val fs = p.getFileSystem(new Configuration())
     val len = fs.getFileStatus(p).getLen.toInt
     val bytes = new Array[Byte](len)
     val in = fs.open(p)
     try in.readFully(0, bytes) finally in.close()
-    ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
+    new Fvecs.Records(file, bytes)
   }
   private var idx = -1L
   private var current: InternalRow = _
 
   override def next(): Boolean = {
-    if (bb.remaining() < 4) return false
-    val dim = bb.getInt()
-    val vec = Array.ofDim[Float](dim)
-    var i = 0
-    while (i < dim) { vec(i) = bb.getFloat(); i += 1 }
+    if (!records.hasNext) return false
+    val vec = records.nextFloats()
     idx += 1
     current = new GenericInternalRow(
       Array[Any](fileUtf8, idx, ArrayData.toArrayData(vec)))

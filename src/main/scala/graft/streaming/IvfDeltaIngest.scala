@@ -207,8 +207,11 @@ object IvfDeltaIngest {
     * folded to the latest seq per vec_id. Buffer rows missing a payload
     * column (written by an older layout, which also wrote the same data
     * into the table itself) are skipped rather than folded in as nulls.
-    * The shared "what does the index logically hold" read for both the
-    * raw-vector and IVF-PQ paths. */
+    * The table's other columns (metadata such as `label`, immutable per
+    * vec_id) ride through from the indexed row with the same vec_id; a
+    * vec_id only the buffer holds gets nulls there. The shared "what
+    * does the index logically hold" read for both the raw-vector and
+    * IVF-PQ paths. */
   private[streaming] def latestTable(spark: SparkSession, dir: String,
       table: String, payload: Seq[String]): DataFrame = {
     val cols = ("vec_id" +: payload) :+ "seq" :+ "cluster_id"
@@ -216,14 +219,18 @@ object IvfDeltaIngest {
       if (!payload.forall(df.columns.contains)) None
       else Some(ensureSeq(df).select(cols.map(col): _*)
         .filter(payload.map(col(_).isNotNull).reduce(_ && _)))
-    val raw = ensureSeq(spark.read.option("mergeSchema", "true")
-        .parquet(s"$dir/$table"))
-      .select(cols.map(col): _*)
+    val stored = ensureSeq(spark.read.option("mergeSchema", "true")
+      .parquet(s"$dir/$table"))
+    val raw = stored.select(cols.map(col): _*)
     val all = deltaRaw(spark, dir).flatMap(normalized) match {
       case Some(d) => raw.unionByName(d)
       case None => raw
     }
-    latestBySeq(all, payload)
+    val latest = latestBySeq(all, payload)
+    val meta = stored.columns.filterNot(cols.contains)
+    if (meta.isEmpty) latest
+    else latest.join(stored.select(("vec_id" +: meta).map(col): _*),
+      Seq("vec_id"), "left")
   }
 
   /** The current logical table: assignments ∪ write buffer with

@@ -104,4 +104,39 @@ class FvecsSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getSeq[Int](1)))
     assert(got === Array((0L, Seq(7, 8, 9)), (1L, Seq(1, 2, 3))))
   }
+
+  test("a truncated .fvecs/.ivecs file fails on every read path, naming file and record") {
+    // three records of dim 4 — the same bytes are a valid .fvecs and .ivecs
+    val bb = java.nio.ByteBuffer.allocate(3 * (4 + 4 * 4))
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    (0 until 3).foreach { r => bb.putInt(4); (0 until 4).foreach(j => bb.putInt(r * 4 + j)) }
+    val whole = bb.array()
+    val negative = java.nio.ByteBuffer.allocate(4)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN).putInt(-1).array()
+    Seq(
+      "partial trailing header" -> (whole ++ Array[Byte](1, 2), 3),
+      "cut-short last record" -> (whole.dropRight(6), 2),
+      "negative dim" -> (whole ++ negative, 3)
+    ).foreach { case (what, (bytes, record)) =>
+      val dir = Files.createTempDirectory("graft-fvecs-bad")
+      Seq("fvecs", "ivecs").foreach(ext =>
+        Files.write(dir.resolve(s"part-00000.$ext"), bytes))
+      val reads: Seq[(String, String, () => Any)] = Seq(
+        ("readFvecs", "fvecs",
+          () => Fvecs.readFvecs(spark, s"$dir/part-00000.fvecs").collect()),
+        ("readIvecs", "ivecs",
+          () => Fvecs.readIvecs(spark, s"$dir/part-00000.ivecs").collect()),
+        ("readFvecsDir", "fvecs", () => Fvecs.readFvecsDir(spark, dir.toString)),
+        ("readIvecsDir", "ivecs", () => Fvecs.readIvecsDir(spark, dir.toString)),
+        ("format(fvecs)", "fvecs", () => spark.read.format("fvecs")
+          .load(s"$dir/part-00000.fvecs").collect()))
+      reads.foreach { case (path, ext, read) =>
+        val e = intercept[Exception](read())
+        val msg = Iterator.iterate[Throwable](e)(_.getCause)
+          .takeWhile(_ != null).map(_.getMessage).mkString(" / ")
+        assert(msg.contains(s"part-00000.$ext: record $record:"),
+          s"$what via $path: $msg")
+      }
+    }
+  }
 }

@@ -3,8 +3,9 @@ package graft
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.functions._
 
+import graft.functions.VectorKernels
 import graft.operators.{IndexStore, IvfIndex}
-import graft.streaming.IvfDeltaIngest
+import graft.streaming.{IvfDeltaIngest, ResidentIvf}
 
 /** The write path INTO the index: streamed deltas must land in the
   * write buffer only (searchable at once, no rebuild), newest write
@@ -192,5 +193,161 @@ class IvfDeltaIngestSpec extends SparkSpec {
     // vec 0 now carries vec 7's embedding: one of them must be top-1 at dist 0
     assert(Set(0L, 7L).contains(top.getLong(1)))
     assert(top.getDouble(3) === 0.0)
+  }
+
+  private def vecsOf(ids: Seq[Long]): Seq[(Long, Array[Float])] =
+    spark.read.parquet(s"$sfDir/embeddings.parquet")
+      .filter($"vec_id".isin(ids: _*)).orderBy("vec_id").collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
+
+  private def batchOf(rows: Seq[(Long, Array[Float])]) =
+    rows.map { case (id, v) => (id, v.toSeq) }.toDF("vec_id", "embedding")
+      .select($"vec_id", $"embedding".cast("array<float>").as("embedding"))
+
+  private def queriesOf(qs: Seq[Array[Float]]) =
+    qs.zipWithIndex.map { case (v, i) => (i.toLong, v.toSeq) }
+      .toDF("query_id", "qv")
+      .select($"query_id", $"qv".cast("array<float>").as("qv"))
+
+  private def centroidsOf(dir: String): Seq[(Int, Array[Float])] =
+    spark.read.parquet(s"$dir/centroids").collect()
+      .map(r => (r.getInt(0), r.getSeq[Float](1).toArray)).toSeq
+
+  /** Result rows as (query_id, neighbor_id, rnk, dist bits): NaN
+    * distances compare equal. */
+  private def rowsOf(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+      java.lang.Double.doubleToLongBits(r.getDouble(3)))).toSeq.sorted
+
+  /** A labelled store with a write buffer that re-ingests existing ids:
+    * five vectors moved onto other vectors' embeddings (distance-0 ties
+    * with their sources), vec 20 at the centroid farthest from it (its
+    * old embedding, queried with nprobe = 2, probes its old cluster
+    * only), and vec 40 with a NaN component. Returns the store and the
+    * queries: vecs 0..5 and vec 20's old embedding. */
+  private def bufferedStore(nprobe: Int): (String, Seq[Array[Float]]) = {
+    val dir = freshIndex()
+    val cents = centroidsOf(dir)
+    val (_, old20) = vecsOf(Seq(20L)).head
+    val probes = cents.map { case (c, cv) => (VectorKernels.l2sqF(old20, cv), c) }
+      .sorted.take(nprobe).map(_._2)
+    val (far, farV) = cents.maxBy { case (_, cv) => VectorKernels.l2sqF(old20, cv) }
+    assert(!probes.contains(far))
+    val moved = vecsOf(0L until 5L).map { case (id, v) => (id + 30L, v) }
+    val nan = vecsOf(Seq(40L)).map { case (id, v) =>
+      val w = v.clone(); w(3) = Float.NaN; (id, w) }
+    IvfDeltaIngest.appendBatch(spark, dir, batchOf(moved), seq = 1L)
+    IvfDeltaIngest.appendBatch(spark, dir, batchOf(Seq(20L -> farV) ++ nan),
+      seq = 2L)
+    assert(IvfDeltaIngest.deltaLatest(spark, dir).get
+      .filter($"vec_id" === 20L).select($"cluster_id").head().getInt(0) == far)
+    (dir, vecsOf(0L until 6L).map(_._2) :+ old20)
+  }
+
+  /** The filtered search's contract in plain Scala: each query's
+    * candidates are the latest row of every vec_id, taken from its
+    * probed clusters or from the buffer (every query sees every buffer
+    * row), whose indexed row's label is in `labels`; ranked by
+    * (squared L2, vec_id), dist rounded like Catalyst. */
+  private def filteredModel(dir: String, qs: Seq[Array[Float]], k: Int,
+      nprobe: Int, labels: Set[Int]): Seq[(Long, Long, Long, Long)] = {
+    val indexed = spark.read.parquet(s"$dir/assignments")
+      .select($"vec_id", $"embedding", $"label", $"cluster_id").collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray, r.getInt(2),
+        r.getInt(3))).toSeq
+    val labelOf = indexed.map(r => r._1 -> r._3).toMap
+    val buffer = IvfDeltaIngest.deltaLatest(spark, dir).get
+      .select($"vec_id", $"embedding").collect()
+      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
+    val cents = centroidsOf(dir)
+    qs.zipWithIndex.flatMap { case (q, qi) =>
+      val probes = cents.map { case (c, cv) => (VectorKernels.l2sqF(q, cv), c) }
+        .sorted.take(nprobe).map(_._2).toSet
+      val cands = indexed
+        .filter(r => probes(r._4) && !buffer.contains(r._1))
+        .map(r => r._1 -> r._2) ++ buffer
+      cands.filter { case (id, _) => labelOf.get(id).exists(labels) }
+        .map { case (id, v) => (VectorKernels.l2sqF(v, q), id) }
+        .sorted(Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long))
+        .take(k).zipWithIndex.map { case ((d, id), r) =>
+          (qi.toLong, id, r + 1L, java.lang.Double.doubleToLongBits(
+            ResidentIvf.round4(math.sqrt(d))))
+        }
+    }.sorted
+  }
+
+  // k above every probed candidate count: whole ranked lists, the NaN
+  // tail included, are compared
+  private val FilterK = 500
+  private val FilterProbes = 2
+
+  test("filtered search over a buffered store with every label equals searchPruned") {
+    val (dir, qs) = bufferedStore(FilterProbes)
+    val all = spark.read.parquet(s"$dir/assignments").select($"label")
+      .distinct().collect().map(_.getInt(0)).toSeq
+    val q = queriesOf(qs)
+    val got = rowsOf(IvfIndex.searchPrunedFiltered(spark, dir, q, FilterK,
+      FilterProbes, all))
+    assert(got == rowsOf(IvfIndex.searchPruned(spark, dir, q, FilterK,
+      FilterProbes)))
+    assert(got.exists(r => r._2 == 40L && java.lang.Double.isNaN(
+      java.lang.Double.longBitsToDouble(r._4))), "the NaN row must rank")
+  }
+
+  test("filtered search over a buffered store with a label subset equals " +
+      "the brute force over passing latest rows") {
+    val (dir, qs) = bufferedStore(FilterProbes)
+    val labelOf = spark.read.parquet(s"$dir/assignments")
+      .select($"vec_id", $"label").collect()
+      .map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val labels = Set(labelOf(20L), labelOf(30L), labelOf(40L))
+    assert(labels.size < labelOf.values.toSet.size)
+    val q = queriesOf(qs)
+    def check(stage: String): Unit = {
+      val got = rowsOf(IvfIndex.searchPrunedFiltered(spark, dir, q, FilterK,
+        FilterProbes, labels.toSeq))
+      assert(got == filteredModel(dir, qs, FilterK, FilterProbes, labels),
+        s"$stage: filtered search differs from the brute force")
+      assert(got.exists(_._2 == 20L), s"$stage: the moved vector must rank")
+    }
+    check("buffered store")
+    // a vec_id only the buffer holds has no label, so no filter passes it
+    IvfDeltaIngest.appendBatch(spark, dir, batchOf(Seq(900000L -> qs.head)),
+      seq = 3L)
+    check("buffer-only id")
+  }
+
+  test("compaction keeps a labelled store's label column and filtered answers") {
+    val dir = freshIndex()
+    val asg = spark.read.parquet(s"$dir/assignments")
+      .select($"vec_id", $"embedding", $"label", $"cluster_id").orderBy("vec_id")
+      .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray,
+        r.getInt(2), r.getInt(3))).toSeq
+    val (_, _, label0, c0) = asg.head
+    // re-ingest labelled vec 0 onto a vector of another cluster, plus one
+    // fresh id; the queries are that cluster's members, so every one of
+    // them probes vec 0's new cluster once compaction has moved it there
+    val members = asg.filter(_._4 != c0).groupBy(_._4).values
+      .filter(_.size > 7).minBy(_.head._1).map(_._2)
+    IvfDeltaIngest.appendBatch(spark, dir,
+      batchOf(Seq(0L -> members.head, 900000L -> asg(5)._2)), seq = 1L)
+    val labels = Seq(label0, (label0 + 1) % 10, (label0 + 2) % 10)
+    val q = queriesOf(members.take(7))
+    def filtered() = rowsOf(
+      IvfIndex.searchPrunedFiltered(spark, dir, q, k = 5, nprobe = 2, labels))
+    val before = spark.read.parquet(s"$dir/assignments").columns.toSet
+    val pre = filtered()
+    assert(pre.exists(_._2 == 0L), "the moved vector must rank before compaction")
+
+    IvfDeltaIngest.compact(spark, dir)
+    val table = spark.read.option("mergeSchema", "true")
+      .parquet(s"$dir/assignments")
+    // the fold adds only the seq column it orders by
+    assert(table.columns.toSet == before + "seq")
+    assert(filtered() == pre)
+    assert(table.filter($"vec_id" === 0L).select($"label").head().getInt(0) ==
+      label0, "a moved vector keeps its label")
+    assert(table.filter($"vec_id" === 900000L).select($"label").head().isNullAt(0),
+      "a buffer-only id has no label")
   }
 }
