@@ -17,10 +17,12 @@ object SparkEntry {
     * ~70 GB spill per brute-force kNN entry, disk-full aborts). Each
     * group's buffer is a bounded heap/sketch, so holding 2¹⁸ of them is
     * tens of MB — raising the threshold keeps the fan-out in the
-    * map-side combine where the plan put it. */
+    * map-side combine where the plan put it. A [[GraftSession]] has it
+    * from its builder, so the conf is written only when it differs (a
+    * caller-owned session, once). */
   def tune(spark: SparkSession): SparkSession = {
-    spark.conf.set(
-      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 262144)
+    val (key, value) = GraftSession.FallbackThreshold
+    if (!spark.conf.getOption(key).contains(value)) spark.conf.set(key, value)
     spark
   }
 

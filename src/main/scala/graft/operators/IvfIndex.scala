@@ -181,20 +181,19 @@ object IvfIndex {
     * predicate-passing candidates, so it always fills to k when k
     * matches exist in the probed clusters. Write-buffer rows shadow
     * the index through the same [[probedWithBuffer]] step as
-    * searchPruned; their labels are looked up from the persisted
-    * assignments by id (metadata is immutable here — a moved vector
-    * keeps its label, and a vec_id the index does not hold yet has
-    * none, so no filter passes it). */
+    * searchPruned. A buffer row's label is its own, or the indexed
+    * row's for the same vec_id where it has none (a vec_id in neither
+    * has no label, so no filter passes it); a buffer row whose label
+    * fails keeps shadowing its vec_id with a null embedding, which
+    * never ranks. */
   def searchPrunedFiltered(spark: SparkSession, indexDir: String,
       queries: DataFrame, k: Int, nprobe: Int, labels: Seq[Int]): DataFrame = {
     import spark.implicits._
     val centroids = spark.read.parquet(s"$indexDir/centroids")
     val probes = resolveProbes(queries, centroids, nprobe)
     val labelOk = $"label".isin(labels.map(i => i: Any): _*)
-    val buffer = graft.streaming.IvfDeltaIngest.deltaLatest(spark, indexDir)
-      .map(_.select($"vec_id", $"embedding").join(
-        assignmentsRead(spark, indexDir).filter(labelOk).select($"vec_id"),
-        "vec_id"))
+    val buffer = graft.streaming.IvfDeltaIngest.deltaLatestMeta(spark, indexDir)
+      .map(_.select($"vec_id", when(labelOk, $"embedding").as("embedding")))
     rankProbed(probedScan(spark, indexDir, collectProbeIds(probes), labelOk),
       buffer, queries, probes, k)
   }

@@ -104,7 +104,9 @@ private[graft] object ResidentIvf {
     * partition, which no probe reaches); `ok` is false for a layout
     * the scan would read differently (a file outside a partition
     * directory, a nested directory, a non-integer partition value, or
-    * a missing or empty assignments table or buffer directory). */
+    * a missing or empty assignments table). A buffer directory without
+    * a visible file is an empty buffer, as [[IvfDeltaIngest.deltaRaw]]
+    * reads it. */
   final case class Listing(assignments: Map[Path, Stamp],
       clusterOf: Map[Path, Option[Int]], delta: Map[Path, Stamp], ok: Boolean) {
     def bytes: Long = (assignments.valuesIterator ++ delta.valuesIterator)
@@ -112,7 +114,7 @@ private[graft] object ResidentIvf {
   }
 
   /** Spark's file-index rule for names it never reads as data. */
-  private def hidden(name: String): Boolean =
+  private[streaming] def hidden(name: String): Boolean =
     (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
       name.endsWith("._COPYING_")
 
@@ -169,7 +171,6 @@ private[graft] object ResidentIvf {
         case (f, false, st) => delta(f) = st
         case _ => ok = false
       }
-      if (delta.isEmpty) ok = false
     }
     if (assignments.isEmpty) ok = false
     Listing(assignments.toMap, clusterOf.toMap, delta.toMap, ok)

@@ -4,6 +4,7 @@ import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 import java.util.concurrent.atomic.AtomicLong
 
 import scala.concurrent.{Future, Promise}
+import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -32,10 +33,12 @@ import graft.operators.IvfIndex
   *       answered from RAM — no Spark job, so no plan, scheduler or
   *       stage cost per request; the reference's engine.h:search_knn
   *       serves from memory the same way. Ingest acknowledges only
-  *       after its delta-log append lands, so read-your-writes holds.
+  *       after its delta-log file is renamed into place, so
+  *       read-your-writes holds.
   *     - JOB: one [[IvfIndex.searchPrunedFrames]] job for the whole
   *       batch, taken when the listed bytes exceed 1/16 of the max
-  *       heap (`SearchServer.ResidentMaxBytes`), when the listing fails
+  *       heap (`SearchServer.ResidentMaxBytes`; the choice is the
+  *       `serve.resident` [[graft.Route]] key), when the listing fails
   *       or shows a layout the scan reads differently, or when a file
   *       holds something the snapshot reader does not reproduce (no
   *       vec_id/embedding column, a null inside an embedding). The
@@ -47,9 +50,12 @@ import graft.operators.IvfIndex
   *    path law); `splitStats` splits a request's wall into queue wait,
   *    refresh and answer time.
   *  - [[IngestServer]]: concurrent insert requests coalesce into one
-  *    delta-log append per dispatch round under a single writer — the
+  *    delta-log file per dispatch round under a single writer — the
   *    LSM group-commit discipline (the reference serializes its write
-  *    buffer behind a mutex the same way). That append is the whole
+  *    buffer behind a mutex the same way). The round's rows are
+  *    assigned to centroids and written on the driver
+  *    ([[IvfDeltaIngest.commitLocal]]: temp file, fsync, atomic
+  *    rename), so a commit starts no Spark job. That file is the whole
   *    insert: `assignments` is rewritten only by compaction.
   */
 object Serving {
@@ -98,7 +104,8 @@ object SearchServer {
 /** See [[Serving]]. `close()` drains the queue, then stops the
   * dispatcher. A batch whose listed index bytes are within
   * `residentMaxBytes` is answered from the resident snapshot; a larger
-  * index takes the batched-job route (specs pass 0 to force it). */
+  * index takes the batched-job route (specs pass 0 to force it: batches
+  * run on worker threads, which `Route.forcing` does not reach). */
 final class SearchServer private[graft] (spark: SparkSession, indexDir: String,
     k: Int, nprobe: Int, residentMaxBytes: Long) extends AutoCloseable {
   import Serving.{Hit, SearchSplit}
@@ -156,13 +163,14 @@ final class SearchServer private[graft] (spark: SparkSession, indexDir: String,
   /** List the index directory and bring the snapshot up to date: the
     * snapshot to answer from, or None when this batch takes the job
     * route. A listing the scan would read differently (or one an entry
-    * vanished from mid-listing) reads nothing; over the byte bound the
-    * snapshot is dropped. */
+    * vanished from mid-listing) reads nothing; over the byte bound (the
+    * `serve.resident` route) the snapshot is dropped. */
   private def refresh(): Option[ResidentIvf.Snapshot] =
     refreshLock.synchronized {
       val listing = ResidentIvf.list(indexDir)
       if (!listing.ok) None
-      else if (listing.bytes > residentMaxBytes) {
+      else if (!graft.Route.fits("serve.resident", listing.bytes,
+          residentMaxBytes)) {
         snapshot = ResidentIvf.empty
         None
       } else {
@@ -281,23 +289,37 @@ final class SearchServer private[graft] (spark: SparkSession, indexDir: String,
 
 object IngestServer {
   /** Insert requests committed per group commit, at most. */
-  private[streaming] val MaxBatch = 64
+  private[graft] val MaxBatch = 64
+
+  /** One row to insert, with values for the store's metadata columns
+    * by name (`label` on an `IndexStore.ivf` store); a column left out
+    * is written null, so searches fall back to the indexed row's value
+    * for the same vec_id. */
+  final case class Record(vecId: Long, embedding: Seq[Float],
+      meta: Map[String, Any] = Map.empty)
 }
 
 /** See [[Serving]]: single-writer group commit into the IVF delta log.
   * Requests drained in one dispatch round share ONE sequence number
-  * and ONE append job; per-request ordering between colliding vec_ids
-  * within a round is therefore undefined (callers needing it must
-  * serialize their own submissions — the reference's mutexed buffer
-  * gives the same guarantee boundary). A round whose append fails
-  * fails its requests and takes no sequence number: the next round
-  * commits under the same one, so acknowledged seqs stay dense. */
-final class IngestServer(spark: SparkSession, indexDir: String,
-    startSeq: Long) extends AutoCloseable {
-  import spark.implicits._
-  import IngestServer.MaxBatch
+  * and ONE delta-log file, written on the driver
+  * ([[IvfDeltaIngest.commitLocal]]); per-request ordering between
+  * colliding vec_ids within a round is therefore undefined (callers
+  * needing it must serialize their own submissions — the reference's
+  * mutexed buffer gives the same guarantee boundary). A round whose
+  * write fails fails its requests and takes no sequence number: the
+  * next round commits under the same one, so acknowledged seqs stay
+  * dense. A request whose metadata does not fit the store fails alone.
+  * The first round reads the centroids and the store's metadata
+  * schema (Spark jobs); every later round starts none. */
+final class IngestServer private[graft] (spark: SparkSession,
+    indexDir: String, startSeq: Long,
+    step: IvfDeltaIngest.CommitStep => Unit) extends AutoCloseable {
+  import IngestServer.{MaxBatch, Record}
 
-  private final case class Req(rows: Seq[(Long, Seq[Float])], p: Promise[Long],
+  def this(spark: SparkSession, indexDir: String, startSeq: Long) =
+    this(spark, indexDir, startSeq, _ => ())
+
+  private final case class Req(rows: Seq[Record], p: Promise[Long],
       enq: Long = System.nanoTime())
   private val queue = new LinkedBlockingQueue[Req]()
   // the next round's seq; read and advanced by the dispatcher thread only
@@ -305,7 +327,7 @@ final class IngestServer(spark: SparkSession, indexDir: String,
   // split accounting (cumulative, lifetime of the server): where an
   // insert request's wall goes — QUEUE WAIT (enqueue → its batch's
   // dispatch, the group-commit formation time) vs the COMMIT (the
-  // driver-side IVF assignment + the one delta-log append). p99
+  // driver-side IVF assignment + the one delta-log file write). p99
   // growth under depth attributes to whichever leg grows; the bench's
   // insert_sweep records both per sweep point.
   private val waitNs = new AtomicLong(0)
@@ -314,17 +336,25 @@ final class IngestServer(spark: SparkSession, indexDir: String,
   private val nReqsDone = new AtomicLong(0)
 
   /** (batches, requests, total queue-wait sec summed over requests,
-    * total commit-job sec summed over batches) since construction. */
+    * total commit sec — assignment plus file write — summed over
+    * batches) since construction. */
   def splitStats: (Long, Long, Double, Double) =
     (nBatchesDone.get, nReqsDone.get, waitNs.get / 1e9, commitNs.get / 1e9)
   // see SearchServer.gate: open-check + put atomic vs close()'s flip
   private val gate = new Object
   @volatile private var open = true
 
+  /** Enqueue one insert batch of (vec_id, embedding) rows with null
+    * metadata; see [[insertRecords]]. */
+  def insert(rows: Seq[(Long, Seq[Float])]): Future[Long] =
+    insertRecords(rows.map { case (id, e) => Record(id, e) })
+
   /** Enqueue one insert batch; the future completes with the sequence
-    * number its group commit landed under. Throws (synchronously) once
-    * the server is closed — never hands back a dead promise. */
-  def insert(rows: Seq[(Long, Seq[Float])]): Future[Long] = {
+    * number its group commit landed under, or fails (alone) when a
+    * record names a column that is not one of the store's metadata
+    * columns or gives a value not of its type. Throws (synchronously)
+    * once the server is closed — never hands back a dead promise. */
+  def insertRecords(rows: Seq[Record]): Future[Long] = {
     val p = Promise[Long]()
     gate.synchronized {
       require(open, "IngestServer is closed")
@@ -335,6 +365,8 @@ final class IngestServer(spark: SparkSession, indexDir: String,
 
   // lazy so construction stays job-free
   private lazy val centroids = Serving.centroids(spark, indexDir)
+  private lazy val layout = IvfDeltaIngest.deltaLayout(spark,
+    IvfDeltaIngest.storeMeta(spark, indexDir))
 
   private def runBatch(reqs: Seq[Req]): Unit =
     try {
@@ -342,20 +374,21 @@ final class IngestServer(spark: SparkSession, indexDir: String,
       reqs.foreach(r => waitNs.addAndGet(t0 - r.enq))
       nReqsDone.addAndGet(reqs.size)
       val seq = nextSeq
-      // assignment runs driver-side (resolveBatchLocal — bit-identical
-      // to the resolveBatch plan by spec); the commit job is the one
-      // bounded append, written as one file from these driver-local rows
-      val resolved = IvfDeltaIngest.resolveBatchLocal(
-        reqs.flatMap(_.rows).map { case (id, e) => (id, e.toArray) },
-        centroids, seq)
-      IvfDeltaIngest.commit(indexDir, resolved
-        .map { case (id, e, s, c) => (id, e.toSeq, s, c) }
-        .toDF("vec_id", "embedding", "seq", "cluster_id")
-        .coalesce(1))
-      nextSeq = seq + 1 // only a committed round consumes its seq
-      commitNs.addAndGet(System.nanoTime() - t0)
-      nBatchesDone.incrementAndGet()
-      reqs.foreach(_.p.success(seq))
+      val parsed = reqs.map(r => r -> Try(r.rows.map(rec =>
+        (rec.vecId, rec.embedding.toArray, layout.metaValues(rec.meta)))))
+      parsed.foreach { case (r, Failure(e)) => r.p.failure(e); case _ => }
+      val ok = parsed.collect { case (r, Success(rows)) => (r, rows) }
+      if (ok.nonEmpty) {
+        // assignment runs driver-side (resolveBatchLocal — bit-identical
+        // to the resolveBatch plan by spec), and so does the write
+        val resolved = IvfDeltaIngest.resolveBatchLocal(ok.flatMap(_._2),
+          layout.meta.map(_.dataType), centroids, seq)
+        IvfDeltaIngest.commitLocal(indexDir, layout, resolved, step)
+        nextSeq = seq + 1 // only a committed round consumes its seq
+        commitNs.addAndGet(System.nanoTime() - t0)
+        nBatchesDone.incrementAndGet()
+        ok.foreach(_._1.p.success(seq))
+      }
     } catch { case e: Throwable => reqs.foreach(_.p.tryFailure(e)) }
 
   private val dispatcher = new Thread(() => {

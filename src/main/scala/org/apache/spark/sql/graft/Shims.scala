@@ -63,6 +63,22 @@ object Shims {
     else classic.Dataset.ofRows(s.asInstanceOf[classic.SparkSession],
       df.asInstanceOf[classic.Dataset[Row]].logicalPlan)
 
+  /** The parquet schema and footer entries Spark's parquet writer gives
+    * a file of `schema` under `spark`'s conf: the converter
+    * `ParquetWriteSupport` uses (three-level lists, the session's
+    * timestamp and legacy-format settings), the Spark version and the
+    * Catalyst schema its reader prefers over the parquet one. */
+  def parquetLayout(spark: SparkSession, schema: org.apache.spark.sql.types.StructType)
+      : (org.apache.parquet.schema.MessageType, Map[String, String]) = {
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetReadSupport, SparkToParquetSchemaConverter}
+    val conf = spark.asInstanceOf[classic.SparkSession].sessionState.conf
+    (new SparkToParquetSchemaConverter(conf).convert(schema),
+      Map(org.apache.spark.sql.SPARK_VERSION_METADATA_KEY ->
+          org.apache.spark.SPARK_VERSION_SHORT,
+        ParquetReadSupport.SPARK_METADATA_KEY -> schema.json))
+  }
+
   /** Apply an extensions object's injected functions to a LIVE session —
     * `withExtensions` only takes effect for newly built sessions, so this
     * is the path for attaching to an existing one (and for testing the

@@ -350,4 +350,50 @@ class IvfDeltaIngestSpec extends SparkSpec {
     assert(table.filter($"vec_id" === 900000L).select($"label").head().isNullAt(0),
       "a buffer-only id has no label")
   }
+
+  test("an ingested labelled id passes a filtered search before and after compaction") {
+    val dir = freshIndex()
+    val label7 = spark.read.parquet(s"$dir/assignments")
+      .filter($"vec_id" === 7L).select($"label").head().getInt(0)
+    val (l, l2) = ((label7 + 1) % 10, (label7 + 2) % 10)
+    val rnd = new scala.util.Random(3)
+    def fresh() = Array.fill(64)(rnd.nextGaussian().toFloat)
+    val (v1, v2, v3) = (fresh(), fresh(), fresh())
+    val v7 = vecsOf(Seq(7L)).head._2
+    // a labelled id through each writer, an unlabelled one, and vec 7
+    // relabelled at its own embedding
+    IvfDeltaIngest.appendBatch(spark, dir,
+      Seq((900001L, v1.toSeq, l)).toDF("vec_id", "embedding", "label"), seq = 1L)
+    val ingest = new graft.streaming.IngestServer(spark, dir, startSeq = 2L)
+    try {
+      import graft.streaming.IngestServer.Record
+      scala.concurrent.Await.result(ingest.insertRecords(Seq(
+          Record(900002L, v2.toSeq, Map("label" -> l)),
+          Record(900003L, v3.toSeq),
+          Record(7L, v7.toSeq, Map("label" -> l2)))),
+        scala.concurrent.duration.Duration(120, "s"))
+    } finally ingest.close()
+    val q = queriesOf(Seq(v1, v2, v3, v7))
+    def filtered(labels: Seq[Int]) =
+      rowsOf(IvfIndex.searchPrunedFiltered(spark, dir, q, k = 5, nprobe = 2, labels))
+    def check(stage: String): Unit = {
+      val got = filtered(Seq(l, l2))
+      Seq(0L -> 900001L, 1L -> 900002L, 3L -> 7L).foreach { case (qi, id) =>
+        assert(got.contains((qi, id, 1L, 0L)), s"$stage: $id at rank 1 for query $qi")
+      }
+      assert(!got.exists(_._2 == 900003L), s"$stage: an unlabelled id passes no filter")
+      val old = filtered(Seq(label7))
+      assert(!old.exists(r => Set(7L, 900001L, 900002L)(r._2)),
+        s"$stage: a relabelled id no longer passes its old label")
+    }
+    check("buffered")
+    val pre = (filtered(Seq(l, l2)), filtered(Seq(label7)))
+    IvfDeltaIngest.compact(spark, dir)
+    check("compacted")
+    assert((filtered(Seq(l, l2)), filtered(Seq(label7))) == pre)
+    val labels = spark.read.parquet(s"$dir/assignments")
+      .filter($"vec_id".isin(7L, 900001L, 900002L, 900003L))
+      .select($"vec_id", $"label").collect().map(r => r.getLong(0) -> r.get(1)).toMap
+    assert(labels == Map(7L -> l2, 900001L -> l, 900002L -> l, 900003L -> null))
+  }
 }

@@ -34,8 +34,9 @@ class LocalResolveSpec extends SparkSpec {
 
   private def localRows(rows: Seq[(Long, Array[Float])], seq: Long)
       : Map[Long, (Seq[Float], Long, Int)] =
-    IvfDeltaIngest.resolveBatchLocal(rows, cent, seq)
-      .map { case (id, e, s, c) => id -> ((e.toSeq, s, c)) }.toMap
+    IvfDeltaIngest.resolveBatchLocal(rows.map { case (id, e) => (id, e, Nil) },
+        Nil, cent, seq)
+      .map { case (id, e, s, c, _) => id -> ((e.toSeq, s, c)) }.toMap
 
   private def assertSame(rows: Seq[(Long, Array[Float])], seq: Long): Unit = {
     val plan = planRows(rows, seq)
@@ -106,4 +107,29 @@ class LocalResolveSpec extends SparkSpec {
     }
     assertSame(rows, seq = 99L)
   }
+
+  test("metadata rides with its row and enters the tie-break hash, both paths") {
+    val rnd = new scala.util.Random(77)
+    // the same (vec_id, embedding) under several labels, null included:
+    // only hash(embedding, label) tells the rows apart
+    val rows = (0 until 120).map { i =>
+      ((i % 20).toLong, Array.fill(2)((rnd.nextInt(5) - 2) * 0.5f),
+        if (i % 7 == 0) None else Some(rnd.nextInt(3)))
+    }
+    val batch = rows.map { case (id, e, l) => (id, e.toSeq, l) }
+      .toDF("vec_id", "embedding", "label")
+    val centDf = cent.map { case (c, v) => (c, v.toSeq) }
+      .toDF("cluster_id", "centroid")
+    val plan = IvfDeltaIngest.resolveBatch(batch, centDf, 5L, Seq("label"))
+      .collect().map(r => r.getLong(0) -> ((bits(r.getSeq[Float](1)), r.getLong(2),
+        r.getInt(3), Option(r.get(4))))).toMap
+    val local = IvfDeltaIngest.resolveBatchLocal(
+        rows.map { case (id, e, l) => (id, e, Seq(l.map(Integer.valueOf).orNull)) },
+        Seq(org.apache.spark.sql.types.IntegerType), cent, 5L)
+      .map { case (id, e, s, c, m) => id -> ((bits(e.toSeq), s, c, Option(m.head))) }
+      .toMap
+    assert(local == plan)
+  }
+
+  private def bits(v: Seq[Float]): Seq[Int] = v.map(java.lang.Float.floatToRawIntBits)
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Shims
 
 import graft.functions.VectorKernels
-import graft.operators.{IndexStore, IvfIndex}
+import graft.operators.IvfIndex
 import graft.streaming.{IngestServer, IvfDeltaIngest, ResidentIvf, SearchServer,
   Serving}
 
@@ -26,17 +26,7 @@ class ServingSpec extends SparkSpec {
 
   /** A scratch copy of the fixture IVF store (inserts must not dirty
     * the shared artifact). */
-  private def scratchStore(): String = {
-    val src = IndexStore.ivf(spark, fixtureDir, k = 16)
-    val dst = java.nio.file.Files.createTempDirectory("graft-serving-ivf")
-      .toString
-    spark.read.parquet(s"$src/centroids")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dst/centroids")
-    spark.read.parquet(s"$src/assignments")
-      .write.partitionBy("cluster_id").mode("overwrite")
-      .parquet(s"$dst/assignments")
-    dst
-  }
+  private def scratchStore(): String = PlantedClusters.scratchIvf(fixtureDir)
 
   private def vecsOf(ids: Seq[Long]): Seq[(Long, Array[Float])] =
     spark.read.parquet(s"$fixtureDir/embeddings.parquet")
@@ -213,6 +203,7 @@ class ServingSpec extends SparkSpec {
     // k above every probed candidate count: the whole ranked list,
     // NaN tail included, is compared
     val (k, nprobe) = (100, 2)
+    val routes0 = Route.taken("serve.resident")
     val resident = new SearchServer(spark, dir, k, nprobe)
     val job = jobRouteServer(dir, k, nprobe)
     val ingest = new IngestServer(spark, dir, startSeq = 1L)
@@ -264,6 +255,10 @@ class ServingSpec extends SparkSpec {
       assert(resident.splitStats.jobBatches == 0L)
       val js = job.splitStats
       assert(js.batches > 0L && js.jobBatches == js.batches)
+      // each route's byte check was recorded as a serve.resident decision
+      val routes = Route.taken("serve.resident")
+      assert(routes(Route.Small) > routes0(Route.Small))
+      assert(routes(Route.Large) - routes0(Route.Large) >= js.batches)
     } finally { resident.close(); job.close(); ingest.close() }
   }
 
