@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.streaming.Serving
+
 /** Per-round benchmark: times every SparkEntry query at the given scale
   * factor and emits one JSON line. A warm-up pass on the flagship query
   * absorbs one-time session/codegen costs so per-query numbers reflect
@@ -18,13 +20,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * store build would otherwise shift its cost invisibly into the first
   * timed query that touches the artifact).
   *
-  * Concurrent throughput (the client_bench.cpp analog —
-  * /root/reference/benchmark/client_bench.cpp measures multi-client QPS
-  * against the serving path): N client threads submit independent
-  * partition-pruned IVF searches against ONE session under the FAIR
-  * scheduler and the aggregate queries/sec lands in the `throughput`
-  * field. This is the Spark serving shape: one long-lived session, many
-  * concurrent bounded search jobs sharing the executor pool.
+  * Serving (the client_bench.cpp analog, which times search and insert
+  * against one live server): [[serveSweep]] drives one SearchServer and
+  * one IngestServer per point with closed-loop clients at several
+  * depths, on the resident and the job route, and checks every answer;
+  * `throughput` and `throughput_sweep` are its resident search side.
   */
 object Bench {
 
@@ -156,22 +156,13 @@ object Bench {
     // reference's AVX2 kernel); the *_scalar_* entries time the scalar
     // lane-4 twins the codegen'd scan path actually runs (generated
     // Java can't reach the incubator module)
-    val simd = graft.functions.VectorSimd.available
-    def l2k(a: Array[Float], b: Array[Float]): Double =
-      if (simd) math.sqrt(graft.functions.VectorSimd.l2sqV(a, b))
-      else math.sqrt(graft.functions.VectorKernels.l2sqF(a, b))
-    def dotk(a: Array[Float], b: Array[Float]): Double =
-      if (simd) graft.functions.VectorSimd.dotV(a, b)
-      else graft.functions.VectorKernels.dotF(a, b)
-    def cosk(a: Array[Float], b: Array[Float]): Double =
-      if (simd) graft.functions.VectorSimd.cosineV(a, b)
-      else graft.functions.VectorKernels.cosineF(a, b)
-    def l2s(a: Array[Float], b: Array[Float]): Double =
-      math.sqrt(graft.functions.VectorKernels.l2sqF(a, b))
-    def dots(a: Array[Float], b: Array[Float]): Double =
-      graft.functions.VectorKernels.dotF(a, b)
-    def coss(a: Array[Float], b: Array[Float]): Double =
-      graft.functions.VectorKernels.cosineF(a, b)
+    import graft.functions.{VectorKernels => K, VectorSimd => S}
+    type Kernel = (Array[Float], Array[Float]) => Double
+    val scalar = Seq[(String, Kernel)]("l2" -> ((a, b) => math.sqrt(K.l2sqF(a, b))),
+      "dot" -> K.dotF, "cosine" -> K.cosineF)
+    val primary = if (!S.available) scalar
+      else Seq[(String, Kernel)]("l2" -> ((a, b) => math.sqrt(S.l2sqV(a, b))),
+        "dot" -> S.dotV, "cosine" -> S.cosineV)
     // blackhole: fold every result into a sum the caller can't see
     // eliminated — a dead-code'd loop would "measure" nothing
     var sink = 0.0
@@ -190,338 +181,198 @@ object Bench {
       val sec = (System.nanoTime() - t0) / 1e9
       name -> math.rint(targetEvals / sec / 1e3) / 1e3
     }
-    val out = Map(
-      time("l2_kernel_meval_per_sec", l2k),
-      time("dot_kernel_meval_per_sec", dotk),
-      time("cosine_kernel_meval_per_sec", cosk),
-      time("l2_scalar_kernel_meval_per_sec", l2s),
-      time("dot_scalar_kernel_meval_per_sec", dots),
-      time("cosine_scalar_kernel_meval_per_sec", coss))
+    val out = (primary.map { case (n, f) => time(s"${n}_kernel_meval_per_sec", f) } ++
+      scalar.map { case (n, f) => time(s"${n}_scalar_kernel_meval_per_sec", f) }).toMap
     require(!sink.isNaN) // keep `sink` observably live
     out
   }
 
-  /** Multi-client aggregate QPS: `clients` threads × `perClient` pruned
-    * IVF searches each (k=10, nprobe=4, 8 query vectors per search —
-    * the v_ivf_search shape) against the shared session. Returns
-    * (clients, total searches, elapsed sec, qps). FAIR scheduling keeps
-    * one client's stage queue from starving the rest — the Spark analog
-    * of the reference server's request concurrency. */
-  def throughput(spark: SparkSession, sfDir: String,
-      clients: Int = 8, perClient: Int = 4): (Int, Int, Double, Double) = {
+  private def r3(v: Double): Double = math.rint(v * 1000) / 1000
+
+  private def jstr(s: String): String =
+    "\"" + s.flatMap {
+      case '"' => "\\\""; case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+
+  /** A JSON object of `kv`, each value as it prints. */
+  private def obj(kv: Iterable[(String, Any)]): String =
+    kv.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
+
+  private def errMsg(e: Throwable): String =
+    Option(e.getMessage).getOrElse(e.getClass.getName)
+      .linesIterator.take(1).mkString.take(200)
+
+  /** The serve sweep's (route, depth) points. */
+  private val ServePoints: Seq[(String, Int)] =
+    Seq("resident" -> 8, "resident" -> 32, "resident" -> 96, "job" -> 8)
+  private val (serveK, serveNProbe) = (10, 4)
+
+  /** Requests timed, per second over the point's wall, and p50/p99 ms. */
+  final case class Lat(n: Int, qps: Double, p50Ms: Double, p99Ms: Double) {
+    def json: String = obj(Seq("n" -> n, "qps" -> qps, "p50_ms" -> p50Ms, "p99_ms" -> p99Ms))
+  }
+
+  /** One [[serveSweep]] point: its wall, search and insert latencies
+    * (probes left out), how many answers failed a check (`mismatches`
+    * for searches, `rywMisses` for probes) and the first such fault, and
+    * both servers' `splitStats`. */
+  final case class ServePoint(route: String, depth: Int, sec: Double,
+      search: Lat, insert: Lat, probes: Int, compared: Int, mismatches: Int,
+      rywMisses: Int, fault: Option[String], searchSplit: Serving.SearchSplit,
+      ingestSplit: (Long, Long, Double, Double)) {
+    def json: String = {
+      def mean(sec: Double, n: Long) = if (n == 0) 0.0 else r3(sec * 1000 / n)
+      val (s, (ib, ir, iw, ic)) = (searchSplit, ingestSplit)
+      // searches per job only where jobs ran (as mean requests per batch)
+      val perJob = if (s.jobBatches == 0) Nil
+        else Seq("searches_per_job" -> r3(s.requests.toDouble / s.batches))
+      obj(Seq("route" -> jstr(route), "depth" -> depth, "elapsed_sec" -> sec,
+        "search" -> search.json, "insert" -> insert.json, "probes" -> probes,
+        "compared" -> compared, "mismatches" -> mismatches, "ryw_misses" -> rywMisses,
+        "search_split" -> obj(Seq("batches" -> s.batches, "requests" -> s.requests,
+          "queue_wait_ms_mean" -> mean(s.queueWaitSec, s.requests),
+          "refresh_ms_mean" -> mean(s.refreshSec, s.batches),
+          "answer_ms_mean" -> mean(s.answerSec, s.batches),
+          "job_batches" -> s.jobBatches) ++ perJob),
+        "ingest_split" -> obj(Seq("batches" -> ib, "requests" -> ir,
+          "queue_wait_ms_mean" -> mean(iw, ir), "commit_ms_mean" -> mean(ic, ib)))))
+    }
+  }
+
+  /** Why `hits` is not a served answer, or None: it must hold `k` hits
+    * ranked 1..k with distances that never decrease (NaN last), equal
+    * `want` by (id, rank, distance bits) where one is given, and hold
+    * `probe` at rank 1 with distance 0 where one is given. */
+  private[graft] def answerFault(hits: Seq[Serving.Hit], k: Int,
+      want: Option[Seq[Serving.Hit]] = None,
+      probe: Option[Long] = None): Option[String] = {
+    def key(hs: Seq[Serving.Hit]) =
+      hs.map(h => (h.neighborId, h.rnk, java.lang.Double.doubleToLongBits(h.dist)))
+    if (hits.size != k) Some(s"${hits.size} hits, not $k")
+    else if (hits.map(_.rnk) != (1L to k)) Some(s"ranks ${hits.map(_.rnk)}")
+    else if (hits.zip(hits.tail).exists { case (a, b) =>
+        java.lang.Double.compare(a.dist, b.dist) > 0 }) Some(s"distances decrease: $hits")
+    else if (want.exists(w => key(w) != key(hits))) Some(s"$hits, searchPruned ${want.get}")
+    else if (probe.exists(id => hits.head.neighborId != id || hits.head.dist != 0.0))
+      Some(s"written id ${probe.get} is not at rank 1, distance 0: ${hits.head}")
+    else None
+  }
+
+  /** The closed-loop serving sweep, the client_bench.cpp analog, on one
+    * scratch copy of the `IndexStore.ivf` store (k = 16) that is deleted
+    * at the end. Each (route, depth) point runs one SearchServer (the job
+    * route forced by a 0-byte resident bound) and one IngestServer, both
+    * warmed outside the clock: `depth` search clients make 32 searches
+    * each, and max(1, depth/8) insert clients make 25 requests of 8 fresh
+    * rows each, then search one row just written (an untimed probe: it
+    * must be at rank 1, distance 0). Every answer must pass
+    * [[answerFault]], and once the point drains 16 fixed queries must
+    * equal searchPruned on the same store state. A point that fails a
+    * check or throws lands in `errors` as `serve:<route>:<depth>` and is
+    * left out. */
+  def serveSweep(spark: SparkSession, sfDir: String, points: Seq[(String, Int)],
+      errors: scala.collection.mutable.Map[String, String]): Seq[ServePoint] = {
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.functions._
     import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val dir = graft.operators.IndexStore.ivf(spark, sfDir, k = 16)
-    // one warm search outside the clock: parquet footers + codegen
-    val warmQ = Tables.load(spark, sfDir, "embeddings")
-      .filter($"vec_id" < 8)
-      .select($"vec_id".as("query_id"), $"embedding".as("qv"))
-    exhaust(graft.operators.IvfIndex.searchPruned(spark, dir, warmQ, 10, 4))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(clients)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    val t0 = System.nanoTime()
-    val futures = (0 until clients).map { c =>
-      scala.concurrent.Future {
-        spark.sparkContext.setLocalProperty("spark.scheduler.pool", s"client$c")
-        (0 until perClient).foreach { r =>
-          // distinct query window per (client, round) so no two jobs
-          // share a plan: each is a REAL independent search request
-          val lo = (c * perClient + r) * 8
-          val q = Tables.load(spark, sfDir, "embeddings")
-            .filter($"vec_id" >= lo && $"vec_id" < lo + 8)
-            .select($"vec_id".as("query_id"), $"embedding".as("qv"))
-          exhaust(graft.operators.IvfIndex.searchPruned(spark, dir, q, 10, 4))
-        }
-      }
+    import graft.streaming.{IngestServer, SearchServer}
+    def await[T](f: Future[T]): T =
+      Await.result(f, scala.concurrent.duration.Duration(600, "s"))
+    val emb = Tables.load(spark, sfDir, "embeddings")
+    // clients hold their query vectors (the RPC payload)
+    val queries = emb.filter($"vec_id" < 256).orderBy("vec_id")
+      .select("embedding").collect().map(_.getSeq[Float](0).toArray)
+    val nextId = new AtomicLong(emb.agg(max("vec_id")).head().getLong(0) + 1)
+    // fresh ids above the corpus, each at a query vector moved by seeded
+    // noise, so no other row is at distance 0 from it
+    def freshRows(): Seq[(Long, Seq[Float])] = Seq.fill(8) {
+      val id = nextId.getAndIncrement()
+      val rnd = new scala.util.Random(id)
+      id -> queries((id % queries.length).toInt)
+        .map(_ + 0.01f * rnd.nextGaussian().toFloat).toSeq
     }
-    // shutdownNow in finally: on an Await timeout the executor threads
-    // (and their in-flight client jobs) must not outlive the bench
-    try scala.concurrent.Await.result(
-      scala.concurrent.Future.sequence(futures),
-      scala.concurrent.duration.Duration(600, "s"))
-    finally pool.shutdownNow()
-    val sec = math.rint((System.nanoTime() - t0) / 1e6) / 1e3
-    val n = clients * perClient
-    (clients, n, sec, math.rint(n / sec * 1000) / 1000)
-  }
-
-  /** Batched serving QPS — the same request mix as [[throughput]] but
-    * through the micro-batching [[graft.streaming.SearchServer]] (the
-    * serving architecture, not a different query): per-request Spark
-    * jobs floor at the scheduler's fixed cost (~2 s/job however small
-    * the data — r9 measured 8.7 QPS at 8 clients, flat across two data
-    * decades), group commit amortizes that cost across whatever is
-    * concurrently pending. Answers are exactly searchPruned's
-    * (ServingSpec), so this number is the same contract served
-    * faster. Returns (clients, searches, elapsed sec, qps, p99 ms) —
-    * per-request latency is recorded so the client sweep can report
-    * the throughput/latency trade-off per offered depth. */
-  def throughputBatched(spark: SparkSession, sfDir: String,
-      clients: Int = 32, perClient: Int = 8)
-      : (Int, Int, Double, Double, Double) = {
-    import org.apache.spark.sql.functions._
-    val dir = graft.operators.IndexStore.ivf(spark, sfDir, k = 16)
-    // clients hold their query vectors (a real client supplies the
-    // vector in the RPC; reading parquet per request is bench plumbing)
-    val qvecs = Tables.load(spark, sfDir, "embeddings")
-      .filter(col("vec_id") < 256)
-      .select(col("embedding")).collect()
-      .map(_.getSeq[Float](0).toArray)
-    val server = new graft.streaming.SearchServer(spark, dir,
-      k = 10, nprobe = 4)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(clients)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    try {
-      // warm outside the clock: codegen + parquet footers
-      scala.concurrent.Await.result(server.search(qvecs(0)),
-        scala.concurrent.duration.Duration(600, "s"))
-      val lats = new java.util.concurrent.ConcurrentLinkedQueue[Double]
-      val t0 = System.nanoTime()
-      val futures = (0 until clients).map { c =>
-        scala.concurrent.Future {
-          (0 until perClient).foreach { r =>
-            val r0 = System.nanoTime()
-            scala.concurrent.Await.result(
-              server.search(qvecs((c * perClient + r) % qvecs.length)),
-              scala.concurrent.duration.Duration(600, "s"))
-            lats.add((System.nanoTime() - r0) / 1e6)
-          }
-        }
-      }
-      scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(futures),
-        scala.concurrent.duration.Duration(600, "s"))
-      val sec = math.rint((System.nanoTime() - t0) / 1e6) / 1e3
-      val n = clients * perClient
-      import scala.jdk.CollectionConverters._
-      val xs = lats.asScala.toSeq.sorted
-      val p99 = xs(math.max(0, math.min(xs.size - 1,
-        math.ceil(0.99 * xs.size).toInt - 1)))
-      (clients, n, sec, math.rint(n / sec * 1000) / 1000,
-        math.rint(p99 * 1000) / 1000)
-    } finally { pool.shutdownNow(); server.close() }
-  }
-
-  /** Insert-side serving sweep — the write-path twin of the
-    * [[throughputBatched]] client sweep (client_bench.cpp benches both
-    * directions; search had `throughput_sweep`, insert had a single
-    * depth inside [[latencyBench]]): offered insert clients at several
-    * depths × `perClient` group-committed requests (8 rows each)
-    * through ONE [[graft.streaming.IngestServer]] — the single-writer
-    * LSM-buffer contract; concurrency lives in the ENQUEUE, group
-    * commit amortizes the per-job floor across whatever is pending.
-    * Runs against a scratch copy of the IVF store (inserts mutate it;
-    * the shared store must stay compaction-steady). One scratch for
-    * the whole sweep: the buffer is append-only, so a prior point's
-    * rows never change a later point's append cost. Returns one
-    * (clients, inserts, elapsed sec, qps, p99 ms) per depth. */
-  /** One insert-sweep point: offered clients, committed inserts, wall,
-    * QPS, request p99 — plus the WHERE-the-wall-went split from
-    * [[graft.streaming.IngestServer.splitStats]]: group-commit batches
-    * formed, mean per-request queue wait (batch formation), and mean
-    * per-batch commit wall (IVF assignment + the delta-log append). */
-  final case class InsertPoint(clients: Int, inserts: Int, sec: Double,
-      qps: Double, p99Ms: Double, batches: Long, queueWaitMsMean: Double,
-      commitMsMean: Double)
-
-  def insertSweep(spark: SparkSession, sfDir: String,
-      clientPoints: Seq[Int] = Seq(2, 8, 24), perClient: Int = 8)
-      : Seq[InsertPoint] = {
-    import org.apache.spark.sql.functions._
-    val src = graft.operators.IndexStore.ivf(spark, sfDir, k = 16)
-    val scratch = java.nio.file.Files
-      .createTempDirectory("graft-insert-sweep-ivf").toString
-    spark.read.parquet(s"$src/centroids")
-      .coalesce(1).write.mode("overwrite").parquet(s"$scratch/centroids")
-    spark.read.parquet(s"$src/assignments")
-      .write.partitionBy("cluster_id").mode("overwrite")
-      .parquet(s"$scratch/assignments")
-    val vecs = Tables.load(spark, sfDir, "embeddings")
-      .filter(col("vec_id") < 256)
-      .select(col("embedding")).collect()
-      .map(_.getSeq[Float](0).toArray)
-    // fresh ids above the corpus max (the latencyBench discipline: a
-    // literal base would shadow corpus rows at a large enough sf)
-    val idBase: Long = Tables.load(spark, sfDir, "embeddings")
-      .agg(max(col("vec_id"))).collect()(0).getLong(0) + 1L + 8L
-    def await[T](f: scala.concurrent.Future[T]): T =
-      scala.concurrent.Await.result(f,
-        scala.concurrent.duration.Duration(600, "s"))
-    var nextIdx = 0 // disjoint request-id ranges across sweep points
-    clientPoints.map { clients =>
-      val ingest = new graft.streaming.IngestServer(spark, scratch,
-        startSeq = nextIdx.toLong + 1L)
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(clients)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      try {
-        // warm this server's commit path outside the clock
-        val warmIdx = nextIdx; nextIdx += 1
-        await(ingest.insert((0 until 8).map(j => (
-          idBase + warmIdx.toLong * 8 + j,
-          vecs((warmIdx * 8 + j) % vecs.length).toSeq))))
-        val lats = new java.util.concurrent.ConcurrentLinkedQueue[Double]
-        val base = nextIdx; nextIdx += clients * perClient
+    val sample = queries.take(16).toSeq
+    val dir = graft.operators.IndexStore.scratchIvf(spark, sfDir)
+    def point(route: String, depth: Int): ServePoint = {
+      val search =
+        if (route == "job") new SearchServer(spark, dir, serveK, serveNProbe, residentMaxBytes = 0L)
+        else new SearchServer(spark, dir, serveK, serveNProbe)
+      val ingest = new IngestServer(spark, dir)
+      val inserters = math.max(1, depth / 8)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(depth + inserters)
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+      val (searchMs, insertMs) = (new ConcurrentLinkedQueue[Double], new ConcurrentLinkedQueue[Double])
+      val (mismatches, misses) = (new AtomicInteger, new AtomicInteger)
+      val faults = new ConcurrentLinkedQueue[String]
+      def check(count: AtomicInteger, fault: Option[String]): Unit =
+        fault.foreach { f => count.incrementAndGet(); faults.add(f) }
+      def timed[T](ms: ConcurrentLinkedQueue[Double])(f: => Future[T]): T = {
         val t0 = System.nanoTime()
-        val futures = (0 until clients).map { c =>
-          scala.concurrent.Future {
-            (0 until perClient).foreach { r =>
-              val reqIdx = base + c * perClient + r
-              val rows = (0 until 8).map(j => (
-                idBase + reqIdx.toLong * 8 + j,
-                vecs((reqIdx * 8 + j) % vecs.length).toSeq))
-              val r0 = System.nanoTime()
-              await(ingest.insert(rows))
-              lats.add((System.nanoTime() - r0) / 1e6)
-            }
-          }
-        }
-        scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(futures),
-          scala.concurrent.duration.Duration(600, "s"))
-        val sec = math.rint((System.nanoTime() - t0) / 1e6) / 1e3
-        val n = clients * perClient
-        import scala.jdk.CollectionConverters._
-        val xs = lats.asScala.toSeq.sorted
-        val p99 = xs(math.max(0, math.min(xs.size - 1,
-          math.ceil(0.99 * xs.size).toInt - 1)))
-        // lifetime stats minus the warm-up request's contribution is
-        // noise at these depths; report means over the whole server
-        // lifetime (warm + timed) — the warm batch is 1 of ≥3.
-        val (batches, reqs, waitSec, commitSec) = ingest.splitStats
-        val waitMs = if (reqs == 0) 0.0
-          else math.rint(waitSec * 1000 / reqs * 1000) / 1000
-        val commitMs = if (batches == 0) 0.0
-          else math.rint(commitSec * 1000 / batches * 1000) / 1000
-        InsertPoint(clients, n, sec, math.rint(n / sec * 1000) / 1000,
-          math.rint(p99 * 1000) / 1000, batches, waitMs, commitMs)
-      } finally { pool.shutdownNow(); ingest.close() }
-    }
-  }
-
-  /** Serving-latency percentiles — the client_bench.cpp:153-159 analog
-    * (the reference prints avg/p99/p999 per request for search AND
-    * insert): a MIXED workload at client_bench sample depth — ≥1000
-    * search requests and ≥100 insert requests, concurrent, against ONE
-    * index — per-request wall times (enqueue → completion, queue wait
-    * included) recorded, avg/p50/p99/p999 reported per op kind. Both
-    * sides run through the micro-batching front ends
-    * ([[graft.streaming.SearchServer]]/[[graft.streaming.IngestServer]]
-    * — answers identical to per-request jobs, ServingSpec): group
-    * commit is what makes 1000+ samples affordable AND is the
-    * architecture a Spark-backed server actually serves with, so these
-    * are the honest numbers. Inserts stay single-writer (one
-    * dispatcher — the LSM buffer contract; two concurrent appends into
-    * one parquet dir would race on the committer's _temporary
-    * staging). The whole mix runs against a SCRATCH COPY of the IVF
-    * store so inserts land somewhere real — searches take the engine's
-    * buffer-shadows-index branch mid-mix — while the shared store
-    * stays compaction-steady (the requireCompacted contract
-    * v_ivf_stats enforces). */
-  def latencyBench(spark: SparkSession, sfDir: String,
-      searchClients: Int = 32, insertClients: Int = 4,
-      searchPerClient: Int = 32, insertPerClient: Int = 25)
-      : Map[String, Map[String, Double]] = {
-    import org.apache.spark.sql.functions._
-    val src = graft.operators.IndexStore.ivf(spark, sfDir, k = 16)
-    val scratch = java.nio.file.Files
-      .createTempDirectory("graft-latency-ivf").toString
-    spark.read.parquet(s"$src/centroids")
-      .coalesce(1).write.mode("overwrite").parquet(s"$scratch/centroids")
-    spark.read.parquet(s"$src/assignments")
-      .write.partitionBy("cluster_id").mode("overwrite")
-      .parquet(s"$scratch/assignments")
-    // clients hold their vectors (the RPC payload); ≤256 rows collected
-    val qvecs = Tables.load(spark, sfDir, "embeddings")
-      .filter(col("vec_id") < 256)
-      .select(col("embedding")).collect()
-      .map(_.getSeq[Float](0).toArray)
-    val search = new graft.streaming.SearchServer(spark, scratch,
-      k = 10, nprobe = 4)
-    val ingest = new graft.streaming.IngestServer(spark, scratch,
-      startSeq = 1L)
-    // fresh ids above the corpus maximum (measured, not assumed — a
-    // fixed literal base would silently SHADOW corpus rows via the
-    // buffer-shadows-index branch at a large enough scale factor,
-    // quietly changing what the mixed-workload searches measure):
-    // never collide with corpus ids or each other, so group-commit
-    // ordering within a round is irrelevant. +8 leaves room for the
-    // warm-up request at reqIdx = -1.
-    val insertIdBase: Long = Tables.load(spark, sfDir, "embeddings")
-      .agg(max(col("vec_id"))).collect()(0).getLong(0) + 1L + 8L
-    def insertRows(reqIdx: Int): Seq[(Long, Seq[Float])] =
-      (0 until 8).map { j =>
-        (insertIdBase + reqIdx.toLong * 8 + j,
-          qvecs(Math.floorMod(reqIdx * 8 + j, qvecs.length)).toSeq)
+        try await(f) finally ms.add((System.nanoTime() - t0) / 1e6)
       }
-    def await[T](f: scala.concurrent.Future[T]): T =
-      scala.concurrent.Await.result(f,
-        scala.concurrent.duration.Duration(600, "s"))
-    // warm both paths outside the clock (codegen + footer caches)
-    await(search.search(qvecs(0)))
-    await(ingest.insert(insertRows(-1)))
-    val searchLat = new java.util.concurrent.ConcurrentLinkedQueue[Double]
-    val insertLat = new java.util.concurrent.ConcurrentLinkedQueue[Double]
-    val clients = searchClients + insertClients
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(clients)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    val futures = (0 until clients).map { c =>
-      scala.concurrent.Future {
-        if (c < searchClients) (0 until searchPerClient).foreach { r =>
-          val t0 = System.nanoTime()
-          await(search.search(
-            qvecs((c * searchPerClient + r) % qvecs.length)))
-          searchLat.add((System.nanoTime() - t0) / 1e6)
-        } else (0 until insertPerClient).foreach { r =>
-          val reqIdx = (c - searchClients) * insertPerClient + r
-          val t0 = System.nanoTime()
-          await(ingest.insert(insertRows(reqIdx)))
-          insertLat.add((System.nanoTime() - t0) / 1e6)
-        }
+      def lat(ms: ConcurrentLinkedQueue[Double], sec: Double): Lat = {
+        val xs = ms.asScala.toSeq.sorted
+        def pct(p: Double) = xs(math.max(0, math.ceil(p * xs.size).toInt - 1))
+        Lat(xs.size, r3(xs.size / sec), r3(pct(0.5)), r3(pct(0.99)))
       }
+      try {
+        await(ingest.insert(freshRows())) // the first round's jobs
+        await(search.search(queries(0)))
+        val t0 = System.nanoTime()
+        val searchers = (0 until depth).map(c => Future((0 until 32).foreach { r =>
+          val hits = timed(searchMs)(search.search(queries((c * 32 + r) % queries.length)))
+          check(mismatches, answerFault(hits, serveK))
+        }))
+        val writers = (0 until inserters).map(_ => Future((0 until 25).foreach { r =>
+          val rows = freshRows()
+          timed(insertMs)(ingest.insert(rows))
+          val (id, v) = rows(r % rows.size)
+          check(misses, answerFault(await(search.search(v.toArray)), serveK, probe = Some(id)))
+        }))
+        await(Future.sequence(searchers ++ writers))
+        val sec = (System.nanoTime() - t0) / 1e9
+        val byQ = graft.operators.IvfIndex.searchPruned(spark, dir,
+            sample.zipWithIndex.map { case (v, i) => (i.toLong, v.toSeq) }.toDF("query_id", "qv"),
+            serveK, serveNProbe)
+          .collect().groupBy(_.getLong(0))
+        sample.zipWithIndex.foreach { case (v, i) =>
+          val want = byQ.getOrElse(i.toLong, Array.empty).toSeq
+            .map(r => Serving.Hit(r.getLong(1), r.getLong(2), r.getDouble(3))).sortBy(_.rnk)
+          check(mismatches, answerFault(await(search.search(v)), serveK, want = Some(want)))
+        }
+        ServePoint(route, depth, r3(sec), lat(searchMs, sec), lat(insertMs, sec),
+          inserters * 25, sample.size, mismatches.get, misses.get, Option(faults.peek),
+          search.splitStats, ingest.splitStats)
+      } finally { pool.shutdownNow(); search.close(); ingest.close() }
     }
-    try scala.concurrent.Await.result(
-      scala.concurrent.Future.sequence(futures),
-      scala.concurrent.duration.Duration(600, "s"))
-    finally { pool.shutdownNow(); search.close(); ingest.close() }
-    def stats(q: java.util.concurrent.ConcurrentLinkedQueue[Double])
-        : Map[String, Double] = {
-      import scala.jdk.CollectionConverters._
-      val xs = q.asScala.toSeq.sorted
-      // a zero-client/zero-round mix leaves a queue empty — report the
-      // FULL key set with zeros (not a bare n=0) so the artifact's
-      // latency-stats schema is identical run to run; diff tooling
-      // keyed on these fields must never see missing keys
-      if (xs.isEmpty)
-        return Map("n" -> 0.0, "avg_ms" -> 0.0, "p50_ms" -> 0.0,
-          "p99_ms" -> 0.0, "p999_ms" -> 0.0)
-      def pct(p: Double): Double =
-        xs(math.max(0, math.min(xs.size - 1, math.ceil(p * xs.size).toInt - 1)))
-      def r3(v: Double) = math.rint(v * 1000) / 1000
-      Map("n" -> xs.size.toDouble, "avg_ms" -> r3(xs.sum / xs.size),
-        "p50_ms" -> r3(pct(0.50)), "p99_ms" -> r3(pct(0.99)),
-        "p999_ms" -> r3(pct(0.999)))
-    }
-    Map("search" -> stats(searchLat), "insert" -> stats(insertLat))
+    try points.flatMap { case (route, depth) =>
+      val key = s"serve:$route:$depth"
+      try {
+        val p = point(route, depth)
+        p.fault.foreach(f => errors(key) = s"${p.mismatches} mismatches, " +
+          s"${p.rywMisses} read-your-writes misses; first: $f")
+        if (p.fault.isEmpty) Some(p) else None
+      } catch { case e: Throwable => errors(key) = errMsg(e); None }
+    } finally graft.streaming.IvfDeltaIngest.deleteRecursively(new java.io.File(dir))
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val spark = GraftSession.builder(cpus)
-      // FAIR so the throughput section's concurrent clients share the
-      // executor pool instead of FIFO-queueing whole jobs
+      // FAIR: up to SearchServer.MaxInFlight job-route batches run at
+      // once and share the executor pool instead of FIFO-queueing whole
+      // jobs (perfbench's session sets the same)
       .config("spark.scheduler.mode", "FAIR")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    def errMsg(e: Throwable): String =
-      Option(e.getMessage).getOrElse(e.getClass.getName)
-        .linesIterator.take(1).mkString.take(200)
 
     // warm-up: JVM + codegen + parquet footer caches, plus the one-time
     // ANN index builds (IndexStore) so the *search* entries measure
@@ -615,17 +466,13 @@ object Bench {
       System.err.println(f"[bench] $name ${if (ok) f"$sec%.2f s" else "FAILED"}")
       (name, if (ok) sec else -1.0, steal)
     }
-    // Outlier re-time pass: this box shows BURSTY host-level CPU steal
-    // (/proc/stat steal ≈ 12 % of historical user time, arriving in
-    // waves) — across back-to-back full runs the inflated queries are
-    // DIFFERENT ones each time (one run: t_entropy 14.5 s vs 1.6 s
-    // isolated; next run: d_hard_negatives 12.0 s vs 0.8 s prior), so a
-    // single sample can misstate a query by 5-15x through no fault of
-    // its plan. Queries whose first sample exceeds 2 s are re-run once,
-    // slowest first under a hard 60 s wall budget, and the reported
-    // number is the MIN of the two samples — the steady-state claim the
-    // warm-up already establishes this loop is measuring. Failures
-    // (-1) are never retimed; `retimed` counts the second samples.
+    // Outlier re-time pass: host CPU steal arrives in waves and inflates
+    // different queries each run (t_entropy 14.5 s vs 1.6 s isolated),
+    // so a single sample can misstate a query 5-15x. Queries whose
+    // first sample exceeds 2 s are re-run once, slowest first under a
+    // 120 s wall budget, and the MIN of the two samples is reported —
+    // the steady-state claim the warm-up establishes. Failures (-1)
+    // are never retimed.
     var retimeBudget = 120.0
     val secondPass = scala.collection.mutable.Map.empty[String, Double]
     // both samples recorded verbatim so the artifact shows its work:
@@ -637,15 +484,10 @@ object Bench {
     // the wall time); slowest first so the budget goes to the worst
     firstPass.filter(r => r._2 >= 2.0 || (r._2 >= 0 && r._3 >= 1.0))
       .sortBy(-_._2).foreach { case (name, first, steal) =>
-        // a retime costs roughly the query's true time: when even the
-        // FIRST sample exceeds the remaining budget and no steal was
-        // observed during it (no contamination evidence), the second
-        // sample would starve every cheaper contaminated query below
-        // it — at sf10 v_knn_batched's 183 s retime ate the entire
-        // budget re-confirming a documented contract cost while a
-        // genuinely cold 41 s sample two rows down went unretimed.
-        // Steal-evidenced samples stay eligible regardless: their
-        // retime is expected to come back far cheaper.
+        // a first sample over the remaining budget with no steal seen
+        // is retimed no more: its rerun would starve every cheaper
+        // contaminated query below it (at sf10 v_knn_batched's 183 s
+        // retime ate the budget); steal-evidenced samples stay eligible
         if (retimeBudget > 0 && (first <= retimeBudget || steal >= 1.0)) {
           val keep = persistedRddIds(spark)
           val t0 = System.nanoTime()
@@ -682,46 +524,11 @@ object Bench {
         resetSharedState(spark, keep)
       }
 
-    // multi-client serving throughput, AFTER the serial loop so its
-    // contention never perturbs per-query numbers; best of two rounds
-    // (the steal-burst robustification above — an 8-client section is
-    // maximally exposed to a host-contention wave)
-    val tput =
-      try {
-        val t1 = throughput(spark, sfDir)
-        val t2 = throughput(spark, sfDir)
-        Some(if (t2._4 > t1._4) t2 else t1)
-      }
-      catch { case e: Throwable => errors("throughput") = errMsg(e); None }
-
-    // the same requests through the micro-batching server (the serving
-    // architecture): per-request jobs above are the honest FLOOR, and
-    // the SWEEP shows how aggregate QPS scales with offered depth —
-    // group commit deepens its batches under load instead of
-    // saturating at one batch per scheduler round trip. One point per
-    // depth {8, 32, 96}; qps + per-request p99 each.
-    val tputSweep: Seq[(Int, Int, Double, Double, Double)] =
-      Seq(8, 32, 96).flatMap { c =>
-        try Some(throughputBatched(spark, sfDir, clients = c))
-        catch { case e: Throwable =>
-          errors(s"throughput_sweep:$c") = errMsg(e); None }
-      }
-    // the 32-client point doubles as the stable throughput_batched
-    // block earlier rounds' artifacts carry
-    val tputBatched = tputSweep.find(_._1 == 32)
-
-    // the write-path sweep beside the search sweep (r11 verdict #8):
-    // group-commit depth vs insert latency, per decade
-    val insSweep: Seq[InsertPoint] =
-      try insertSweep(spark, sfDir)
-      catch { case e: Throwable =>
-        errors("insert_sweep") = errMsg(e); Seq.empty }
-
-    // serving-latency percentiles (client_bench.cpp:153-159 analog):
-    // mixed concurrent search+insert per-request latency distribution
-    val lat =
-      try Some(latencyBench(spark, sfDir))
-      catch { case e: Throwable => errors("latency") = errMsg(e); None }
+    // the checked serving sweep, AFTER the serial loop so its
+    // contention never perturbs per-query numbers
+    val serve =
+      try serveSweep(spark, sfDir, ServePoints, errors)
+      catch { case e: Throwable => errors("serve") = errMsg(e); Nil }
 
     // distance microbenches: scan throughput (kernel inside a real
     // plan — row decode included) AND kernel-only primitive-array
@@ -744,65 +551,31 @@ object Bench {
     // line of output — the exact failure mode the capture fix closed
     spark.stop()
 
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
-    val qs = results.map { case (k, v) => jstr(k) + ":" + v }
-      .mkString("{", ",", "}")
-    val errs = errors.map { case (k, v) => jstr(k) + ":" + jstr(v) }
-      .mkString("{", ",", "}")
-    val total = math.rint(results.map(_._2).filter(_ >= 0).sum * 1000) / 1000
-    val tputJson = tput.map { case (c, n, sec, qps) =>
-      s"""{"clients":$c,"searches":$n,"elapsed_sec":$sec,"qps":$qps}"""
-    }.getOrElse("null")
-    def sweepPointJson(p: (Int, Int, Double, Double, Double)): String = {
-      val (c, n, sec, qps, p99) = p
-      s"""{"clients":$c,"searches":$n,"elapsed_sec":$sec,"qps":$qps,"p99_ms":$p99}"""
-    }
-    val tputBatchedJson = tputBatched.map(sweepPointJson).getOrElse("null")
-    val tputSweepJson = tputSweep.map(sweepPointJson)
+    val errs = obj(errors.map { case (k, v) => k -> jstr(v) })
+    val total = r3(results.map(_._2).filter(_ >= 0).sum)
+    // the headline's serving fields: the resident points' search side
+    val resident = serve.filter(_.route == "resident")
+    def tputPoint(p: ServePoint, more: (String, Any)*) = obj(Seq("clients" -> p.depth,
+      "searches" -> p.search.n, "elapsed_sec" -> p.sec, "qps" -> p.search.qps) ++ more)
+    val tputJson = resident.lastOption.fold("null")(tputPoint(_))
+    val tputSweepJson = resident.map(p => tputPoint(p, "p99_ms" -> p.search.p99Ms))
       .mkString("[", ",", "]")
-    val insSweepJson = insSweep.map { p =>
-      s"""{"clients":${p.clients},"inserts":${p.inserts},""" +
-        s""""elapsed_sec":${p.sec},"qps":${p.qps},"p99_ms":${p.p99Ms},""" +
-        s""""batches":${p.batches},"queue_wait_ms_mean":${p.queueWaitMsMean},""" +
-        s""""commit_ms_mean":${p.commitMsMean}}"""
-    }.mkString("[", ",", "]")
-    val distJson = dist.map { case (k, v) => jstr(k) + ":" + v }
-      .mkString("{", ",", "}")
-    val latJson = lat.map(_.map { case (kind, m) =>
-      jstr(kind) + ":" + m.map { case (k, v) => jstr(k) + ":" + v }
-        .mkString("{", ",", "}")
-    }.mkString("{", ",", "}")).getOrElse("null")
-    val retimesJson = retimes.map { case (k, (a, b)) =>
-      jstr(k) + s":[$a,$b]"
-    }.mkString("{", ",", "}")
+    val retimesJson = obj(retimes.map { case (k, (a, b)) => k -> s"[$a,$b]" })
     val stealSec = math.rint((stealTicks() - runSteal0) / 100.0 * 10) / 10
     val skippedJson = skipped.toSeq.sorted.map(jstr).mkString("[", ",", "]")
-    val probesJson = probeTimes.map { case (k, v) => jstr(k) + ":" + v }
-      .mkString("{", ",", "}")
-    val detail = s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"timing":"min of up to 2 runs for contaminated samples (>2s or steal observed)","steal_sec":$stealSec,"skipped":$skippedJson,"probes":$probesJson,"retimes":$retimesJson,"queries":$qs,"errors":$errs,"throughput":$tputJson,"throughput_batched":$tputBatchedJson,"throughput_sweep":$tputSweepJson,"insert_sweep":$insSweepJson,"latency":$latJson,"distance":$distJson,"sf":"$sfDir"}"""
+    val detail = s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"timing":"min of up to 2 runs for contaminated samples (>2s or steal observed)","steal_sec":$stealSec,"skipped":$skippedJson,"probes":${obj(probeTimes)},"retimes":$retimesJson,"queries":${obj(results)},"errors":$errs,"throughput":$tputJson,"throughput_sweep":$tputSweepJson,"serve":${serve.map(_.json).mkString("[", ",", "]")},"distance":${obj(dist)},"sf":"$sfDir"}"""
     // The machine-readable artifact: the COMPLETE result object as one
-    // JSON file. Five rounds of stdout-only emission parsed as null —
-    // sbt appends "[success] Total time: …" after the last println, so
-    // a tail-of-output capture never ends on the JSON line. The file
-    // has no such failure mode.
+    // JSON file, which no trailing sbt output can displace.
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get("bench_out.json"), detail + "\n")
     // Full per-query detail for humans reading the whole log. This line
     // exceeds the harness's bounded tail capture once the inventory
     // passed ~80 queries, so it must NOT be the final line.
     println(detail)
-    // Compact headline line LAST, kept under a hard byte budget so it
-    // always lands *intact* inside a tail-of-output capture window:
-    // total + error COUNT + a bounded head of error names + the slowest
-    // successful queries that fit the budget. Full error messages live
-    // only in the detail line — embedding them here would blow the
-    // budget exactly when queries fail, and errored queries carry no
-    // timing signal (-1), so they never spend query-entry bytes.
+    // Compact headline line LAST, under a hard byte budget so it lands
+    // intact in a tail-of-output capture: total, error COUNT, a bounded
+    // head of error names, and the slowest successful queries that fit.
+    // Full error messages live only in the detail line.
     val budget = 1500
     val errHead = errors.keys.take(5).map(jstr).mkString("[", ",", "]")
     val sfx = s""","n_errors":${errors.size},"n_skipped":${skipped.size},"err_head":$errHead,"throughput":$tputJson,"throughput_sweep":$tputSweepJson,"sf":"$sfDir"}"""

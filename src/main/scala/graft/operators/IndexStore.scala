@@ -89,6 +89,21 @@ object IndexStore {
       dir
     }
 
+  /** A file-for-file copy of the [[ivf]] store (k = 16) of `sfDir` in a
+    * new temp dir, for callers that write into a store (inserts,
+    * compaction) while the shared one stays compaction-steady. The
+    * caller deletes it. */
+  def scratchIvf(spark: SparkSession, sfDir: String): String = {
+    import java.nio.file.Files
+    val src = new File(ivf(spark, sfDir, k = 16)).toPath
+    val dst = Files.createTempDirectory("graft-scratch-ivf")
+    scala.util.Using.resource(Files.walk(src))(_.forEach { p =>
+      val to = dst.resolve(src.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(to) else Files.copy(p, to)
+    })
+    dst.toString
+  }
+
   /** Ensure the PQ index (codebooks + per-vector codes) exists on disk. */
   def pq(spark: SparkSession, sfDir: String, dim: Int = 64,
       numSub: Int = 8, codebookSize: Int = 16): String =

@@ -376,6 +376,15 @@ object IvfDeltaIngest {
       .parquet(s"$indexDir/delta_log"))
   }
 
+  /** The highest seq the store holds in `assignments` (compaction keeps
+    * each row's) and in the write buffer; 0 where neither has one. */
+  private[streaming] def maxSeq(spark: SparkSession, indexDir: String): Long =
+    (spark.read.option("mergeSchema", "true").parquet(s"$indexDir/assignments") +:
+        deltaRaw(spark, indexDir).toSeq)
+      .filter(_.columns.contains("seq"))
+      .map(_.agg(coalesce(max(col("seq")), lit(0L))).head().getLong(0))
+      .foldLeft(0L)(math.max)
+
   /** Latest row per vec_id from the delta log (the write buffer), or
     * None if no deltas have landed since the last compaction. Bounded by
     * the append volume between compactions — broadcastable. */

@@ -309,8 +309,11 @@ object IngestServer {
   * write fails fails its requests and takes no sequence number: the
   * next round commits under the same one, so acknowledged seqs stay
   * dense. A request whose metadata does not fit the store fails alone.
-  * The first round reads the centroids and the store's metadata
-  * schema (Spark jobs); every later round starts none. */
+  * The first round commits at `startSeq` or one above the highest seq
+  * the store already holds, whichever is larger, so a writer reopened
+  * on a used store never commits under an older row's seq. It reads
+  * that seq, the centroids and the store's metadata schema (Spark
+  * jobs); every later round starts none. */
 final class IngestServer private[graft] (spark: SparkSession,
     indexDir: String, startSeq: Long,
     step: IvfDeltaIngest.CommitStep => Unit) extends AutoCloseable {
@@ -319,17 +322,20 @@ final class IngestServer private[graft] (spark: SparkSession,
   def this(spark: SparkSession, indexDir: String, startSeq: Long) =
     this(spark, indexDir, startSeq, _ => ())
 
+  /** A writer whose first round commits just above the store's seqs. */
+  def this(spark: SparkSession, indexDir: String) = this(spark, indexDir, 1L)
+
   private final case class Req(rows: Seq[Record], p: Promise[Long],
       enq: Long = System.nanoTime())
   private val queue = new LinkedBlockingQueue[Req]()
-  // the next round's seq; read and advanced by the dispatcher thread only
-  private var nextSeq = startSeq
+  // rounds committed; read and advanced by the dispatcher thread only
+  private var committed = 0L
   // split accounting (cumulative, lifetime of the server): where an
   // insert request's wall goes — QUEUE WAIT (enqueue → its batch's
   // dispatch, the group-commit formation time) vs the COMMIT (the
   // driver-side IVF assignment + the one delta-log file write). p99
   // growth under depth attributes to whichever leg grows; the bench's
-  // insert_sweep records both per sweep point.
+  // serve sweep records both per point.
   private val waitNs = new AtomicLong(0)
   private val commitNs = new AtomicLong(0)
   private val nBatchesDone = new AtomicLong(0)
@@ -364,6 +370,8 @@ final class IngestServer private[graft] (spark: SparkSession,
   }
 
   // lazy so construction stays job-free
+  private lazy val firstSeq =
+    math.max(startSeq, IvfDeltaIngest.maxSeq(spark, indexDir) + 1)
   private lazy val centroids = Serving.centroids(spark, indexDir)
   private lazy val layout = IvfDeltaIngest.deltaLayout(spark,
     IvfDeltaIngest.storeMeta(spark, indexDir))
@@ -373,7 +381,7 @@ final class IngestServer private[graft] (spark: SparkSession,
       val t0 = System.nanoTime()
       reqs.foreach(r => waitNs.addAndGet(t0 - r.enq))
       nReqsDone.addAndGet(reqs.size)
-      val seq = nextSeq
+      val seq = firstSeq + committed
       val parsed = reqs.map(r => r -> Try(r.rows.map(rec =>
         (rec.vecId, rec.embedding.toArray, layout.metaValues(rec.meta)))))
       parsed.foreach { case (r, Failure(e)) => r.p.failure(e); case _ => }
@@ -384,7 +392,7 @@ final class IngestServer private[graft] (spark: SparkSession,
         val resolved = IvfDeltaIngest.resolveBatchLocal(ok.flatMap(_._2),
           layout.meta.map(_.dataType), centroids, seq)
         IvfDeltaIngest.commitLocal(indexDir, layout, resolved, step)
-        nextSeq = seq + 1 // only a committed round consumes its seq
+        committed += 1 // only a committed round consumes its seq
         commitNs.addAndGet(System.nanoTime() - t0)
         nBatchesDone.incrementAndGet()
         ok.foreach(_._1.p.success(seq))

@@ -34,16 +34,6 @@ object PlantedClusters {
 
   /** A scratch copy of the `IndexStore.ivf` store (k = 16) of the sf
     * dir `fixture`, which specs that write into a store can dirty. */
-  def scratchIvf(fixture: String): String = {
-    val spark = TestSpark.spark
-    val src = graft.operators.IndexStore.ivf(spark, fixture, k = 16)
-    val dst = java.nio.file.Files.createTempDirectory("graft-scratch-ivf")
-      .toString
-    spark.read.parquet(s"$src/centroids")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dst/centroids")
-    spark.read.parquet(s"$src/assignments")
-      .write.partitionBy("cluster_id").mode("overwrite")
-      .parquet(s"$dst/assignments")
-    dst
-  }
+  def scratchIvf(fixture: String): String =
+    graft.operators.IndexStore.scratchIvf(TestSpark.spark, fixture)
 }

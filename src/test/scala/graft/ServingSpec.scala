@@ -318,6 +318,45 @@ class ServingSpec extends SparkSpec {
     assert(hits.nonEmpty && !hits.exists(_._1 == 6000L))
   }
 
+  test("a writer reopened with an old startSeq commits above the store's seqs, " +
+      "before and after compaction, on both routes") {
+    val (k, nprobe) = (10, 2)
+    val rnd = new scala.util.Random(17)
+    // the id at rank 1, distance 0 for its own vector, and both routes
+    // equal to searchPruned
+    def check(dir: String, stage: String, rows: Seq[(Long, Seq[Float])]): Unit = {
+      val qs = rows.map(_._2.toArray)
+      val want = prunedByVec(dir, qs, k, nprobe)
+      rows.zip(want).foreach { case ((id, _), hits) =>
+        assert(hits.head._1 == id && hits.head._3 == 0L, s"$stage: $id at rank 1, distance 0")
+      }
+      val resident = new SearchServer(spark, dir, k, nprobe)
+      val job = jobRouteServer(dir, k, nprobe)
+      try Seq("resident" -> resident, "job" -> job).foreach { case (route, srv) =>
+        assert(qs.map(srv.search).map(f => key(Await.result(f, await))) == want,
+          s"$stage: $route route differs from searchPruned")
+      } finally { resident.close(); job.close() }
+    }
+    Seq(false, true).foreach { compactFirst =>
+      val dir = scratchStore()
+      val id = if (compactFirst) 5000L else 6000L
+      // a first writer commits seqs 1 and 2, the second holding `id`
+      val first = new IngestServer(spark, dir, startSeq = 1L)
+      try assert(Seq(randomRows(rnd, Seq(id + 1)), randomRows(rnd, Seq(id)))
+        .map(rows => Await.result(first.insert(rows), await)) == Seq(1L, 2L))
+      finally first.close()
+      if (compactFirst) IvfDeltaIngest.compact(spark, dir) // keeps seq 2 in assignments
+      val stage = if (compactFirst) "after a compaction" else "buffered"
+      val again = randomRows(rnd, Seq(id))
+      val reopened = new IngestServer(spark, dir, startSeq = 1L)
+      try assert(Await.result(reopened.insert(again), await) == 3L, stage)
+      finally reopened.close()
+      check(dir, s"$stage, re-inserted", again)
+      IvfDeltaIngest.compact(spark, dir)
+      check(dir, s"$stage, compacted", again)
+    }
+  }
+
   test("a file the snapshot cannot reproduce sends the batch to the job route") {
     val dir = scratchStore()
     val server = new SearchServer(spark, dir, k = 10, nprobe = 2)
